@@ -57,7 +57,8 @@ object Bench {
     val recorded = new java.util.concurrent.ConcurrentHashMap[String, Seq[Double]]()
     val order = collection.mutable.ArrayBuffer[String]()
     val calibTimes = collection.mutable.ArrayBuffer[Double]()
-    @volatile var finalLinePrinted = false
+    var finalLinePrinted = false // guarded by printLock
+    val printLock = new Object
     @volatile var escalateFlag = false
     @volatile var escalationSkippedBudget = false
 
@@ -77,12 +78,17 @@ object Bench {
       val effReps = if (escalateFlag) reps + 1 else reps
       s"""{"metric":"total","value":${r3(mins.sum)},"unit":"sec","n_queries":${names.size},"reps":$effReps,"reps_is_attempted_ceiling":true,"failures":$failures,"spread_total":${r3(spreads.sum)},"escalated":$escalateFlag$skipPart$calibShort$partialPart,"sf":"$sfDir"}"""
     }
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+    // The final print and the shutdown hook's partial print share one lock
+    // and the flag is set inside it, so a kill can never add a second line.
+    def printSummaryOnce(partial: Boolean): Unit = printLock.synchronized {
       if (!finalLinePrinted) {
-        println(summaryLine(partial = true))
+        println(summaryLine(partial))
         System.out.flush()
+        finalLinePrinted = true
       }
-    }))
+    }
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      printSummaryOnce(partial = true)))
 
     def calibRep(): Unit = {
       val t0 = System.nanoTime()
@@ -192,8 +198,6 @@ object Bench {
     System.err.println(detail)
     spark.stop()
     // SHORT final stdout line only — must survive the driver's ~2 KB tail cap
-    println(summaryLine(partial = false))
-    System.out.flush()
-    finalLinePrinted = true
+    printSummaryOnce(partial = false)
   }
 }

@@ -177,7 +177,6 @@ object Survival {
     * one generator, no drift. */
   private def coxUExprAt(su: String): String =
     s"(CAST(o1 AS DOUBLE) - CAST($su AS DOUBLE) / 1000000000.0)"
-  private def coxUExpr: String = coxUExprAt("su")
   private def coxBetaUpdExpr(su: String = "su", si: String = "si",
                              b: String = "beta"): String =
     s"CASE WHEN $si > 0 THEN $b + ${coxUExprAt(su)} " +

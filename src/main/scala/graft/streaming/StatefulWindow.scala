@@ -2,24 +2,21 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming window scoring (closes the documented T3 gap: plain
   * `foreachBatch` loses rolling-window context at micro-batch boundaries).
   *
-  * `flatMapGroupsWithState` keyed on the series carries the trailing L−1
-  * rows across batches, so every streamed row is scored over exactly the
+  * A [[KeyedFold]] keyed on the series carries the trailing L−1 rows
+  * across batches, so every streamed row is scored over exactly the
   * same trailing-L window as batch mode ([[graft.ml.WindowZScoreDetector]]):
   * score = Σ_f z_f², z = (x − mean)/max(stddev_samp, guard), warm-up rows
   * (fewer than L trailing rows, including across batch boundaries) are
   * never flagged.
   *
   * State per key is L−1 rows × F doubles — constant-size, spill-free at any
-  * stream length; keys scale horizontally. Within a batch, group rows are
-  * sorted by event time (micro-batch delivery is unordered); ACROSS batches
-  * rows must arrive in event-time order per key (true for replayed/landing
-  * time-series; for out-of-order sources add a watermark-delayed sorter
-  * upstream).
+  * stream length; keys scale horizontally. Rows are ordered by event time
+  * under the [[KeyedFold]] arrival contract (for out-of-order sources add
+  * a watermark-delayed sorter upstream).
   */
 object StatefulWindow {
 
@@ -66,28 +63,17 @@ object StatefulWindow {
     * Input needs `seriesCol`, timestamp `tsCol`, and the feature columns;
     * output: (series, tsMicros, anomaly_score, is_anomaly). */
   def score(stream: DataFrame, features: Seq[String], seriesCol: String,
-            tsCol: String, L: Int, threshold: Double): Dataset[Scored] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    stream
-      .select(col(seriesCol).cast("string").as("series"),
+            tsCol: String, L: Int, threshold: Double): Dataset[Scored] =
+    KeyedFold.keyedSortedFold(
+      stream.select(col(seriesCol).cast("string").as("series"),
         (col(tsCol).cast("double") * 1000000.0).cast("long").as("tsMicros"),
-        array(features.map(f => col(f).cast("double")): _*).as("features"))
-      .as[InRow]
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout())
-      { (key: String, rows: Iterator[InRow], state: GroupState[WinState]) =>
-        val carried = state.getOption.map(_.rows).getOrElse(Seq.empty)
-        val window = collection.mutable.ArrayBuffer[(Long, Seq[Double])](carried: _*)
-        val out = rows.toSeq.sortBy(_.tsMicros).map { r =>
-          window += ((r.tsMicros, r.features))
-          if (window.length > L) window.remove(0, window.length - L)
-          val sc =
-            if (window.length == L) Some(z2(window.map(_._2).toSeq)) else None
-          Scored(key, r.tsMicros, sc, sc.exists(_ > threshold))
-        }
-        state.update(WinState(window.takeRight(L - 1).toSeq))
-        out.iterator
-      }
-  }
+        array(features.map(f => col(f).cast("double")): _*).as("features")),
+      KeyedFold[String, InRow, WinState, Scored](_.series, WinState(Seq.empty),
+        Ordering.by((r: InRow) => r.tsMicros), (key, st, r, emit) => {
+          val window =
+            (st.rows.toVector :+ ((r.tsMicros, r.features))).takeRight(L)
+          val sc = if (window.length == L) Some(z2(window.map(_._2))) else None
+          emit(Scored(key, r.tsMicros, sc, sc.exists(_ > threshold)))
+          Some(WinState(window.takeRight(L - 1)))
+        }))
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.streaming.KeyedFold.keyedSortedFold
 import graft.inject.{AnomalySetting, Injector}
 import graft.ml.FittedDetector
 
@@ -209,42 +210,27 @@ object StreamJob {
     * query embeds ([[graft.queries.Stats.SprtL1e6]]), one decision row
     * emitted at the first threshold crossing and never again — exactly
     * a55's `crossed` branch (the batch 'continue' rows are simply the
-    * keys that have not emitted yet). Same per-key arrival-order
-    * contract as [[ewmaAlarmStream]]; in-batch disorder is sorted.
-    * Input must carry (user_id, event_id, es, x). */
-  def sprtStream(stream: DataFrame): org.apache.spark.sql.Dataset[SprtOut] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    // serializable locals (the ewmaAlarmStream rule)
+    * keys that have not emitted yet). Per-user order (es, event_id)
+    * under the [[KeyedFold]] arrival contract. Input must carry
+    * (user_id, event_id, es, x). */
+  def sprtStream(stream: DataFrame): Dataset[SprtOut] =
+    keyedSortedFold(stream, sprtFold)
+
+  private[streaming] def sprtFold = {
     val l1 = graft.queries.Stats.SprtL1e6
     val l0 = graft.queries.Stats.SprtL0e6
     val a = graft.queries.Stats.SprtAe6
-    stream
-      .select(col("user_id").cast("long").as("user_id"),
-        col("event_id").cast("long").as("event_id"),
-        col("es").cast("long").as("es"), col("x").cast("long").as("x"))
-      .as[SprtIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[SprtIn],
-         state: org.apache.spark.sql.streaming.GroupState[SprtState]) =>
-          var st = state.getOption.getOrElse(SprtState(0L, 0L, false))
-          val out = collection.mutable.ArrayBuffer[SprtOut]()
-          rows.toSeq.sortBy(r => (r.es, r.event_id)).foreach { r =>
-            val rn = st.rn + 1
-            val k = st.k + r.x
-            val llr = k * l1 + (rn - k) * l0
-            val cross = !st.decided && (llr >= a || llr <= -a)
-            if (cross)
-              out += SprtOut(key,
-                if (llr >= a) "accept_h1" else "accept_h0", rn, llr)
-            st = SprtState(rn, k, st.decided || cross)
-          }
-          state.update(st)
-          out.iterator
-      }
+    KeyedFold[Long, SprtIn, SprtState, SprtOut](_.user_id,
+      SprtState(0L, 0L, false), Ordering.by((r: SprtIn) => (r.es, r.event_id)),
+      (key, st, r, emit) => {
+        val rn = st.rn + 1
+        val k = st.k + r.x
+        val llr = k * l1 + (rn - k) * l0
+        val cross = !st.decided && (llr >= a || llr <= -a)
+        if (cross) emit(SprtOut(key,
+          if (llr >= a) "accept_h1" else "accept_h0", rn, llr))
+        Some(SprtState(rn, k, st.decided || cross))
+      })
   }
 
   case class HoltIn(event_type: String, hr: Long, v: Long)
@@ -266,45 +252,32 @@ object StreamJob {
     * consumers an extra row whose rmse reconstruction is sqrt(0/0) —
     * the state still initializes on bucket 1, it just stays silent.
     * The live h-step forecast is level + h·trend off any emission.
-    * Same per-key arrival-order contract as [[ewmaAlarmStream]] (order
-    * by hr); in-batch disorder is sorted. */
-  def holtStream(stream: DataFrame): org.apache.spark.sql.Dataset[HoltOut] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    // serializable locals (the ewmaAlarmStream rule)
+    * Per-key order hr under the [[KeyedFold]] arrival contract. */
+  def holtStream(stream: DataFrame): Dataset[HoltOut] =
+    keyedSortedFold(stream, holtFold)
+
+  private[streaming] def holtFold = {
     val alpha = graft.queries.Stats2.HoltAlpha
     val beta = graft.queries.Stats2.HoltBeta
-    stream
-      .select(col("event_type").cast("string").as("event_type"),
-        col("hr").cast("long").as("hr"), col("v").cast("long").as("v"))
-      .as[HoltIn]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[HoltIn],
-         state: org.apache.spark.sql.streaming.GroupState[HoltState]) =>
-          var st = state.getOption.getOrElse(HoltState(0L, 0.0, 0.0, 0.0))
-          val out = collection.mutable.ArrayBuffer[HoltOut]()
-          rows.toSeq.sortBy(_.hr).foreach { r =>
-            val x = r.v.toDouble
-            st =
-              if (st.n == 0L) HoltState(1L, x, 0.0, 0.0)
-              else {
-                // a61's fold step, same association: l' = α·x + (1−α)(l+b)
-                val nl = alpha * x + (1.0 - alpha) * (st.l + st.b)
-                val nb = beta * (alpha * x + (1.0 - alpha) *
-                  (st.l + st.b) - st.l) + (1.0 - beta) * st.b
-                val ns = st.s +
-                  (x - (st.l + st.b)) * (x - (st.l + st.b))
-                HoltState(st.n + 1, nl, nb, ns)
-              }
-            // n = 1 is state-init only — no trend yet, rmse undefined
-            if (st.n >= 2L) out += HoltOut(key, st.n, st.l, st.b, st.s)
+    KeyedFold[String, HoltIn, HoltState, HoltOut](_.event_type,
+      HoltState(0L, 0.0, 0.0, 0.0), Ordering.by((r: HoltIn) => r.hr),
+      (key, st, r, emit) => {
+        val x = r.v.toDouble
+        val next =
+          if (st.n == 0L) HoltState(1L, x, 0.0, 0.0)
+          else {
+            // a61's fold step, same association: l' = α·x + (1−α)(l+b)
+            val nl = alpha * x + (1.0 - alpha) * (st.l + st.b)
+            val nb = beta * (alpha * x + (1.0 - alpha) *
+              (st.l + st.b) - st.l) + (1.0 - beta) * st.b
+            val ns = st.s +
+              (x - (st.l + st.b)) * (x - (st.l + st.b))
+            HoltState(st.n + 1, nl, nb, ns)
           }
-          state.update(st)
-          out.iterator
-      }
+        // n = 1 is state-init only — no trend yet, rmse undefined
+        if (next.n >= 2L) emit(HoltOut(key, next.n, next.l, next.b, next.s))
+        Some(next)
+      })
   }
 
   case class PhIn(user_id: Long, event_id: Long, es: Long, q: Long)
@@ -323,43 +296,28 @@ object StreamJob {
     * so the statistic is bit-identical to a65's window expression (its
     * SCALE_BOUNDS row carries the overflow bound). One 'drift' row per
     * user at the first m − min(m) > λ crossing, never re-emitted —
-    * exactly a65's `crossed` branch. Same per-key arrival-order
-    * contract as [[ewmaAlarmStream]]; in-batch disorder is sorted.
-    * Input must carry (user_id, event_id, es, q) — build it with the
-    * SHARED [[graft.queries.Stats2.phEvents]]. */
-  def pageHinkleyStream(stream: DataFrame): org.apache.spark.sql.Dataset[PhOut] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    // serializable locals (the ewmaAlarmStream rule)
+    * exactly a65's `crossed` branch. Per-user order (es, event_id)
+    * under the [[KeyedFold]] arrival contract. Input must carry
+    * (user_id, event_id, es, q) — build it with the SHARED
+    * [[graft.queries.Stats2.phEvents]]. */
+  def pageHinkleyStream(stream: DataFrame): Dataset[PhOut] =
+    keyedSortedFold(stream, pageHinkleyFold)
+
+  private[streaming] def pageHinkleyFold = {
     val delta = graft.queries.Stats2.PhDeltaE9
     val lambda = graft.queries.Stats2.PhLambdaE9
-    stream
-      .select(col("user_id").cast("long").as("user_id"),
-        col("event_id").cast("long").as("event_id"),
-        col("es").cast("long").as("es"), col("q").cast("long").as("q"))
-      .as[PhIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[PhIn],
-         state: org.apache.spark.sql.streaming.GroupState[PhState]) =>
-          var st = state.getOption
-            .getOrElse(PhState(0L, 0L, 0L, Long.MaxValue, false))
-          val out = collection.mutable.ArrayBuffer[PhOut]()
-          rows.toSeq.sortBy(r => (r.es, r.event_id)).foreach { r =>
-            val rn = st.rn + 1
-            val s = st.s + r.q
-            val m = st.m + (r.q * 1000000L - (s * 1000000L) / rn - delta)
-            val mMin = math.min(st.mMin, m)
-            val ph = m - mMin
-            val cross = !st.decided && ph > lambda
-            if (cross) out += PhOut(key, "drift", rn, ph)
-            st = PhState(rn, s, m, mMin, st.decided || cross)
-          }
-          state.update(st)
-          out.iterator
-      }
+    KeyedFold[Long, PhIn, PhState, PhOut](_.user_id,
+      PhState(0L, 0L, 0L, Long.MaxValue, false),
+      Ordering.by((r: PhIn) => (r.es, r.event_id)), (key, st, r, emit) => {
+        val rn = st.rn + 1
+        val s = st.s + r.q
+        val m = st.m + (r.q * 1000000L - (s * 1000000L) / rn - delta)
+        val mMin = math.min(st.mMin, m)
+        val ph = m - mMin
+        val cross = !st.decided && ph > lambda
+        if (cross) emit(PhOut(key, "drift", rn, ph))
+        Some(PhState(rn, s, m, mMin, st.decided || cross))
+      })
   }
 
   case class HwIn(event_type: String, hr: Long, v: Long)
@@ -384,66 +342,53 @@ object StreamJob {
     * everything a67's report needs: the seasonal amplitude and the
     * t+3 seasonal slot ride along so consumers rebuild the full report
     * (level + h·trend + s) without holding the 24-slot state. */
-  def holtWintersStream(stream: DataFrame): org.apache.spark.sql.Dataset[HwOut] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    // serializable locals (the ewmaAlarmStream rule)
+  def holtWintersStream(stream: DataFrame): Dataset[HwOut] =
+    keyedSortedFold(stream, holtWintersFold)
+
+  private[streaming] def holtWintersFold = {
     val al = graft.queries.Stats2.HoltAlpha
     val be = graft.queries.Stats2.HoltBeta
     val ga = graft.queries.Stats2.HwGamma
     val m = graft.queries.Stats2.HwM
-    stream
-      .select(col("event_type").cast("string").as("event_type"),
-        col("hr").cast("long").as("hr"), col("v").cast("long").as("v"))
-      .as[HwIn]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[HwIn],
-         state: org.apache.spark.sql.streaming.GroupState[HwState]) =>
-          var st = state.getOption
-            .getOrElse(HwState(0L, Vector.empty, 0.0, 0.0, 0.0, Vector.empty))
-          val out = collection.mutable.ArrayBuffer[HwOut]()
-          // a67's fold step, same association; j0 = 0-based seasonal slot
-          def step(cur: HwState, x: Double): HwState = {
-            val j0 = ((cur.n.toInt) % m) // slot of bucket t = n+1: (t−1) % m
-            val sj = cur.sea(j0)
-            val nl = al * (x - sj) + (1.0 - al) * (cur.l + cur.b)
-            val nb = be * (nl - cur.l) + (1.0 - be) * cur.b
-            val ns = ga * ((x - cur.l) - cur.b) + (1.0 - ga) * sj
-            val err = x - ((cur.l + cur.b) + sj)
-            HwState(cur.n + 1, cur.buf, nl, nb,
-              cur.sse + err * err, cur.sea.updated(j0, ns))
+    // a67's fold step, same association; j0 = 0-based seasonal slot
+    val update = (cur: HwState, x: Double) => {
+      val j0 = ((cur.n.toInt) % m) // slot of bucket t = n+1: (t−1) % m
+      val sj = cur.sea(j0)
+      val nl = al * (x - sj) + (1.0 - al) * (cur.l + cur.b)
+      val nb = be * (nl - cur.l) + (1.0 - be) * cur.b
+      val ns = ga * ((x - cur.l) - cur.b) + (1.0 - ga) * sj
+      val err = x - ((cur.l + cur.b) + sj)
+      HwState(cur.n + 1, cur.buf, nl, nb,
+        cur.sse + err * err, cur.sea.updated(j0, ns))
+    }
+    KeyedFold[String, HwIn, HwState, HwOut](_.event_type,
+      HwState(0L, Vector.empty, 0.0, 0.0, 0.0, Vector.empty),
+      Ordering.by((r: HwIn) => r.hr), (key, st, r, emit) => {
+        val x = r.v.toDouble
+        if (st.sea.isEmpty) {
+          // phase 1: buffer until the two init seasons are closed
+          val buf = st.buf :+ x
+          if (buf.length < 2 * m) Some(HwState(buf.length.toLong, buf,
+            0.0, 0.0, 0.0, Vector.empty))
+          else {
+            // a67's init: fold-left sums seeded 0.0 (the batch shape)
+            val l0 = buf.take(m).foldLeft(0.0)(_ + _) / m.toDouble
+            val m2 = buf.slice(m, 2 * m).foldLeft(0.0)(_ + _) / m.toDouble
+            val b0 = (m2 - l0) / m.toDouble
+            val init = HwState(m.toLong, Vector.empty, l0, b0, 0.0,
+              buf.take(m).map(_ - l0).toVector)
+            // replay the second init season through the fold; n = 2m,
+            // emissions start with the NEXT bucket
+            Some(buf.slice(m, 2 * m).foldLeft(init)(update))
           }
-          rows.toSeq.sortBy(_.hr).foreach { r =>
-            val x = r.v.toDouble
-            if (st.sea.isEmpty) {
-              // phase 1: buffer until the two init seasons are closed
-              val buf = st.buf :+ x
-              if (buf.length < 2 * m) st = HwState(buf.length.toLong, buf,
-                0.0, 0.0, 0.0, Vector.empty)
-              else {
-                // a67's init: fold-left sums seeded 0.0 (the batch shape)
-                val l0 = buf.take(m).foldLeft(0.0)(_ + _) / m.toDouble
-                val m2 = buf.slice(m, 2 * m).foldLeft(0.0)(_ + _) / m.toDouble
-                val b0 = (m2 - l0) / m.toDouble
-                var cur = HwState(m.toLong, Vector.empty, l0, b0, 0.0,
-                  buf.take(m).map(_ - l0).toVector)
-                // replay the second init season through the fold
-                buf.slice(m, 2 * m).foreach(xr => cur = step(cur, xr))
-                st = cur // n = 2m; emissions start with the NEXT bucket
-              }
-            } else {
-              st = step(st, x)
-              out += HwOut(key, st.n, st.l, st.b, st.sse,
-                st.sea.max - st.sea.min,
-                st.sea(((st.n.toInt + 2) % m)))
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+        } else {
+          val next = update(st, x)
+          emit(HwOut(key, next.n, next.l, next.b, next.sse,
+            next.sea.max - next.sea.min,
+            next.sea(((next.n.toInt + 2) % m))))
+          Some(next)
+        }
+      })
   }
 
   case class CohortIn(user_id: Long, dd: Long)
@@ -460,36 +405,24 @@ object StreamJob {
     * the matrix with one counting agg: n_active(cd, age) = row count,
     * cohort_users(cd) = the age-0 count (every user's first emission is
     * age 0 by construction), retention = the same exact ppm ratio.
-    * Feed day-ordered per user (order by dd globally suffices — the
-    * ewmaAlarmStream contract); in-batch disorder is sorted. Build the
-    * input with the SHARED [[graft.queries.Stats2.cohortEvents]]. */
-  def cohortStream(stream: DataFrame): org.apache.spark.sql.Dataset[CohortOut] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    stream
-      .select(col("user_id").cast("long").as("user_id"),
-        col("dd").cast("long").as("dd"))
-      .as[CohortIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[CohortIn],
-         state: org.apache.spark.sql.streaming.GroupState[CohortState]) =>
-          var st = state.getOption.getOrElse(CohortState(-1L, Seq.empty))
-          val out = collection.mutable.ArrayBuffer[CohortOut]()
-          rows.toSeq.sortBy(_.dd).foreach { r =>
-            if (st.cd < 0L) st = CohortState(r.dd, Seq.empty)
-            val age = r.dd - st.cd
-            if (!st.seen.contains(age)) {
-              out += CohortOut(key, st.cd, age)
-              st = CohortState(st.cd, st.seen :+ age)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+    * Per-user order dd under the [[KeyedFold]] arrival contract (order
+    * by dd globally suffices). Build the input with the SHARED
+    * [[graft.queries.Stats2.cohortEvents]]. */
+  def cohortStream(stream: DataFrame): Dataset[CohortOut] =
+    keyedSortedFold(stream, cohortFold)
+
+  private[streaming] def cohortFold =
+    KeyedFold[Long, CohortIn, CohortState, CohortOut](_.user_id,
+      CohortState(-1L, Seq.empty), Ordering.by((r: CohortIn) => r.dd),
+      (key, prev, r, emit) => {
+        val st = if (prev.cd < 0L) CohortState(r.dd, Seq.empty) else prev
+        val age = r.dd - st.cd
+        if (st.seen.contains(age)) Some(st)
+        else {
+          emit(CohortOut(key, st.cd, age))
+          Some(CohortState(st.cd, st.seen :+ age))
+        }
+      })
 
   case class WeIn(event_type: String, hr: Long, v: Long,
                   mu: Double, sig: Double)
@@ -510,41 +443,26 @@ object StreamJob {
     * emitted (type, hr, rule) row is definitionally a batch violation
     * row, and rules only fire once their frame is FULL (the batch
     * t ≥ k guard). */
-  def weRulesStream(stream: DataFrame,
-                    calib: DataFrame): org.apache.spark.sql.Dataset[WeOut] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    stream.join(calib, Seq("event_type"))
-      .select(col("event_type"), col("hr").cast("long").as("hr"),
-        col("v").cast("long").as("v"), col("mu"), col("sig"))
-      .as[WeIn]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[WeIn],
-         state: org.apache.spark.sql.streaming.GroupState[WeState]) =>
-          var st = state.getOption.getOrElse(WeState(0L, Seq.empty))
-          val out = collection.mutable.ArrayBuffer[WeOut]()
-          rows.toSeq.sortBy(_.hr).foreach { r =>
-            val zz = (r.v.toDouble - r.mu) / r.sig
-            val t = st.t + 1
-            val ring = (st.ring :+ zz).takeRight(8)
-            def cnt(k: Int, p: Double => Boolean) =
-              ring.takeRight(k).count(p)
-            if (zz > 3.0 || zz < -3.0) out += WeOut(key, r.hr, "r1")
-            if (t >= 3 && (cnt(3, _ > 2.0) >= 2 || cnt(3, _ < -2.0) >= 2))
-              out += WeOut(key, r.hr, "r2")
-            if (t >= 5 && (cnt(5, _ > 1.0) >= 4 || cnt(5, _ < -1.0) >= 4))
-              out += WeOut(key, r.hr, "r3")
-            if (t >= 8 && (cnt(8, _ > 0.0) == 8 || cnt(8, _ < 0.0) == 8))
-              out += WeOut(key, r.hr, "r4")
-            st = WeState(t, ring)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+  def weRulesStream(stream: DataFrame, calib: DataFrame): Dataset[WeOut] =
+    keyedSortedFold(stream.join(calib, Seq("event_type")), weRulesFold)
+
+  private[streaming] def weRulesFold =
+    KeyedFold[String, WeIn, WeState, WeOut](_.event_type,
+      WeState(0L, Seq.empty), Ordering.by((r: WeIn) => r.hr),
+      (key, st, r, emit) => {
+        val zz = (r.v.toDouble - r.mu) / r.sig
+        val t = st.t + 1
+        val ring = (st.ring :+ zz).takeRight(8)
+        def cnt(k: Int, p: Double => Boolean) = ring.takeRight(k).count(p)
+        if (zz > 3.0 || zz < -3.0) emit(WeOut(key, r.hr, "r1"))
+        if (t >= 3 && (cnt(3, _ > 2.0) >= 2 || cnt(3, _ < -2.0) >= 2))
+          emit(WeOut(key, r.hr, "r2"))
+        if (t >= 5 && (cnt(5, _ > 1.0) >= 4 || cnt(5, _ < -1.0) >= 4))
+          emit(WeOut(key, r.hr, "r3"))
+        if (t >= 8 && (cnt(8, _ > 0.0) == 8 || cnt(8, _ < 0.0) == 8))
+          emit(WeOut(key, r.hr, "r4"))
+        Some(WeState(t, ring))
+      })
 
   case class SrmIn(user_id: Long)
   case class SrmOut(user_id: Long, grp: Int)
@@ -562,26 +480,18 @@ object StreamJob {
     * and the χ² = (n1−n0)²/n readout per trigger on that tiny frame —
     * counting users needs the dedup, and streaming COUNT DISTINCT
     * isn't incremental; first-touch emission is. */
-  def srmStream(stream: DataFrame): org.apache.spark.sql.Dataset[SrmOut] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val seed = graft.queries.Stats3.AbSeed // serializable local
-    stream
-      .select(col("user_id").cast("long").as("user_id"))
-      .as[SrmIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[SrmIn],
-         state: org.apache.spark.sql.streaming.GroupState[Boolean]) =>
-          if (state.exists || rows.isEmpty) Iterator.empty
-          else {
-            state.update(true)
-            Iterator.single(SrmOut(key,
-              if (graft.functions.Det.fracHost(key, seed) < 0.5) 1 else 0))
-          }
-      }
+  def srmStream(stream: DataFrame): Dataset[SrmOut] =
+    keyedSortedFold(stream, srmFold)
+
+  private[streaming] def srmFold = {
+    val seed = graft.queries.Stats3.AbSeed
+    // a key's rows are all equal (the user id alone), so any order works
+    KeyedFold[Long, SrmIn, Boolean, SrmOut](_.user_id, false,
+      Ordering.by((r: SrmIn) => r.user_id), (key, seen, _, emit) => {
+        if (!seen) emit(SrmOut(key,
+          if (graft.functions.Det.fracHost(key, seed) < 0.5) 1 else 0))
+        Some(true)
+      })
   }
 
   case class TtcIn(user_id: Long, event_type: String, es: Long)
@@ -594,46 +504,28 @@ object StreamJob {
     * per user ON the purchase that closes the pair. State is two facts
     * per user (first-signup epoch + a done bit — the srmStream
     * first-touch class, bounded by distinct users, NOT stream length).
-    * Semantics ≡ batch under the family's per-key arrival-order
-    * contract (es non-decreasing per user across batches; in-batch
-    * disorder is sorted, signup-before-purchase on an es tie so a
-    * same-second conversion counts, matching batch's es ≥ s_es).
+    * Semantics ≡ batch under the [[KeyedFold]] arrival contract with
+    * per-user order es, signup-before-purchase on an es tie so a
+    * same-second conversion counts, matching batch's es ≥ s_es.
     * A purchase before any signup is dropped exactly as the batch
     * filter drops it. Consumers keep q20's decile report per trigger
     * from the emitted pairs + the signup count (the spec rebuilds it
     * via the SHARED `Stats2.ttcReport`). */
-  def timeToConvertStream(stream: DataFrame)
-      : org.apache.spark.sql.Dataset[TtcOut] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    stream
-      .select(col("user_id").cast("long").as("user_id"),
-        col("event_type").cast("string").as("event_type"),
-        col("es").cast("long").as("es"))
-      .as[TtcIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[TtcIn],
-         state: org.apache.spark.sql.streaming.GroupState[TtcState]) =>
-          var st = state.getOption.getOrElse(TtcState(-1L, false))
-          val out = collection.mutable.ArrayBuffer[TtcOut]()
-          rows.toSeq
-            .sortBy(r => (r.es, if (r.event_type == "signup") 0 else 1))
-            .foreach { r =>
-              if (r.event_type == "signup" && st.sEs < 0L)
-                st = TtcState(r.es, st.done)
-              else if (r.event_type == "purchase" && !st.done &&
-                st.sEs >= 0L && r.es >= st.sEs) {
-                out += TtcOut(key, st.sEs, r.es - st.sEs)
-                st = TtcState(st.sEs, true)
-              }
-            }
-          state.update(st)
-          out.iterator
-      }
-  }
+  def timeToConvertStream(stream: DataFrame): Dataset[TtcOut] =
+    keyedSortedFold(stream, timeToConvertFold)
+
+  private[streaming] def timeToConvertFold =
+    KeyedFold[Long, TtcIn, TtcState, TtcOut](_.user_id, TtcState(-1L, false),
+      Ordering.by((r: TtcIn) =>
+        (r.es, if (r.event_type == "signup") 0 else 1)),
+      (key, st, r, emit) =>
+        if (r.event_type == "signup" && st.sEs < 0L)
+          Some(TtcState(r.es, st.done))
+        else if (r.event_type == "purchase" && !st.done &&
+          st.sEs >= 0L && r.es >= st.sEs) {
+          emit(TtcOut(key, st.sEs, r.es - st.sEs))
+          Some(TtcState(st.sEs, true))
+        } else Some(st))
 
   case class KmObsIn(user_id: Long, event_type: String, es: Long,
                      cents: Long)
@@ -658,14 +550,15 @@ object StreamJob {
     * a79/a80/a81) consumes only that frame, so ONE feed provably
     * powers all seven. State is three epochs per user while OPEN and
     * is REMOVED on close (both latches set — the r11 verdict ask:
-    * live state is O(open users), not O(all users)): s_es latches on
+    * live state is O(open users), not O(all users); StreamJobSpec
+    * checks the state row count): s_es latches on
     * the first signup, p_es on the first qualifying purchase with
     * es ≥ s_es, and pendEs latches the latest pre-signup qualifying
     * purchase so a same-second conversion still counts when the
     * purchase lands in an EARLIER batch than its tied signup (the
-    * per-key contract — es non-decreasing per user across batches;
-    * in-batch disorder sorted signup-first on ties — permits that
-    * delivery order; the r11 ADVICE gap). Under pendEs ≤ s_es, which
+    * [[KeyedFold]] arrival contract with per-user order es,
+    * signup-first on ties, permits that delivery order; the r11
+    * ADVICE gap). Under pendEs ≤ s_es, which
     * the contract guarantees, only a tie can qualify, so the latch
     * fires iff pendEs == s_es.
     *
@@ -681,51 +574,38 @@ object StreamJob {
     * (user, s_es) epoch. The spec proves the rebuilt observation
     * frame ≡ batch `kmObs` row-for-row across cut layouts including
     * a purchase-before-tied-signup cut and post-close re-opens. */
-  def kmObsStream(stream: DataFrame)
-      : org.apache.spark.sql.Dataset[KmObsStat] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val thr = graft.queries.Survival.KmThrCents // serializable local
-    stream
-      .select(col("user_id").cast("long").as("user_id"),
-        col("event_type").cast("string").as("event_type"),
-        col("es").cast("long").as("es"),
-        col("cents").cast("long").as("cents"))
-      .as[KmObsIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[KmObsIn],
-         state: org.apache.spark.sql.streaming.GroupState[KmObsState]) =>
-          var st = state.getOption.getOrElse(KmObsState(-1L, -1L, -1L))
-          val out = collection.mutable.ArrayBuffer[KmObsStat]()
-          rows.toSeq
-            .sortBy(r => (r.es, if (r.event_type == "signup") 0 else 1))
-            .foreach { r =>
-              if (r.event_type == "signup" && st.sEs < 0L) {
-                // pendEs == r.es: a qualifying purchase tied with this
-                // first signup was delivered in an earlier batch — it
-                // closes the epoch at latch time (the r11 ADVICE fix)
-                val p = if (st.pendEs == r.es) st.pendEs else -1L
-                st = KmObsState(r.es, p, st.pendEs)
-                out += KmObsStat(key, st.sEs, st.pEs)
-              } else if (r.event_type == "purchase" && r.cents >= thr &&
-                st.sEs >= 0L && st.pEs < 0L && r.es >= st.sEs) {
-                st = KmObsState(st.sEs, r.es, st.pendEs)
-                out += KmObsStat(key, st.sEs, st.pEs)
-              } else if (r.event_type == "purchase" && r.cents >= thr &&
-                st.sEs < 0L) {
-                // pre-signup pending latch; latest wins (es is per-key
-                // non-decreasing, so the latest is the max — the only
-                // candidate that can tie the signup still to come)
-                st = KmObsState(st.sEs, st.pEs, r.es)
-              }
-            }
-          if (st.sEs >= 0L && st.pEs >= 0L) state.remove()
-          else state.update(st)
-          out.iterator
-      }
+  def kmObsStream(stream: DataFrame): Dataset[KmObsStat] =
+    keyedSortedFold(stream, kmObsFold)
+
+  private[streaming] def kmObsFold = {
+    val thr = graft.queries.Survival.KmThrCents
+    KeyedFold[Long, KmObsIn, KmObsState, KmObsStat](_.user_id,
+      KmObsState(-1L, -1L, -1L),
+      Ordering.by((r: KmObsIn) =>
+        (r.es, if (r.event_type == "signup") 0 else 1)),
+      (key, st, r, emit) => {
+        val next =
+          if (r.event_type == "signup" && st.sEs < 0L) {
+            // pendEs == r.es: a qualifying purchase tied with this
+            // first signup was delivered in an earlier batch — it
+            // closes the epoch at latch time (the r11 ADVICE fix)
+            val p = if (st.pendEs == r.es) st.pendEs else -1L
+            emit(KmObsStat(key, r.es, p))
+            KmObsState(r.es, p, st.pendEs)
+          } else if (r.event_type == "purchase" && r.cents >= thr &&
+            st.sEs >= 0L && st.pEs < 0L && r.es >= st.sEs) {
+            emit(KmObsStat(key, st.sEs, r.es))
+            KmObsState(st.sEs, r.es, st.pendEs)
+          } else if (r.event_type == "purchase" && r.cents >= thr &&
+            st.sEs < 0L) {
+            // pre-signup pending latch; latest wins (es is per-key
+            // non-decreasing, so the latest is the max — the only
+            // candidate that can tie the signup still to come)
+            KmObsState(st.sEs, st.pEs, r.es)
+          } else st
+        // both latches set: the epoch is closed and its state removed
+        if (next.sEs >= 0L && next.pEs >= 0L) None else Some(next)
+      })
   }
 
   case class CusumIn(user_id: Long, event_id: Long, es: Long, q: Long,
@@ -747,42 +627,24 @@ object StreamJob {
     * is emitted whenever the running maximum STRICTLY improves, so the
     * last emission per user carries the batch argmax with w28's
     * earliest-timestamp tie rule (`max(struct(dabs, −es))` ≡ strict->
-    * under in-order arrival). Same per-key arrival-order contract as
-    * [[ewmaAlarmStream]]; in-batch disorder is sorted. Input must carry
+    * under in-order arrival). Per-user order (es, event_id) under the
+    * [[KeyedFold]] arrival contract. Input must carry
     * (user_id, event_id, es, q). */
-  def cusumStream(stream: DataFrame,
-                  calib: DataFrame): org.apache.spark.sql.Dataset[CusumPeak] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    stream.join(calib, Seq("user_id"))
-      .select(col("user_id").cast("long").as("user_id"),
-        col("event_id").cast("long").as("event_id"),
-        col("es").cast("long").as("es"), col("q").cast("long").as("q"),
-        col("sq").cast("long").as("sq"),
-        col("n_events").cast("long").as("n_events"))
-      .as[CusumIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[CusumIn],
-         state: org.apache.spark.sql.streaming.GroupState[CusumState]) =>
-          var st = state.getOption.getOrElse(CusumState(0L, 0L, -1L, 0L))
-          val out = collection.mutable.ArrayBuffer[CusumPeak]()
-          rows.toSeq.sortBy(r => (r.es, r.event_id)).foreach { r =>
-            val rn = st.rn + 1
-            val cum = st.cum + r.q
-            val dabs = math.abs(r.n_events * cum - rn * r.sq)
-            st =
-              if (dabs > st.bestDabs) { // strict: earliest tie wins
-                out += CusumPeak(key, r.n_events, dabs, r.es)
-                CusumState(rn, cum, dabs, r.es)
-              } else CusumState(rn, cum, st.bestDabs, st.bestEs)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+  def cusumStream(stream: DataFrame, calib: DataFrame): Dataset[CusumPeak] =
+    keyedSortedFold(stream.join(calib, Seq("user_id")), cusumFold)
+
+  private[streaming] def cusumFold =
+    KeyedFold[Long, CusumIn, CusumState, CusumPeak](_.user_id,
+      CusumState(0L, 0L, -1L, 0L),
+      Ordering.by((r: CusumIn) => (r.es, r.event_id)), (key, st, r, emit) => {
+        val rn = st.rn + 1
+        val cum = st.cum + r.q
+        val dabs = math.abs(r.n_events * cum - rn * r.sq)
+        if (dabs > st.bestDabs) { // strict: earliest tie wins
+          emit(CusumPeak(key, r.n_events, dabs, r.es))
+          Some(CusumState(rn, cum, dabs, r.es))
+        } else Some(CusumState(rn, cum, st.bestDabs, st.bestEs))
+      })
 
   case class EwmaIn(user_id: Long, event_id: Long, es: Long, vc: Long,
                     mu: Double, sig: Double)
@@ -795,22 +657,18 @@ object StreamJob {
     * the SHARED `Stats.ewmaCalib` over the reference corpus) joins as a
     * DATAFRAME: a stream-static equi-join, because at corpus scale the
     * calibration table is data-sized and must never become a driver-side
-    * map. `flatMapGroupsWithState` carries (row count, trailing D−1
-    * values) per user — constant state per key. The per-row arithmetic
+    * map. State is (row count, trailing D−1 values) per user — constant
+    * per key. The per-row arithmetic
     * replicates w31's column expression TERM FOR TERM in the same
     * association (incl. the literal-0.0 padding of missing lags and
     * Spark round's scala-BigDecimal HALF_UP), so emitted alarms are
-    * bit-identical to the oracle-green batch rows when per-key arrival
-    * respects event order across triggers (in-batch disorder is sorted
-    * here — the StatefulWindow contract). */
+    * bit-identical to the oracle-green batch rows under the
+    * [[KeyedFold]] arrival contract with per-user order (es, event_id). */
   def ewmaAlarmStream(stream: DataFrame,
-                      calib: DataFrame): org.apache.spark.sql.Dataset[EwmaAlarm] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    // copy constants into serializable locals — aliasing the Stats
-    // MODULE into the closure would drag the whole object through
-    // task serialization
+                      calib: DataFrame): Dataset[EwmaAlarm] =
+    keyedSortedFold(stream.join(calib, Seq("user_id")), ewmaAlarmFold)
+
+  private[streaming] def ewmaAlarmFold = {
     val ewD = graft.queries.Stats.EwmaD
     val ewW: Array[Double] = graft.queries.Stats.ewmaW.toArray
     val ewT: Array[Double] = graft.queries.Stats.ewmaTail.toArray
@@ -818,43 +676,28 @@ object StreamJob {
     val cfac = graft.queries.Stats.ewmaCfac
     val r4 = (x: Double) =>
       BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    stream.join(calib, Seq("user_id"))
-      .select(col("user_id").cast("long").as("user_id"),
-        col("event_id").cast("long").as("event_id"),
-        col("es").cast("long").as("es"), col("vc").cast("long").as("vc"),
-        col("mu").cast("double").as("mu"),
-        col("sig").cast("double").as("sig"))
-      .as[EwmaIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[EwmaIn],
-         state: org.apache.spark.sql.streaming.GroupState[EwmaState]) =>
-          var st = state.getOption.getOrElse(EwmaState(0L, Seq.empty))
-          val out = collection.mutable.ArrayBuffer[EwmaAlarm]()
-          rows.toSeq.sortBy(r => (r.es, r.event_id)).foreach { r =>
-            val rn = st.rn + 1
-            // w31's terms.reduce(_ + _): t0 + t1 + … left-assoc, missing
-            // lags contribute the LITERAL 0.0 exactly as coalesce does
-            var z = 0.0
-            var d = 0
-            while (d < ewD) {
-              z += (if (d == 0) ewW(0) * r.vc.toDouble
-                else if (d - 1 < st.recent.length)
-                  ewW(d) * st.recent(d - 1).toDouble
-                else 0.0)
-              d += 1
-            }
-            val na = math.min(rn - 1, (ewD - 1).toLong).toInt
-            val zf = z + ewT(na) * r.mu
-            if (math.abs(zf - r.mu) > ewL * r.sig * cfac)
-              out += EwmaAlarm(key, r.es, r.vc, r4(zf),
-                r4((zf - r.mu) / (r.sig * cfac)))
-            st = EwmaState(rn, (r.vc +: st.recent).take(ewD - 1))
-          }
-          state.update(st)
-          out.iterator
-      }
+    KeyedFold[Long, EwmaIn, EwmaState, EwmaAlarm](_.user_id,
+      EwmaState(0L, Seq.empty),
+      Ordering.by((r: EwmaIn) => (r.es, r.event_id)), (key, st, r, emit) => {
+        val rn = st.rn + 1
+        // w31's terms.reduce(_ + _): t0 + t1 + … left-assoc, missing
+        // lags contribute the LITERAL 0.0 exactly as coalesce does
+        var z = 0.0
+        var d = 0
+        while (d < ewD) {
+          z += (if (d == 0) ewW(0) * r.vc.toDouble
+            else if (d - 1 < st.recent.length)
+              ewW(d) * st.recent(d - 1).toDouble
+            else 0.0)
+          d += 1
+        }
+        val na = math.min(rn - 1, (ewD - 1).toLong).toInt
+        val zf = z + ewT(na) * r.mu
+        if (math.abs(zf - r.mu) > ewL * r.sig * cfac)
+          emit(EwmaAlarm(key, r.es, r.vc, r4(zf),
+            r4((zf - r.mu) / (r.sig * cfac))))
+        Some(EwmaState(rn, (r.vc +: st.recent).take(ewD - 1)))
+      })
   }
 
   /** Seed the signature index for [[incrementalDedupSink]]: the corpus'

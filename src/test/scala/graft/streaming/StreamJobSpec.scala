@@ -719,6 +719,9 @@ class StreamJobSpec extends SparkSpec {
     Seq(b1, b2, b3).foreach { b =>
       mem.addData(b.toIndexedSeq: _*); q.processAllAvailable()
     }
+    // live state rows after the last batch that processed input
+    val stateRows = q.recentProgress.filter(_.numInputRows > 0).last
+      .stateOperators.head.numRowsTotal
     q.stop()
     val emitted = spark.table("km_tie_out")
     // u2's close was removed, so its second signup re-opened and
@@ -736,6 +739,12 @@ class StreamJobSpec extends SparkSpec {
       3L -> ((10L, -1L)),   // censored
       4L -> ((5L, -1L)),    // non-qualifying tie must not close
       5L -> ((40L, 45L))))  // pend 30 < s_es 40 never latches
+    // live state is O(open users): the users whose final statistic has
+    // no close (3 censored, 4 non-qualifying tie) are the only state
+    // rows left; the closed users 1, 2 and 5 were removed
+    val openUsers = fin.collect { case (u, (_, -1L)) => u }.toSet
+    assert(openUsers == Set(3L, 4L))
+    assert(stateRows == openUsers.size)
   }
 
   test("streaming Page–Hinkley decisions ≡ the oracle-green a65 drift " +

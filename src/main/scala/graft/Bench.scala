@@ -37,17 +37,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1500").toDouble
     val startNano = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - startNano) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     def r3(v: Double): String = f"$v%.3f"
 
@@ -60,6 +54,9 @@ object Bench {
     var finalLinePrinted = false // guarded by printLock
     val printLock = new Object
     @volatile var escalateFlag = false
+    // reps + 1 only once the escalation pass has FINISHED: a kill landing
+    // mid-escalation must not pass a partial line off as a completed one
+    @volatile var effReps = reps
     @volatile var escalationSkippedBudget = false
 
     def summaryLine(partial: Boolean): String = {
@@ -75,7 +72,6 @@ object Bench {
       val partialPart = if (partial) ""","partial":true""" else ""
       val skipPart =
         if (escalationSkippedBudget) ""","escalation_skipped_budget":true""" else ""
-      val effReps = if (escalateFlag) reps + 1 else reps
       s"""{"metric":"total","value":${r3(mins.sum)},"unit":"sec","n_queries":${names.size},"reps":$effReps,"reps_is_attempted_ceiling":true,"failures":$failures,"spread_total":${r3(spreads.sum)},"escalated":$escalateFlag$skipPart$calibShort$partialPart,"sf":"$sfDir"}"""
     }
     // The final print and the shutdown hook's partial print share one lock
@@ -149,6 +145,7 @@ object Bench {
       val prev = Option(recorded.get(name)).getOrElse(Seq.empty)
       if (prev.nonEmpty) recorded.put(name, prev ++ runRep(name, fn, reps + 1))
     }
+    if (escalateFlag) effReps = reps + 1
     val results = sorted.map { case (name, _) =>
       val times = Option(recorded.get(name)).getOrElse(Seq.empty)
       val min = if (times.isEmpty) None else Some(times.min)
@@ -163,7 +160,6 @@ object Bench {
     // count: a query whose first-pass reps all failed never gets the
     // escalation rep, and an escalation rep can itself fail (r8 ADVICE).
     // The achieved per-query counts are the `ok` map in the detail file.
-    val effReps = if (escalateFlag) reps + 1 else reps
     val failed = results.collect { case (k, None, _, _) => k }
     val total = results.flatMap(_._2).sum
     val totalSpread = results.flatMap(_._3).sum

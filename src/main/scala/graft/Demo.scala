@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.api.EngineApi
 import graft.inject.AnomalySetting
 import java.nio.file.Files
@@ -10,12 +9,7 @@ import java.nio.file.Files
   * summary. `runMain graft.Demo` — exits nonzero on any contract breach. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     // synthetic unlabeled series: one sensor, 1 Hz, one day-ish

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Micro-timing harness: `runMain graft.Time <reps> <query ...>` runs each
   * named query `reps` times under the same session settings as [[Bench]]
   * and prints per-rep wall times — for isolating plan regressions from this
@@ -14,13 +12,7 @@ object Time {
     require(unknown.isEmpty,
       s"unknown queries: ${unknown.mkString(", ")}; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names; r <- 1 to reps) {
       spark.catalog.clearCache()

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multi-source BFS hop distance over an edge list — the TrustRank-style
@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * Scale shape: each round is one co-partitioned join against the
   * once-partitioned-and-checkpointed edge frame + one min-aggregation
   * shuffle — the [[PageRank]] iteration shape with min(d+1) in place of
-  * the damped sum. Full-relaxation form (distances re-derived from the
-  * whole frontier set each round) rather than delta-frontier: simpler,
-  * same worst-case shuffle volume at small fixed depth, and exactly the
-  * shape the unrolled SQL twin computes.
+  * the damped sum, run by [[Iterate.rounds]]. Full-relaxation form
+  * (distances re-derived from the whole frontier set each round) rather
+  * than delta-frontier: simpler, same worst-case shuffle volume at small
+  * fixed depth, and exactly the shape the unrolled SQL twin computes.
   */
 object Bfs {
 
@@ -28,43 +28,36 @@ object Bfs {
     * @return (node, dist: Int) for every node within maxHops of a seed */
   def seedDistance(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).localCheckpoint()
-    var dist = seeds.select(col("node")).distinct()
-      .select(col("node"), lit(0).as("dist")).localCheckpoint()
-    for (_ <- 1 to maxHops) {
-      val relaxed = e.join(dist, e("src") === dist("node"))
-        .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
-      dist = dist.unionAll(relaxed)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint()
-    }
-    dist
+    relax(edges.select(col("src"), col("dst")), seeds, maxHops,
+      "dist", lit(0), lit(1))
   }
 
   /** Weighted twin of [[seedDistance]]: fixed-round Bellman–Ford. Each
     * round relaxes every edge once (cost = min over src of cost[src] +
     * w), so after `rounds` rounds every node whose cheapest seed path
     * uses ≤ `rounds` edges carries its exact minimum cost — integer
-    * weights keep it bit-reproducible and SQL-unrollable. Same per-round
-    * shape as the hop version: one co-partitioned join against the
-    * checkpointed edge frame + one min-agg shuffle.
+    * weights keep it bit-reproducible and SQL-unrollable.
     *
     * @param edges three columns `src`, `dst`, `w` (LongType, ≥ 0)
     * @return (node, cost: Long) for nodes reachable within `rounds` edges */
   def seedCost(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .repartition(col("src")).localCheckpoint()
-    var cost = seeds.select(col("node")).distinct()
-      .select(col("node"), lit(0L).as("cost")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val relaxed = e.join(cost, e("src") === cost("node"))
-        .select(col("dst").as("node"), (col("cost") + col("w")).as("cost"))
-      cost = cost.unionAll(relaxed)
-        .groupBy("node").agg(min("cost").as("cost"))
-        .localCheckpoint()
+    relax(edges.select(col("src"), col("dst"), col("w")), seeds, rounds,
+      "cost", lit(0L), col("w"))
+  }
+
+  /** `rounds` full relaxations from `seeds` (at `zero`): each round takes,
+    * per node, the min of its value and every in-edge's `src` value +
+    * `weight`. The result column `out` is typed like `zero + weight`. */
+  private def relax(edges: DataFrame, seeds: DataFrame, rounds: Int,
+                    out: String, zero: Column, weight: Column): DataFrame = {
+    val e = edges.repartition(col("src")).localCheckpoint()
+    val init = seeds.select(col("node")).distinct()
+      .select(col("node"), zero.as(out)).localCheckpoint()
+    Iterate.rounds(init, rounds) { d =>
+      val relaxed = e.join(d, e("src") === d("node"))
+        .select(col("dst").as("node"), (col(out) + weight).as(out))
+      d.unionAll(relaxed).groupBy("node").agg(min(out).as(out))
     }
-    cost
   }
 }

@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * its neighbors' labels. Converges in O(cluster diameter) rounds — near-dup
   * clusters are near-cliques (diameter 2-3), so the default cap is
   * generous. Each round is one shuffle join + one aggregation over the
-  * EDGE list (never all-pairs), `localCheckpoint` truncates the growing
-  * lineage, and convergence is detected with a count of changed labels —
-  * the classic scalable shape (map-reduce CC; for billion-edge graphs the
+  * EDGE list (never all-pairs), run by [[Iterate.untilStable]]: a
+  * checkpointed round loop that stops when no label changes — the classic
+  * scalable shape (map-reduce CC; for billion-edge graphs the
   * large-star/small-star variant halves rounds, same skeleton). */
 object Components {
 
@@ -25,11 +25,11 @@ object Components {
     * appears in `edges`. Output: (node, component), both typed like the
     * input columns.
     *
-    * Convergence is REQUIRED: a silent stop at `maxIter` would hand back
-    * non-minimal labels — a wrong dedup representative, and an oracle
-    * mismatch against any exact-closure twin — so hitting the cap throws.
-    * Near-dup clusters are near-cliques (diameter 2–3); the default cap
-    * covers pathological chains (diameter = chain length) with room. */
+    * Convergence is REQUIRED ([[Iterate.untilStable]]): hitting `maxIter`
+    * with labels still changing throws. Near-dup clusters are near-cliques
+    * (diameter 2–3); the default cap covers pathological chains (diameter
+    * = chain length) with room — a graph deeper than that usually means
+    * the similarity threshold is too loose. */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 60,
                           partitions: Int = 0): DataFrame = {
@@ -47,8 +47,8 @@ object Components {
     // the old shape needed a SECOND per-round join of the labels frame
     // against the neighbor minima to apply `least(own, nbr)`. The self
     // row also carries the node's previous label through the same
-    // aggregation (`min` over the single dst = src row), so convergence
-    // stays a filter over materialized data.
+    // aggregation (`min` over the single dst = src row), so the changed
+    // mark is computed from materialized data.
     val sym0 = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionByName(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
     val sym = (sym0.unionByName(sym0.select(col("src"), col("src").as("dst")))
@@ -57,21 +57,11 @@ object Components {
         case d => d.repartition(col("dst"))
       })
       .localCheckpoint()
-    var labels = sym.select(col("src").as("node")).distinct()
+    val init = sym.select(col("src").as("node")).distinct()
       .withColumn("component", col("node"))
       .localCheckpoint()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // convergence count rides the checkpoint-materialization job via
-      // observe (optimization r13, guide §1.5): the old shape paid a
-      // SECOND per-round action (filter+count over the checkpointed
-      // blocks) — one Spark job per round per query, pure scheduling
-      // overhead at any scale. localCheckpoint(eager) runs through
-      // withAction, so the Observation resolves when the round's one job
-      // finishes. coalesce: an empty graph yields a null sum.
-      val obs = org.apache.spark.sql.Observation()
-      val next = sym
+    Iterate.untilStable(init, maxIter, "connected components") { labels =>
+      sym
         .join(labels.select(col("node").as("__n"), col("component")),
           col("dst") === col("__n"))
         .groupBy(col("src"))
@@ -79,18 +69,8 @@ object Components {
           // the self-loop row is the unique dst = src row: its joined
           // label IS this node's previous label
           min(when(col("dst") === col("src"), col("component"))).as("__prev"))
-        .select(col("src").as("node"), col("component"), col("__prev"))
-        .observe(obs, coalesce(sum(when(col("component") =!= col("__prev"),
-          1L).otherwise(0L)), lit(0L)).as("n_changed"))
-        .localCheckpoint()
-      changed = obs.get("n_changed").asInstanceOf[Long]
-      labels = next.drop("__prev")
-      iter += 1
+        .select(col("src").as("node"), col("component"),
+          (col("component") =!= col("__prev")).as(Iterate.Changed))
     }
-    if (changed > 0) throw new IllegalStateException(
-      s"connected components did not converge in $maxIter rounds " +
-        s"($changed labels still changing) — raise maxIter; a graph this " +
-        "deep usually means the similarity threshold is too loose")
-    labels
   }
 }

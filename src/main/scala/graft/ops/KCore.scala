@@ -21,7 +21,10 @@ import org.apache.spark.sql.functions._
   * Scale shape: per round, two semi-joins of the once-partitioned-and-
   * checkpointed edge frame against the (node-sized, checkpointed) survivor
   * set plus one count-aggregation shuffle; survivor frames only ever
-  * shrink. Nothing is ever driver-collected and no step is quadratic.
+  * shrink. [[Iterate.rounds]] checkpoints the shrinking induced subgraph,
+  * so each round's degree agg reads one materialized frame instead of
+  * re-running every prior round's semi-joins. Nothing is ever
+  * driver-collected and no step is quadratic.
   */
 object KCore {
 
@@ -38,20 +41,15 @@ object KCore {
     require(k >= 1 && rounds >= 1, s"need k>=1, rounds>=1; got k=$k rounds=$rounds")
     val e0 = edges.select(col("src"), col("dst"))
       .repartition(col("src")).localCheckpoint()
-    var cur = e0
-    for (_ <- 1 to rounds) {
+    Iterate.rounds(e0, rounds) { cur =>
+      // the survivor set is read by both semi-joins: materialize it once
       val alive = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("node"))
         .localCheckpoint()
-      // checkpoint the shrinking induced subgraph: each round's degree agg
-      // then reads one materialized frame instead of re-running every prior
-      // round's semi-joins (lineage would otherwise grow O(rounds²))
-      cur = cur
+      cur
         .join(alive.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(alive.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .localCheckpoint()
-    }
-    cur.groupBy(col("src")).agg(count(lit(1)).cast("long").as("deg"))
+    }.groupBy(col("src")).agg(count(lit(1)).cast("long").as("deg"))
       .select(col("src").as("node"), col("deg"))
   }
 }

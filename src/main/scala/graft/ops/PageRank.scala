@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Distributed PageRank with integer fixed-point arithmetic.
@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions._
   * (edges ⋈ ranks on src — the edge frame is hash-partitioned on src once,
   * checkpointed, and every iteration reuses that exchange) and ONE
   * aggregation shuffle (groupBy dst). Ranks frames are checkpointed per
-  * iteration to truncate the growing lineage (same contract as
-  * [[Components]]). Dangling mass is dropped (nodes with out-degree 0
-  * simply don't contribute), the standard simplification when the edge
-  * list is made symmetric by the caller.
+  * iteration to truncate the growing lineage ([[Iterate.rounds]]).
+  * Dangling mass is dropped (nodes with out-degree 0 simply don't
+  * contribute), the standard simplification when the edge list is made
+  * symmetric by the caller.
   */
 object PageRank {
 
@@ -40,16 +40,15 @@ object PageRank {
   def ranks(edges: DataFrame, iters: Int = 3, scale: Long = 1000000000000L,
             damp: Long = 85L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val spark = edges.sparkSession
     // Partition the edge list on the join key ONCE; localCheckpoint both
     // materializes the (possibly expensive) edge derivation and lets every
     // iteration's join reuse this exchange instead of re-shuffling.
     val e = edges.select(col("src"), col("dst"))
       .repartition(col("src")).localCheckpoint()
     // node count rides the checkpoint-materialization job via observe
-    // (optimization r13, guide §1.5 — same pattern as Components): the
-    // old separate deg.count() was one extra Spark job per query.
-    val obs = org.apache.spark.sql.Observation()
+    // (optimization r13, guide §1.5 — same pattern as Iterate.untilStable):
+    // the old separate deg.count() was one extra Spark job per query.
+    val obs = Observation()
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
       .observe(obs, count(lit(1)).as("n_nodes"))
       .localCheckpoint()
@@ -58,23 +57,20 @@ object PageRank {
     require(n > 0, "PageRank needs a non-empty edge list")
     val base = scale / n                  // integer teleport share
     val teleport = (100L - damp) * base / 100L
-    var pr = deg.select(col("src").as("node"), lit(base).as("pr"))
+    val init = deg.select(col("src").as("node"), lit(base).as("pr"))
       .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val contrib = e.join(pr, e("src") === pr("node"))
-        .join(broadcast_safe(deg), "src")
+    Iterate.rounds(init, iters) { pr =>
+      // deg is one row per distinct src — dimension-sized next to the edge
+      // list at any scale, but NOT guaranteed broadcastable at 10^9 nodes:
+      // no broadcast hint, Catalyst/AQE decide (deg is already
+      // hash-partitioned on the join key, so the fallback sort-merge join
+      // reuses the exchange)
+      e.join(pr, e("src") === pr("node"))
+        .join(deg, "src")
         .select(col("dst"), expr("pr div outdeg").as("c"))
-      pr = contrib.groupBy("dst").agg(sum("c").as("insum"))
+        .groupBy("dst").agg(sum("c").as("insum"))
         .select(col("dst").as("node"),
           (lit(teleport) + expr(s"($damp * insum) div 100")).as("pr"))
-        .localCheckpoint()
     }
-    pr
   }
-
-  /** deg is one row per distinct src — dimension-sized next to the edge
-    * list at any scale, but NOT guaranteed broadcastable at 10^9 nodes; let
-    * Catalyst/AQE decide (it is already hash-partitioned on the join key,
-    * so the fallback sort-merge join reuses the exchange). */
-  private def broadcast_safe(deg: DataFrame): DataFrame = deg
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.eval.Metrics
 import graft.functions.Det
 import graft.ml.FittedDetector
+import graft.ops.Iterate
 
 /** XAI capability layer (SURVEY §2.11). The reference's SHAP/LIME/DiCE
   * libraries have no JVM ports; we deliver the *capabilities* —
@@ -318,8 +319,9 @@ object Xai {
     * (validity), so fitness = (flips, fewer changes, smaller distance) —
     * the same objectives dice_ml's genetic loss encodes. All candidates of
     * all instances evolve together as one DataFrame per generation
-    * (`localCheckpoint` truncates the growing lineage); the driver loop
-    * only stages G plans. Output shape matches [[nunCounterfactuals]]. */
+    * ([[Iterate.rounds]] checkpoints each one, truncating the growing
+    * lineage); the driver loop only stages G plans. Output shape matches
+    * [[nunCounterfactuals]]. */
   def geneticCounterfactuals(instances: DataFrame, background: DataFrame,
                              score: DataFrame => DataFrame,
                              features: Seq[String], idCol: String = "id",
@@ -337,7 +339,7 @@ object Xai {
     // generation 0 = the random mode's perturbation population
     val exploded = instances
       .withColumn("__trial", explode(sequence(lit(1), lit(popSize))))
-    var pop = features.zipWithIndex.foldLeft(exploded) { case (d, (f, fi)) =>
+    val pop0 = features.zipWithIndex.foldLeft(exploded) { case (d, (f, fi)) =>
       val key = col(idCol) * lit(popSize.toLong * F) +
         (col("__trial") - 1) * lit(F.toLong) + lit(fi.toLong)
       val (lo, hi) = (statsRow.getDouble(2 * features.indexOf(f)),
@@ -351,8 +353,8 @@ object Xai {
 
     def scaledAbs(f: String): Column =
       abs((col(f) - col(s"__orig_$f")) / lit(span(f)))
-    for (_ <- 1 to generations) {
-      val alive = score(pop).filter(!col("is_anomaly"))
+    val pop = Iterate.rounds(pop0, generations) { cur =>
+      val alive = score(cur).filter(!col("is_anomaly"))
         .drop("is_anomaly", "anomaly_score")
       // PROXIMITY child: halve every delta
       val prox = features.foldLeft(alive)((d, f) =>
@@ -364,7 +366,7 @@ object Xai {
         d.withColumn(f,
           when(scaledAbs(f) <= coalesce(minChange, lit(-1.0)) + lit(1e-15),
             col(s"__orig_$f")).otherwise(col(f))))
-      pop = alive.unionByName(prox).unionByName(sparse).localCheckpoint()
+      alive.unionByName(prox).unionByName(sparse)
     }
 
     val fit = score(pop).filter(!col("is_anomaly"))

@@ -63,4 +63,19 @@ class BfsSpec extends SparkSpec {
     // extra rounds must not change converged costs
     assert(run(4) === run(2))
   }
+
+  /** Job-count pins (3 setup jobs + 3 per round in both): a change to the
+    * per-call or per-round work must update them deliberately. */
+  test("job count pinned: seedDistance at 3 hops runs 12 Spark jobs, " +
+      "seedCost at 2 rounds 9") {
+    val pairs = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"))
+    val edges = (pairs ++ pairs.map(_.swap)).toDF("src", "dst")
+    val seeds = Seq("a").toDF("node")
+    val (_, distJobs) = withJobCount(Bfs.seedDistance(edges, seeds, maxHops = 3))
+    assert(distJobs === 12)
+    val wedges = Seq(("a", "b", 1L), ("b", "c", 1L), ("a", "c", 5L))
+      .toDF("src", "dst", "w")
+    val (_, costJobs) = withJobCount(Bfs.seedCost(wedges, seeds, 2))
+    assert(costJobs === 9)
+  }
 }

@@ -59,4 +59,12 @@ class KCoreSpec extends SparkSpec {
     val a = run(2)
     assert(a === run(5) && a.nonEmpty)
   }
+
+  // a change to the per-call or per-round work must update the pin
+  test("job count pinned: peel at 3 rounds runs 14 Spark jobs") {
+    val edges = sym(Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"),
+      ("e", "f"), ("f", "g")))
+    val (_, jobs) = withJobCount(KCore.peel(edges, k = 2, rounds = 3))
+    assert(jobs === 14)
+  }
 }

@@ -35,4 +35,13 @@ class LpaSpec extends SparkSpec {
     assert(got.keySet == nodes.toSet)
     assert(got.values.toSet == Set("w"), s"clique did not converge: $got")
   }
+
+  // a change to the per-call or per-round work must update the pin
+  test("job count pinned: propagate at 3 rounds runs 16 Spark jobs") {
+    val und = Seq("a1" -> "a2", "a1" -> "a3", "a2" -> "a3",
+      "b1" -> "b2", "b1" -> "b3", "b2" -> "b3", "a3" -> "b1")
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val (_, jobs) = withJobCount(Lpa.propagate(edges, 3))
+    assert(jobs === 16)
+  }
 }

@@ -54,4 +54,12 @@ class PageRankSpec extends SparkSpec {
     }
     assert(run(2) === run(5))
   }
+
+  // a change to the per-call or per-round work must update the pin
+  test("job count pinned: ranks at 2 iterations runs 13 Spark jobs") {
+    val edges = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"))
+      .toDF("src", "dst")
+    val (_, jobs) = withJobCount(PageRank.ranks(edges, iters = 2, scale = 3000L))
+    assert(jobs === 13)
+  }
 }

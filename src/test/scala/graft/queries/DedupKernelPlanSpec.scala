@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.functions._
 
 /** Plan pins for the TextDedup candidate kernels (optimization r13).
   *
@@ -26,5 +27,16 @@ class DedupKernelPlanSpec extends SparkSpec {
     val plan = TextDedup.jacVerifiedPairs(spark, dir)
       .queryExecution.executedPlan
     assert(joinCount(plan) === 3, s"plan was:\n$plan")
+  }
+
+  test("documents.doc_id is unique on every test corpus (lshCandFromSig's " +
+      "pair-set equivalence with the est-join oracle twin rests on it)") {
+    val root = new java.io.File(dir).getParent
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val r = graft.Tables.t(spark, s"$root/$sf", "documents")
+        .agg(count(lit(1)), countDistinct(col("doc_id"))).head
+      assert(r.getLong(0) > 0L, sf)
+      assert(r.getLong(0) === r.getLong(1), s"$sf: duplicated doc_id")
+    }
   }
 }

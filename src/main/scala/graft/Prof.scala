@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskStart}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -48,13 +49,13 @@ object Prof {
         val df = fn(spark, sfDir)
         df.queryExecution.executedPlan // force planning
         val planMs = (System.nanoTime() - t0) / 1e6
-        Thread.sleep(120) // listener bus drain for the construction counts
+        GraftBus.drain(spark.sparkContext) // construction counts are complete
         val (cj, cs) = (jobs.get, stages.get)
         jobs.set(0); stages.set(0); tasks.set(0)
         val t1 = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val exec1 = (System.nanoTime() - t1) / 1e9
-        Thread.sleep(120) // let the async listener bus drain
+        GraftBus.drain(spark.sparkContext)
         val (j1, s1, tk1) = (jobs.get, stages.get, tasks.get)
         spark.catalog.clearCache()
         val df2 = fn(spark, sfDir) // fresh frame: no reused shuffle output

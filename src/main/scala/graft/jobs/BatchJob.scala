@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.eval.Metrics
 import graft.inject.{AnomalySetting, Injector}
@@ -34,8 +34,14 @@ case class XaiConfig(
 /** The `run-batch` lifecycle (SURVEY §3.1) as one declarative driver-side
   * flow: normalize → inject → persist job table → temporal split → fit →
   * detect → flag write-back → metrics → summary. Each stage is a DataFrame
-  * transformation; the only driver materializations are scalar aggregates
-  * (counts, metrics) and bounded model state. */
+  * transformation. A frame that more than one action reads (the job
+  * table, the split, the scored frame, each importance frame) is
+  * materialized once with `localCheckpoint()`, and the counts the summary
+  * needs ride that same job through `observe`, so no action re-runs a
+  * frame's lineage. Beyond that, the driver only collects scalar metrics,
+  * the importance rows and bounded model state. Each stage's Spark jobs
+  * carry the description `graft:<job>:<stage>`, stage ∈ {simulation,
+  * training, detection, evaluation, xai}. */
 object BatchJob {
 
   def run(spark: SparkSession,
@@ -51,41 +57,59 @@ object BatchJob {
     def now() = System.nanoTime()
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val t0 = now()
+    val sc = spark.sparkContext
+    val callerDesc = sc.getLocalProperty("spark.job.description")
+    // a description, not a job group: the caller's group stays in force
+    def stage[T](name: String)(body: => T): T = {
+      sc.setJobDescription(s"graft:$jobName:$name")
+      try body finally sc.setJobDescription(callerDesc)
+    }
+    def timed[T](name: String)(body: => T): T = {
+      val t = now()
+      val out = stage(name)(body)
+      timings += name -> (now() - t) / 1e9
+      out
+    }
+    // `df` checkpointed, with the counts `aggs` taken in the same job. The
+    // observation is unnamed: a named one is matched by name across the
+    // session, so two runs at once would mix their counts
+    def observed(df: DataFrame, aggs: Column*): (DataFrame, Map[String, Long]) = {
+      val obs = Observation()
+      val cp = df.observe(obs, aggs.head, aggs.tail: _*).localCheckpoint()
+      (cp, obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] })
+    }
 
     // ingest + inject (the reference's "simulation" stage)
-    val tSim = now()
-    val normalized = Ingest.normalize(raw, timeColumn, labelColumn)
-    val injected =
-      if (injections.isEmpty) normalized
-      else Injector.injectAll(normalized, "id", "timestamp", injections)
     val table = s"job_batch_$jobName"
-    if (persistTable) Ingest.writeJobTable(injected, table)
-    val data = (if (persistTable) spark.table(table) else injected).cache()
-    val rows = data.count()
-    timings += "simulation" -> (now() - tSim) / 1e9
+    val (data, rows, injectedRows) = timed("simulation") {
+      val normalized = Ingest.normalize(raw, timeColumn, labelColumn)
+      val injected =
+        if (injections.isEmpty) normalized
+        else Injector.injectAll(normalized, "id", "timestamp", injections)
+      if (persistTable) Ingest.writeJobTable(injected, table)
+      val (d, n) = observed(if (persistTable) spark.table(table) else injected,
+        count(lit(1)).as("rows"), count_if(col("injected_anomaly")).as("injected"))
+      (d, n("rows"), n("injected"))
+    }
 
-    // W3 temporal split + training
-    val tTrain = now()
-    val split = Sequencer.temporalSplit(data, Seq(col("timestamp"), col("id")), trainRatio)
-    val train = split.filter(col("split") === "train")
-    val fitted = detector.fit(train)
-    timings += "training" -> (now() - tTrain) / 1e9
+    // W3 temporal split + training; the split feeds fit's probes, fit and
+    // detection, so it is materialized once
+    val (split, fitted) = timed("training") {
+      val split = Sequencer.temporalSplit(data, Seq(col("timestamp"), col("id")), trainRatio)
+        .localCheckpoint()
+      (split, detector.fit(split.filter(col("split") === "train")))
+    }
 
     // detection on the full table (reference detects test + all;
     // test-split metrics below reuse the same pass)
-    val tDet = now()
-    val detected = fitted.transform(split).cache()
-    val flagged = detected.filter(col("is_anomaly")).count()
-    timings += "detection" -> (now() - tDet) / 1e9
-
-    // J2 write-back: single overwrite with the new flag column
-    if (persistTable) {
-      val out = detected.drop("split", "anomaly_score")
-      out.write.mode("overwrite").format("parquet")
-        .saveAsTable(table + "_scored")
+    val (detected, flagged) = timed("detection") {
+      val (d, n) = observed(fitted.transform(split),
+        count_if(col("is_anomaly")).as("flagged"))
+      (d, n("flagged"))
     }
 
-    // A3/A4 metrics on test split and on everything (needs a label)
+    // J2 write-back (single overwrite with the new flag column), then A3/A4
+    // metrics on the test split and on everything (needs a label)
     def metricsOf(df: DataFrame): Map[String, Double] =
       if (!df.columns.contains("label")) Map.empty
       else {
@@ -94,14 +118,18 @@ object BatchJob {
           f -> row.get(i).toString.toDouble
         }.toMap
       }
-    val mTest = metricsOf(detected.filter(col("split") === "test"))
-    val mAll = metricsOf(detected)
-    val injectedRows = data.filter(col("injected_anomaly")).count()
+    val (mTest, mAll) = stage("evaluation") {
+      if (persistTable) {
+        val out = detected.drop("split", "anomaly_score")
+        out.write.mode("overwrite").format("parquet")
+          .saveAsTable(table + "_scored")
+      }
+      (metricsOf(detected.filter(col("split") === "test")), metricsOf(detected))
+    }
 
     // X1/X5: in-job explanation stage + NDCG vs injected ground truth
     val (xaiImp, xaiNdcg) = xai match {
-      case Some(cfg) if detected.columns.contains("label") =>
-        val tXai = now()
+      case Some(cfg) if detected.columns.contains("label") => timed("xai") {
         val truth = injections.flatMap(_.columns).toSet
         val results = cfg.methods.map {
           case m @ "permutation_importance" =>
@@ -149,6 +177,8 @@ object BatchJob {
               anoms, clean, fitted.transform, cfg.features)
             m -> graft.xai.Xai.counterfactualImportance(cfs, cfg.features)
           case other => throw new IllegalArgumentException(s"xai method $other")
+        }.map { case (m, df) => // read by collect and, with a truth, by NDCG
+          m -> (if (truth.isEmpty) df else df.localCheckpoint())
         }
         val imp = results.map { case (m, df) =>
           m -> df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -158,8 +188,8 @@ object BatchJob {
           else results.map { case (m, df) =>
             m -> graft.xai.Xai.ndcgVsInjected(df, truth, cfg.ndcgK)
           }.toMap
-        timings += "xai" -> (now() - tXai) / 1e9
         (imp, ndcg)
+      }
       case _ => (Map.empty[String, Map[String, Double]], Map.empty[String, Double])
     }
     timings += "total" -> (now() - t0) / 1e9
@@ -169,7 +199,6 @@ object BatchJob {
       case _                             => Map.empty[String, Double]
     }
 
-    data.unpersist(); detected.unpersist()
     RunSummary(jobName, "completed", rows, injectedRows, flagged,
       mTest, mAll, timings.toMap, xaiImp, xaiNdcg, cvMetrics)
   }

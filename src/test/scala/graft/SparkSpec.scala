@@ -21,7 +21,7 @@ trait SparkSpec extends AnyFunSuite {
     val group = s"job-count-${java.util.UUID.randomUUID()}"
     sc.setJobGroup(group, group)
     val out = try body finally sc.clearJobGroup()
-    org.apache.spark.TestBus.drain(sc)
+    org.apache.spark.GraftBus.drain(sc)
     (out, sc.statusTracker.getJobIdsForGroup(group).length)
   }
 }

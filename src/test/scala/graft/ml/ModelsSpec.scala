@@ -191,6 +191,82 @@ class ModelsSpec extends SparkSpec {
       html.contains("NDCG"), html.take(200))
   }
 
+  /** The `exact_job` branch of `BatchJob.run`: windowed detector, one
+    * injection, per-timestep XAI, persisted job table. */
+  private def pinnedRun(job: String) = {
+    val rng = new scala.util.Random(23)
+    val clean = (0 until 1000).map { i =>
+      (ts(i), 50.0 + 10.0 * math.sin(i / 25.0) + rng.nextGaussian(),
+        rng.nextGaussian() * 5.0)
+    }.toDF("timestamp", "v1", "v2")
+    val inj = AnomalySetting("spike", 1704067200L + 300, durationSec = 100,
+      magnitude = 6.0, percentage = 80.0, columns = Seq("v1"))
+    BatchJob.run(spark, job, clean, "timestamp", None,
+      injections = Seq(inj),
+      detector = WindowZScoreDetector(Seq("v1", "v2"), L = 3),
+      xai = Some(graft.jobs.XaiConfig(Seq("v1", "v2"),
+        methods = Seq("per_timestep_importance"))))
+  }
+
+  private def dropJobTables(job: String): Unit =
+    Seq("", "_scored").foreach(s => spark.sql(s"DROP TABLE IF EXISTS job_batch_$job$s"))
+
+  test("batch job (windowed detector, per-timestep XAI, persisted table): " +
+      "Spark job count and outputs pinned") {
+    try {
+      val (s, jobs) = withJobCount(pinnedRun("t_pin"))
+      // each fanned-out frame is materialized once (111 jobs before)
+      assert(jobs == 59, s"jobs $jobs")
+      // outputs equal those of the run before that change, bit for bit
+      assert((s.rows, s.injectedRows, s.flaggedRows) == ((1000L, 78L, 56L)))
+      assert(s.metricsTest == Map("accuracy" -> 0.9533, "f1_score" -> 0.0,
+        "fn" -> 0.0, "fp" -> 7.0, "precision" -> 0.0, "recall_tpr" -> 0.0,
+        "specificity_tnr" -> 0.9533, "tn" -> 143.0,
+        "total_predictions" -> 150.0, "tp" -> 0.0), s.metricsTest.toString)
+      assert(s.metricsAll == Map("accuracy" -> 0.872, "f1_score" -> 0.0448,
+        "fn" -> 75.0, "fp" -> 53.0, "precision" -> 0.0536,
+        "recall_tpr" -> 0.0385, "specificity_tnr" -> 0.9425, "tn" -> 869.0,
+        "total_predictions" -> 1000.0, "tp" -> 3.0), s.metricsAll.toString)
+      assert(s.xaiImportance == Map("per_timestep_importance" -> Map(
+        "v1" -> 1.7187256645993616, "v2" -> 1.5798134811925164)),
+        s.xaiImportance.toString)
+      assert(s.xaiNdcg == Map("per_timestep_importance" -> 1.0))
+      // the scored table: row count and order-insensitive xxhash64 sum
+      val scored = spark.table("job_batch_t_pin_scored")
+      val h = scored.agg(count(lit(1)), sum(pmod(
+        xxhash64(scored.columns.map(col).toIndexedSeq: _*), lit(2147483647L)))).head
+      assert((h.getLong(0), h.getLong(1)) == ((1000L, 1100422263566L)))
+    } finally dropJobTables("t_pin")
+  }
+
+  test("every Spark job of a batch run carries its stage tag; the caller's " +
+      "job group and description stay in force") {
+    val sc = spark.sparkContext
+    val group = s"stage-tags-${java.util.UUID.randomUUID()}"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group)
+          descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "caller")
+      try {
+        pinnedRun("t_tags")
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+      } finally sc.clearJobGroup()
+      org.apache.spark.GraftBus.drain(sc)
+      val tags = Seq("simulation", "training", "detection", "evaluation", "xai")
+        .map(st => s"graft:t_tags:$st").toSet
+      val seen = descs.toArray(Array.empty[String]).toSet
+      assert(seen == tags, seen.toString)
+    } finally {
+      sc.removeSparkListener(listener)
+      dropJobTables("t_tags")
+    }
+  }
+
   test("autoTune surfaces CV fold metrics into the run summary") {
     val summary = BatchJob.run(spark, "t_cv", series, "timestamp", Some("label"),
       injections = Nil,

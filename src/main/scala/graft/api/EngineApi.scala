@@ -45,10 +45,9 @@ class EngineApi(spark: SparkSession, datasetDir: String = "/tmp/graft_datasets")
   def getInjectionMethods: Seq[String] =
     Seq("spike", "lowered", "step", "offline", "custom")
 
-  /** get-xai-methods (`engine.py:339`): the capability set we deliver. */
-  def getXaiMethods: Seq[String] =
-    Seq("tree_importances", "permutation_importance", "lime_surrogate",
-      "nun_counterfactuals")
+  /** get-xai-methods (`engine.py:339`): exactly the methods [[runBatch]]
+    * runs (`BatchJob.xaiMethods`). */
+  def getXaiMethods: Seq[String] = BatchJob.xaiMethods
 
   /** get-data (`engine.py:257`): time-range scan of a job table. */
   def getData(jobName: String,

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.eval.Metrics
 import graft.inject.{AnomalySetting, Injector}
 import graft.ingest.Ingest
-import graft.ml.AnomalyDetector
+import graft.ml.{AnomalyDetector, FittedDetector, FittedSupervised, FittedWindowZScore, WindowZScoreDetector}
 import graft.window.Sequencer
+import graft.xai.Xai
 
 /** Per-job run summary (S15; reference writes `/data/<job>/logfile`,
   * `Backend/execute_calls.py:870-903`). */
@@ -35,14 +36,77 @@ case class XaiConfig(
   * flow: normalize → inject → persist job table → temporal split → fit →
   * detect → flag write-back → metrics → summary. Each stage is a DataFrame
   * transformation. A frame that more than one action reads (the job
-  * table, the split, the scored frame, each importance frame) is
-  * materialized once with `localCheckpoint()`, and the counts the summary
-  * needs ride that same job through `observe`, so no action re-runs a
-  * frame's lineage. Beyond that, the driver only collects scalar metrics,
-  * the importance rows and bounded model state. Each stage's Spark jobs
-  * carry the description `graft:<job>:<stage>`, stage ∈ {simulation,
-  * training, detection, evaluation, xai}. */
+  * table, the scored frame, each importance frame) is materialized once
+  * with `localCheckpoint()`, and the counts the summary needs ride that
+  * same job through `observe`, so no action re-runs a frame's lineage.
+  * Beyond that, the driver only collects scalar metrics, the importance
+  * rows and bounded model state. Each stage's Spark jobs carry the
+  * description `graft:<job>:<stage>`, stage ∈ {simulation, training,
+  * detection, evaluation, xai}.
+  *
+  * One order: `Ingest.normalize` makes `id` a 0-based dense rank over
+  * `(timestamp, measures…, label)` — unique by construction, since it is a
+  * row number — and injection rewrites values only, so the time order
+  * `(timestamp, id)` IS the `id` order. Every global-order consumer (the
+  * split, the windowed detector's fit and transform, the per-timestep XAI
+  * windows) takes `id + 1` as its rank and the row count as its total
+  * instead of re-ranking the table. The job-table checkpoint checks the
+  * precondition it can see for free, `min(id) = 0` and
+  * `max(id) = rows − 1`. */
 object BatchJob {
+
+  /** One XAI method: the scored frame (checkpointed, with `split`,
+    * `anomaly_score`, `is_anomaly`), the fitted model, the stage config
+    * and the frame's (rank, total) in time order → (feature, importance). */
+  private type Explainer = (DataFrame, FittedDetector, XaiConfig, (Column, Long)) => DataFrame
+
+  private val explainers: Seq[(String, Explainer)] = Seq(
+    ("permutation_importance", (detected, fitted, cfg, _) =>
+      Xai.permutationImportance(detected, fitted, cfg.features)),
+    ("nun_counterfactuals", (detected, _, cfg, _) => {
+      val anoms = detected.filter(col("is_anomaly")).limit(cfg.nInstances)
+      val normals = detected.filter(!col("is_anomaly")).limit(500)
+      Xai.counterfactualImportance(
+        Xai.nunCounterfactuals(anoms, normals, cfg.features), cfg.features)
+    }),
+    ("per_timestep_importance", (detected, fitted, cfg, rank) => {
+      // X2 over sequences: per-(feature, lag) occlusion attribution on
+      // flattened windows of the labeled anomalies, reduced to base
+      // features (xai_runner.py:197-308)
+      val fz = fitted match {
+        case f: FittedWindowZScore => f
+        case _ => throw new IllegalArgumentException(
+          "per_timestep_importance requires a windowed detector (M1)")
+      }
+      val flat = Sequencer.flattenWindows(
+        detected.drop("anomaly_score", "is_anomaly", "split"),
+        fz.cfg.seriesCol, "timestamp", cfg.features, fz.cfg.L,
+        orderTiebreak = Seq(col("id")), rank = Some(rank))
+      val perTs = Xai.perTimestepAttribution(
+        flat.filter(col("label") === 1), fz.transformFlat,
+        cfg.features, fz.cfg.L)
+      Xai.aggregateTimesteps(perTs)
+    }),
+    ("random_counterfactuals", (detected, fitted, cfg, _) => {
+      // X4 'random' DiCE mode; needs a per-row scorer, so windowed
+      // detectors should use per_timestep_importance instead
+      val clean = detected.drop("anomaly_score", "is_anomaly")
+      val anoms = detected.filter(col("is_anomaly")).limit(cfg.nInstances)
+        .drop("anomaly_score", "is_anomaly")
+      Xai.counterfactualImportance(Xai.randomCounterfactuals(
+        anoms, clean, fitted.transform, cfg.features), cfg.features)
+    }),
+    ("genetic_counterfactuals", (detected, fitted, cfg, _) => {
+      // X4 'genetic' DiCE mode: evolved validity/proximity/sparsity
+      val clean = detected.drop("anomaly_score", "is_anomaly")
+      val anoms = detected.filter(col("is_anomaly")).limit(cfg.nInstances)
+        .drop("anomaly_score", "is_anomaly")
+      Xai.counterfactualImportance(Xai.geneticCounterfactuals(
+        anoms, clean, fitted.transform, cfg.features), cfg.features)
+    }))
+
+  /** The XAI method names [[run]] accepts in `XaiConfig.methods`. */
+  val xaiMethods: Seq[String] = explainers.map(_._1)
 
   def run(spark: SparkSession,
           jobName: String,
@@ -53,7 +117,24 @@ object BatchJob {
           detector: AnomalyDetector,
           trainRatio: Double = 0.85,
           persistTable: Boolean = true,
-          xai: Option[XaiConfig] = None): RunSummary = {
+          xai: Option[XaiConfig] = None): RunSummary =
+    runScored(spark, jobName, raw, timeColumn, labelColumn, injections,
+      detector, trainRatio, persistTable, xai)._1
+
+  /** [[run]], also returning the scored frame (the job table with
+    * `split`, `anomaly_score` and `is_anomaly`; checkpointed) and the
+    * fitted model. */
+  private[graft] def runScored(spark: SparkSession,
+                               jobName: String,
+                               raw: DataFrame,
+                               timeColumn: String,
+                               labelColumn: Option[String],
+                               injections: Seq[AnomalySetting],
+                               detector: AnomalyDetector,
+                               trainRatio: Double,
+                               persistTable: Boolean,
+                               xai: Option[XaiConfig])
+      : (RunSummary, DataFrame, FittedDetector) = {
     def now() = System.nanoTime()
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val t0 = now()
@@ -88,23 +169,36 @@ object BatchJob {
         else Injector.injectAll(normalized, "id", "timestamp", injections)
       if (persistTable) Ingest.writeJobTable(injected, table)
       val (d, n) = observed(if (persistTable) spark.table(table) else injected,
-        count(lit(1)).as("rows"), count_if(col("injected_anomaly")).as("injected"))
+        count(lit(1)).as("rows"), count_if(col("injected_anomaly")).as("injected"),
+        min(col("id")).as("id_min"), max(col("id")).as("id_max"))
+      require(n("rows") == 0 || (n("id_min") == 0 && n("id_max") == n("rows") - 1),
+        s"job table ids span [${n("id_min")}, ${n("id_max")}] over ${n("rows")} " +
+          "rows: not Ingest.normalize's 0-based rank")
       (d, n("rows"), n("injected"))
     }
+    // (timestamp, id) order = id order: id + 1 is every row's global rank
+    val rank = col("id") + 1
+    val nTrain = Sequencer.trainRows(rows, trainRatio)
 
-    // W3 temporal split + training; the split feeds fit's probes, fit and
-    // detection, so it is materialized once
+    // W3 temporal split (a narrow projection over the job table) + training
     val (split, fitted) = timed("training") {
-      val split = Sequencer.temporalSplit(data, Seq(col("timestamp"), col("id")), trainRatio)
-        .localCheckpoint()
-      (split, detector.fit(split.filter(col("split") === "train")))
+      val split = Sequencer.temporalSplit(data, Seq(col("timestamp"), col("id")),
+        trainRatio, Some((rank, rows)))
+      val train = split.filter(col("split") === "train")
+      (split, detector match {
+        case z: WindowZScoreDetector => z.fit(train, Some((rank, nTrain)))
+        case d                       => d.fit(train)
+      })
     }
 
     // detection on the full table (reference detects test + all;
     // test-split metrics below reuse the same pass)
     val (detected, flagged) = timed("detection") {
-      val (d, n) = observed(fitted.transform(split),
-        count_if(col("is_anomaly")).as("flagged"))
+      val scored = fitted match {
+        case f: FittedWindowZScore => f.transform(split, Some((rank, rows)))
+        case f                     => f.transform(split)
+      }
+      val (d, n) = observed(scored, count_if(col("is_anomaly")).as("flagged"))
       (d, n("flagged"))
     }
 
@@ -131,53 +225,12 @@ object BatchJob {
     val (xaiImp, xaiNdcg) = xai match {
       case Some(cfg) if detected.columns.contains("label") => timed("xai") {
         val truth = injections.flatMap(_.columns).toSet
-        val results = cfg.methods.map {
-          case m @ "permutation_importance" =>
-            val imp = graft.xai.Xai.permutationImportance(
-              detected, fitted, cfg.features)
-            m -> imp
-          case m @ "nun_counterfactuals" =>
-            val anoms = detected.filter(col("is_anomaly")).limit(cfg.nInstances)
-            val normals = detected.filter(!col("is_anomaly")).limit(500)
-            val cfs = graft.xai.Xai.nunCounterfactuals(
-              anoms, normals, cfg.features)
-            m -> graft.xai.Xai.counterfactualImportance(cfs, cfg.features)
-          case m @ "per_timestep_importance" =>
-            // X2 over sequences: per-(feature, lag) occlusion attribution on
-            // flattened windows of the labeled anomalies, reduced to base
-            // features (xai_runner.py:197-308)
-            val fz = fitted match {
-              case f: graft.ml.FittedWindowZScore => f
-              case _ => throw new IllegalArgumentException(
-                "per_timestep_importance requires a windowed detector (M1)")
-            }
-            val flat = Sequencer.flattenWindows(
-              detected.drop("anomaly_score", "is_anomaly", "split"),
-              fz.cfg.seriesCol, "timestamp", cfg.features, fz.cfg.L,
-              orderTiebreak = Seq(col("id")))
-            val perTs = graft.xai.Xai.perTimestepAttribution(
-              flat.filter(col("label") === 1), fz.transformFlat,
-              cfg.features, fz.cfg.L)
-            m -> graft.xai.Xai.aggregateTimesteps(perTs)
-          case m @ "random_counterfactuals" =>
-            // X4 'random' DiCE mode; needs a per-row scorer, so windowed
-            // detectors should use per_timestep_importance instead
-            val clean = detected.drop("anomaly_score", "is_anomaly")
-            val anoms = detected.filter(col("is_anomaly")).limit(cfg.nInstances)
-              .drop("anomaly_score", "is_anomaly")
-            val cfs = graft.xai.Xai.randomCounterfactuals(
-              anoms, clean, fitted.transform, cfg.features)
-            m -> graft.xai.Xai.counterfactualImportance(cfs, cfg.features)
-          case m @ "genetic_counterfactuals" =>
-            // X4 'genetic' DiCE mode: evolved validity/proximity/sparsity
-            val clean = detected.drop("anomaly_score", "is_anomaly")
-            val anoms = detected.filter(col("is_anomaly")).limit(cfg.nInstances)
-              .drop("anomaly_score", "is_anomaly")
-            val cfs = graft.xai.Xai.geneticCounterfactuals(
-              anoms, clean, fitted.transform, cfg.features)
-            m -> graft.xai.Xai.counterfactualImportance(cfs, cfg.features)
-          case other => throw new IllegalArgumentException(s"xai method $other")
-        }.map { case (m, df) => // read by collect and, with a truth, by NDCG
+        val byName = explainers.toMap
+        val results = cfg.methods.map { m =>
+          val explain = byName.getOrElse(m,
+            throw new IllegalArgumentException(s"xai method $m"))
+          val df = explain(detected, fitted, cfg, (rank, rows))
+          // read by collect and, with a truth, by NDCG
           m -> (if (truth.isEmpty) df else df.localCheckpoint())
         }
         val imp = results.map { case (m, df) =>
@@ -186,7 +239,7 @@ object BatchJob {
         val ndcg =
           if (truth.isEmpty) Map.empty[String, Double]
           else results.map { case (m, df) =>
-            m -> graft.xai.Xai.ndcgVsInjected(df, truth, cfg.ndcgK)
+            m -> Xai.ndcgVsInjected(df, truth, cfg.ndcgK)
           }.toMap
         (imp, ndcg)
       }
@@ -195,12 +248,12 @@ object BatchJob {
     timings += "total" -> (now() - t0) / 1e9
 
     val cvMetrics = fitted match {
-      case fs: graft.ml.FittedSupervised => fs.cvMetrics
-      case _                             => Map.empty[String, Double]
+      case fs: FittedSupervised => fs.cvMetrics
+      case _                    => Map.empty[String, Double]
     }
 
-    RunSummary(jobName, "completed", rows, injectedRows, flagged,
-      mTest, mAll, timings.toMap, xaiImp, xaiNdcg, cvMetrics)
+    (RunSummary(jobName, "completed", rows, injectedRows, flagged,
+      mTest, mAll, timings.toMap, xaiImp, xaiNdcg, cvMetrics), detected, fitted)
   }
 
   /** S15: persist the summary as a one-record JSON file (the reference's

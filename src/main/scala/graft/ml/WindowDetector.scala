@@ -25,6 +25,19 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
   * `Window.partitionBy()` form saw — same cells, same in-order aggregation,
   * identical scores — while every partition works in parallel.
   *
+  * Time order: `tsCol`, then the job table's `id` whenever the frame
+  * carries one (every job table and every `StreamJob.detectSink` batch
+  * does), in the keyed window, the keyed calibration rank and the blocked
+  * rank alike — distinct rows sharing a timestamp otherwise score
+  * differently under another partitioning. On tie-free data the order,
+  * and so every score, is the same as by `tsCol` alone.
+  *
+  * Given-rank path: `fit(train, rank)` / `transform(df, rank)` take the
+  * frame's precomputed 1-based position in that order and its row count,
+  * and the no-series path then blocks on them instead of calling
+  * [[graft.ops.Ranks]] ([[graft.window.Sequencer.blockedByRank]]);
+  * `jobs.BatchJob` passes `id + 1`. A keyed detector ignores the rank.
+  *
   * For a cross-feature windowed-autoencoder equivalent (correlation
   * structure, not just per-feature level), see [[WindowPcaDetector]].
   */
@@ -48,54 +61,60 @@ case class WindowZScoreDetector(
     when(full, z2).otherwise(lit(null))
   }
 
-  /** Rolling-z score column for the keyed path (`seriesCol` present). */
-  private[ml] def scoreCol: Column =
-    zSum(Window.partitionBy(col(seriesCol.get)).orderBy(col(tsCol))
-      .rowsBetween(-(L - 1), Window.currentRow))
+  /** The frame's time order: `tsCol`, then `id` when the frame has one. */
+  private def timeOrder(df: DataFrame): Seq[Column] =
+    col(tsCol) +: graft.window.Sequencer.idTiebreak(df)
 
   /** Input frame + `__s` score column. The no-series path returns the
     * blocked frame WITH `__rn`/`__n` (global position / total) still
     * attached — [[fit]] reuses them for the calibration tail; `transform`
     * drops them. */
-  private[ml] def scoredFrame(df: DataFrame): DataFrame = seriesCol match {
-    case Some(_) => df.withColumn("__s", scoreCol)
-    case None =>
-      val b = graft.window.Sequencer.blockedByRank(df, Seq(col(tsCol)), L)
-      val w = Window.partitionBy(col("__blk")).orderBy(col("__rn"))
-        .rowsBetween(-(L - 1), Window.currentRow)
-      b.withColumn("__s", zSum(w))
-        .filter(!col("__ctx"))
-        .drop("__blk", "__ctx")
-  }
-
-  def fit(train: DataFrame): FittedDetector = {
-    // calibration = most-recent fraction of the scored rows (W4 parity)
-    val thr = seriesCol match {
+  private[ml] def scoredFrame(df: DataFrame, rank: Option[(Column, Long)]): DataFrame =
+    seriesCol match {
       case Some(c) =>
-        val scored = scoredFrame(train).filter(col("__s").isNotNull)
-        val withRank = scored.withColumn("__pr",
-          percent_rank().over(Window.partitionBy(col(c)).orderBy(col(tsCol))))
-        withRank.filter(col("__pr") >= 1.0 - calibrationFraction)
-          .agg(expr(s"percentile(__s, $percentile)")).head.getDouble(0)
+        df.withColumn("__s", zSum(Window.partitionBy(col(c)).orderBy(timeOrder(df): _*)
+          .rowsBetween(-(L - 1), Window.currentRow)))
+      case None =>
+        val b = graft.window.Sequencer.blockedByRank(df, timeOrder(df), L, rank)
+        val w = Window.partitionBy(col("__blk")).orderBy(col("__rn"))
+          .rowsBetween(-(L - 1), Window.currentRow)
+        b.withColumn("__s", zSum(w))
+          .filter(!col("__ctx"))
+          .drop("__blk", "__ctx")
+    }
+
+  def fit(train: DataFrame): FittedDetector = fit(train, None)
+
+  /** [[fit]] with `train`'s precomputed (position, total) in time order. */
+  def fit(train: DataFrame, rank: Option[(Column, Long)]): FittedWindowZScore = {
+    // calibration = most-recent fraction of the scored rows (W4 parity)
+    val scored = scoredFrame(train, rank).filter(col("__s").isNotNull)
+    val cal = seriesCol match {
+      case Some(c) =>
+        scored.withColumn("__pr",
+            percent_rank().over(Window.partitionBy(col(c)).orderBy(timeOrder(train): _*)))
+          .filter(col("__pr") >= 1.0 - calibrationFraction)
       case None =>
         // percent_rank twin from the global rank already on the blocked
         // frame: among scored rows (rn ≥ L), pr = (rn−L)/(n−L) — no
         // unpartitioned window anywhere in the fit
-        val scored = scoredFrame(train).filter(col("__s").isNotNull)
         scored.filter((col("__rn") - L).cast("double") >=
-            (lit(1.0) - calibrationFraction) * (col("__n") - L))
-          .agg(expr(s"percentile(__s, $percentile)")).head.getDouble(0)
+          (lit(1.0) - calibrationFraction) * (col("__n") - L))
     }
-    FittedWindowZScore(this, thr)
+    FittedWindowZScore(this,
+      cal.agg(expr(s"percentile(__s, $percentile)")).head.getDouble(0))
   }
 }
 
 case class FittedWindowZScore(cfg: WindowZScoreDetector, threshold: Double)
     extends FittedDetector {
-  def transform(df: DataFrame): DataFrame = {
+  def transform(df: DataFrame): DataFrame = transform(df, None)
+
+  /** [[transform]] with `df`'s precomputed (position, total) in time order. */
+  def transform(df: DataFrame, rank: Option[(Column, Long)]): DataFrame = {
     val scored = cfg.seriesCol match {
-      case Some(_) => cfg.scoredFrame(df)
-      case None    => cfg.scoredFrame(df).drop("__rn", "__n")
+      case Some(_) => cfg.scoredFrame(df, rank)
+      case None    => cfg.scoredFrame(df, rank).drop("__rn", "__n")
     }
     scored.withColumn("anomaly_score", col("__s")).drop("__s")
       .withColumn("is_anomaly",

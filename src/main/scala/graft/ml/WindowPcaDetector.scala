@@ -29,7 +29,9 @@ import graft.window.Sequencer
   * MLlib pipeline fit + one percentile agg; scoring broadcasts only the
   * d×k principal matrix and is per-row (`PcaDetector.scoreFrame`). The
   * calibration tail uses [[graft.ops.Ranks]]' two-pass rank, not an
-  * unpartitioned `percent_rank`.
+  * unpartitioned `percent_rank`. Windows and the calibration tail order
+  * by `tsCol`, then the job table's `id` when the frame has one (as
+  * [[WindowZScoreDetector]] does), so tied timestamps have one order.
   *
   * Oracle gate: `w30_window_pca_score` (queries/Curate.scala) runs this
   * detector's score-pipeline seams — the same `flattenWindows` lag
@@ -57,7 +59,8 @@ case class WindowPcaDetector(
   private[ml] def inner: PcaDetector = PcaDetector(lagNames, k)
 
   def fit(train: DataFrame): FittedDetector = {
-    val flat = Sequencer.flattenWindows(train, seriesCol, tsCol, features, L)
+    val flat = Sequencer.flattenWindows(train, seriesCol, tsCol, features, L,
+      orderTiebreak = Sequencer.idTiebreak(train))
     val (model, pc) = inner.fitPipeline(flat)
     val scored = inner.scoreFrame(model.transform(flat), pc)
     val cal = calibrationTail(scored)
@@ -66,16 +69,19 @@ case class WindowPcaDetector(
   }
 
   /** Most-recent `calibrationFraction` of scored windows (W4 parity). */
-  private def calibrationTail(scored: DataFrame): DataFrame = seriesCol match {
-    case Some(c) =>
-      scored.withColumn("__pr", percent_rank()
-          .over(Window.partitionBy(col(c)).orderBy(col(tsCol))))
-        .filter(col("__pr") >= 1.0 - calibrationFraction)
-    case None =>
-      graft.ops.Ranks
-        .globalRowNumberWithTotal(scored, Seq(col(tsCol)), "__rn", "__n")
-        .filter((col("__rn") - 1).cast("double") >=
-          (lit(1.0) - calibrationFraction) * (col("__n") - 1))
+  private def calibrationTail(scored: DataFrame): DataFrame = {
+    val order = col(tsCol) +: Sequencer.idTiebreak(scored)
+    seriesCol match {
+      case Some(c) =>
+        scored.withColumn("__pr", percent_rank()
+            .over(Window.partitionBy(col(c)).orderBy(order: _*)))
+          .filter(col("__pr") >= 1.0 - calibrationFraction)
+      case None =>
+        graft.ops.Ranks
+          .globalRowNumberWithTotal(scored, order, "__rn", "__n")
+          .filter((col("__rn") - 1).cast("double") >=
+            (lit(1.0) - calibrationFraction) * (col("__n") - 1))
+    }
   }
 }
 
@@ -84,7 +90,8 @@ case class FittedWindowPca(cfg: WindowPcaDetector, model: PipelineModel,
     extends FittedDetector {
   def transform(df: DataFrame): DataFrame = {
     val flat = Sequencer.flattenWindows(df, cfg.seriesCol, cfg.tsCol,
-      cfg.features, cfg.L, keepIncomplete = true)
+      cfg.features, cfg.L, orderTiebreak = Sequencer.idTiebreak(df),
+      keepIncomplete = true)
     // warm-up rows carry null lag cells → assembler keeps NaN → NaN error;
     // the window_complete mask turns that into the null-score contract
     val scored = cfg.inner.scoreFrame(model.transform(flat), pc)

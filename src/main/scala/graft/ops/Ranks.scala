@@ -33,6 +33,12 @@ import org.apache.spark.sql.expressions.Window
   * identical (interchangeable). The boundary probe is an eager (driver)
   * action — callers build rankings at pipeline-assembly time.
   *
+  * Call sites: 47 in `src/main`, most in the query packs. A frame that
+  * already carries its order's row number needs none: `jobs.BatchJob` and
+  * `z1_run_batch_e2e` pass `Ingest.normalize`'s `id + 1` to
+  * `Sequencer`'s given-rank path, so their split, windowed detector and
+  * per-timestep XAI windows run no rank beyond normalize's.
+  *
   * Skew: rows tied on the LEADING key always share a bucket (correctness
   * requires it), so a 100 TB frame whose leading key has massive tie runs
   * should rank on a finer leading key (e.g. add a coarse time bucket).

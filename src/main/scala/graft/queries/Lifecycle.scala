@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.eval.Metrics
@@ -27,10 +27,15 @@ import graft.window.Sequencer
   * prediction. Spike/custom are pure per-row arithmetic — bit-identical
   * cross-engine.
   *
-  * Scale shape: two two-pass ranks (normalize id, test alignment), one
-  * injection projection over a broadcast stats row, one localCheckpoint at
-  * the split fan-out (3 consumers), one data-sized left join (id ⋈ id — on a
-  * bucketed job table this is shuffle-free), two 1-row aggregates.
+  * Scale shape: one two-pass rank (the normalize id), one injection
+  * projection over a broadcast stats row, one localCheckpoint of the
+  * injected frame (its row count rides that job via `observe`), one
+  * data-sized left join (id ⋈ id — on a bucketed job table this is
+  * shuffle-free), two 1-row aggregates. The split and the test slice's
+  * alignment rank are narrow projections of `id`: normalize's id is the
+  * 0-based row number of the `(timestamp, id)` order (as in
+  * `jobs.BatchJob`), so the split rank is `id + 1` and the test rank is
+  * `id + 1 − nTrain`.
   */
 object Lifecycle {
 
@@ -47,26 +52,28 @@ object Lifecycle {
       val raw = t(s, dir, "events")
         .select(Det.epochS($"ts").as("when"), $"value", $"event_id")
       val norm = graft.ingest.Ingest.normalize(raw, "when")
-      // 2. inject: spike in train, custom in test (stat-free methods only)
-      // checkpoint the injected frame: temporalSplit's rank-boundary probe
-      // is an eager action that would otherwise recompute normalize+inject
+      // 2. inject: spike in train, custom in test (stat-free methods only);
+      // checkpointed for the split fan-out (thr, test, merge), with the
+      // row count taken in the same job
+      val obs = Observation()
       val inj = Injector.injectAll(norm, "id", "timestamp", Seq(
         AnomalySetting("spike", trainW._1, trainW._2 - trainW._1,
           magnitude = 3.0, percentage = 50.0, columns = Seq("value"), seed = 42L),
         AnomalySetting("custom", testW._1, testW._2 - testW._1,
           magnitude = 6.0, percentage = 40.0, columns = Seq("value"), seed = 43L)))
+        .observe(obs, count(lit(1)).as("n"))
         .localCheckpoint()
-      // 3. temporal 85/15 split; checkpoint the fan-out (thr, test, merge)
-      val snap = Sequencer.temporalSplit(inj, Seq($"timestamp", $"id"), 0.85)
-        .localCheckpoint()
+      val n = obs.get("n").asInstanceOf[Long]
+      val nTrain = Sequencer.trainRows(n, 0.85)
+      // 3. temporal 85/15 split: rank = id + 1 (see the scaladoc)
+      val snap = Sequencer.temporalSplit(inj, Seq($"timestamp", $"id"), 0.85,
+        Some(($"id" + 1, n)))
       // 4. "train": p95 threshold from the train slice (1-row broadcast)
       val thr = snap.filter($"split" === "train")
         .agg(round(expr("percentile(value, 0.95)"), 4).as("__thr"))
       // 5. detect + align: predictions exist only past the warm-up rank
-      val test = snap.filter($"split" === "test")
-        .select($"id", $"timestamp", $"value")
-      val preds = graft.ops.Ranks
-        .globalRowNumber(test, Seq($"timestamp", $"id"), "__trn")
+      val preds = snap.filter($"split" === "test")
+        .withColumn("__trn", $"id" + 1 - nTrain)
         .crossJoin(broadcast(thr))
         .select($"id".as("__pid"),
           ($"__trn" >= warmup && $"value" > $"__thr").as("__pred"))

@@ -33,12 +33,23 @@ object Sequencer {
     * Output keeps `__rn` (global position), `__n` (total rows), `__blk`,
     * `__ctx` — callers drop what they don't need. Shared with
     * [[graft.ml.WindowZScoreDetector]], whose default (no-series) scoring
-    * path partitions its rolling window by `__blk` the same way. */
+    * path partitions its rolling window by `__blk` the same way.
+    *
+    * Given-rank path: a caller that already holds the frame's 1-based
+    * position in `orderCols` order and its row count passes them as
+    * `rank = Some((position, total))`, and no [[graft.ops.Ranks]] call is
+    * made (no boundary probe, no rank shuffle). The caller vouches that
+    * `position` IS that order's row number: `jobs.BatchJob` passes
+    * `id + 1`, `Ingest.normalize`'s dense rank. */
   private[graft] def blockedByRank(df: DataFrame, orderCols: Seq[Column],
-                                   L: Int): DataFrame = {
+                                   L: Int,
+                                   rank: Option[(Column, Long)] = None): DataFrame = {
     val p = df.sparkSession.sessionState.conf.numShufflePartitions.toLong
-    val ranked = graft.ops.Ranks
-      .globalRowNumberWithTotal(df, orderCols, "__rn", "__n")
+    val ranked = rank match {
+      case Some((rn, n)) => df.withColumn("__rn", rn).withColumn("__n", lit(n))
+      case None => graft.ops.Ranks
+        .globalRowNumberWithTotal(df, orderCols, "__rn", "__n")
+    }
     val blk = expr(s"((__rn - 1) * $p) div __n")
     val ahead = least(expr(s"((__rn - 1 + ${L - 1}) * $p) div __n"),
       lit(p - 1))
@@ -52,6 +63,12 @@ object Sequencer {
       .withColumn("__ctx", lit(true))
     own.unionByName(ctx)
   }
+
+  /** The job table's stable `id` as a time-order tiebreak, when `df` has
+    * one: `Ingest.normalize` makes it unique, so `(ts, id)` is a total
+    * order even where distinct rows share a timestamp. */
+  private[graft] def idTiebreak(df: DataFrame): Seq[Column] =
+    if (df.columns.contains("id")) Seq(col("id")) else Nil
 
   /** W1: per-series sliding sequences of length L as nested arrays,
     * emitted only when the full window exists (W6 warm-up: first L-1 rows of
@@ -90,11 +107,15 @@ object Sequencer {
     * `keepIncomplete = true` keeps the warm-up rows too (their lag cells
     * null) and adds a boolean `window_complete` column instead of
     * filtering — for detectors that must flag every input row
-    * ([[graft.ml.WindowPcaDetector]]: warm-up rows score null/false). */
+    * ([[graft.ml.WindowPcaDetector]]: warm-up rows score null/false).
+    *
+    * `rank`: the no-series path's precomputed (position, total) in
+    * `tsCol +: orderTiebreak` order, as in [[blockedByRank]]. */
   def flattenWindows(df: DataFrame, seriesCol: Option[String], tsCol: String,
                      features: Seq[String], L: Int,
                      orderTiebreak: Seq[Column] = Nil,
-                     keepIncomplete: Boolean = false): DataFrame = seriesCol match {
+                     keepIncomplete: Boolean = false,
+                     rank: Option[(Column, Long)] = None): DataFrame = seriesCol match {
     case Some(s) =>
       val w = Window.partitionBy(col(s))
         .orderBy(col(tsCol) +: orderTiebreak: _*)
@@ -108,7 +129,7 @@ object Sequencer {
         sel.filter(col("__wpos") >= L) // W6 warm-up: incomplete windows emit nothing
           .drop("__wpos")
     case None =>
-      val b = blockedByRank(df, col(tsCol) +: orderTiebreak, L)
+      val b = blockedByRank(df, col(tsCol) +: orderTiebreak, L, rank)
       val w = Window.partitionBy(col("__blk")).orderBy(col("__rn"))
       val lagCols = for (f <- features; j <- 0 until L)
         yield lag(col(f), j).over(w).as(s"${f}_tm$j")
@@ -132,12 +153,23 @@ object Sequencer {
   /** W3: temporal 85/15 split (`Backend/execute_calls.py:333-346`): first
     * ⌊r·N⌋ rows by time order are "train", rest "test". Adds `split`.
     * Rank and total both come from [[graft.ops.Ranks]]' range-partitioned
-    * two-pass rank — no single-task global window, no driver-side count. */
-  def temporalSplit(df: DataFrame, orderCols: Seq[Column], trainRatio: Double = 0.85): DataFrame =
-    graft.ops.Ranks.globalRowNumberWithTotal(df, orderCols, "__rn", "__n")
-      .withColumn("split",
-        when(col("__rn") <= floor(col("__n") * trainRatio), "train").otherwise("test"))
-      .drop("__rn", "__n")
+    * two-pass rank — no single-task global window, no driver-side count.
+    * With a given `rank` (position, total), as in [[blockedByRank]], the
+    * split is one narrow projection `position <= trainRows(total, r)`. */
+  def temporalSplit(df: DataFrame, orderCols: Seq[Column], trainRatio: Double = 0.85,
+                    rank: Option[(Column, Long)] = None): DataFrame = rank match {
+    case Some((rn, n)) =>
+      df.withColumn("split", when(rn <= trainRows(n, trainRatio), "train").otherwise("test"))
+    case None =>
+      graft.ops.Ranks.globalRowNumberWithTotal(df, orderCols, "__rn", "__n")
+        .withColumn("split",
+          when(col("__rn") <= floor(col("__n") * trainRatio), "train").otherwise("test"))
+        .drop("__rn", "__n")
+  }
+
+  /** ⌊n·r⌋, the train-slice size of [[temporalSplit]]: the same double
+    * product and floor as its in-plan `floor(__n * r)`. */
+  def trainRows(n: Long, trainRatio: Double): Long = math.floor(n * trainRatio).toLong
 
   /** W5: balanced tail sampling (`Backend/execute_calls.py:145-331`): take the
     * most-recent ⌊n/2⌋ rows of each class; if a class cannot fill its quota

@@ -1,6 +1,8 @@
 package graft.api
 
 import graft.SparkSpec
+import graft.inject.AnomalySetting
+import graft.jobs.XaiConfig
 import java.nio.file.Files
 
 class EngineApiSpec extends SparkSpec {
@@ -39,5 +41,24 @@ class EngineApiSpec extends SparkSpec {
 
     api.cancelJob("apitest")
     assert(!api.getAllJobs.contains("job_batch_apitest"))
+  }
+
+  test("run-batch runs every XAI method get-xai-methods advertises") {
+    val api = new EngineApi(spark, Files.createTempDirectory("graft_ds").toString)
+    val feats = Seq("x", "y")
+    val inj = Seq(AnomalySetting("spike", 1704067200L + 60 * 300, durationSec = 60 * 40,
+      magnitude = 6.0, percentage = 80.0, columns = Seq("y")))
+    api.getXaiMethods.foreach { m =>
+      // per-timestep attribution needs a windowed detector; the other
+      // methods perturb and re-score single rows
+      val model = if (m == "per_timestep_importance") "window_zscore" else "pca_oneclass"
+      val job = s"xai_$m"
+      try {
+        val s = api.runBatch(job, csvPath, "t", Some("lbl"), model, feats, inj,
+          Some(XaiConfig(feats, Seq(m))))
+        assert(s.xaiImportance.get(m).map(_.keySet) == Some(feats.toSet), s"$m: $s")
+        assert(s.xaiNdcg.contains(m), s"$m: ${s.xaiNdcg}")
+      } finally api.cancelJob(job)
+    }
   }
 }

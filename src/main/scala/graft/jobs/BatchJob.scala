@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.eval.Metrics
 import graft.inject.{AnomalySetting, Injector}
 import graft.ingest.Ingest
-import graft.ml.{AnomalyDetector, FittedDetector, FittedSupervised, FittedWindowZScore, WindowZScoreDetector}
+import graft.ml.{AnomalyDetector, FittedDetector, FittedSupervised,
+  FittedWindowZScore, WindowZScoreDetector}
 import graft.window.Sequencer
 import graft.xai.Xai
 

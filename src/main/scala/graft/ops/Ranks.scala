@@ -11,10 +11,11 @@ import org.apache.spark.sql.expressions.Window
   * 100 TB. The equivalent distributed shape is a two-pass rank:
   *
   *   1. assign each row an order-aligned bucket: equi-depth boundaries on
-  *      the leading order key (one `approxQuantile` stats pass), bucket =
-  *      number of boundaries below the row's key — a PURE FUNCTION of row
-  *      values, so every consumer of the frame computes the identical
-  *      bucket for a row no matter how the data is partitioned;
+  *      the leading order key (one in-plan `percentile_approx` aggregate,
+  *      broadcast once), bucket = number of boundaries below the row's
+  *      key — a PURE FUNCTION of row values and the one boundary set, so
+  *      every consumer of the frame computes the identical bucket for a
+  *      row no matter how the data is partitioned;
   *   2. rank locally within each bucket (`row_number` partitioned by
   *      bucket — balanced, parallel, one hash shuffle);
   *   3. add the cumulative row count of all lower buckets — a ≤`buckets`-row
@@ -25,19 +26,19 @@ import org.apache.spark.sql.expressions.Window
   * own range exchange, each samples its own boundaries, and the offsets
   * branch can count under different boundaries than the rank branch
   * (observed as duplicated/shifted ranks under `coalesce(1)` writes).
-  * Value-derived buckets cannot disagree, and they also shuffle the data
-  * once instead of twice.
+  * Value-derived buckets over ONE broadcast boundary set cannot disagree,
+  * and they also shuffle the data once instead of twice.
   *
   * Determinism contract: `orderCols` must be ascending and form a total
   * order (append a tiebreak); rows tied on every order column must be fully
-  * identical (interchangeable). The boundary probe is an eager (driver)
-  * action — callers build rankings at pipeline-assembly time.
+  * identical (interchangeable). Building a ranked frame runs no Spark job:
+  * the boundaries are computed inside the plan, once per execution.
   *
-  * Call sites: 47 in `src/main`, most in the query packs. A frame that
-  * already carries its order's row number needs none: `jobs.BatchJob` and
-  * `z1_run_batch_e2e` pass `Ingest.normalize`'s `id + 1` to
-  * `Sequencer`'s given-rank path, so their split, windowed detector and
-  * per-timestep XAI windows run no rank beyond normalize's.
+  * Call sites: 47 in 15 files of `src/main`, most in the query packs. A
+  * frame that already carries its order's row number needs none:
+  * `jobs.BatchJob` and `z1_run_batch_e2e` pass `Ingest.normalize`'s
+  * `id + 1` to `Sequencer`'s given-rank path, so their split, windowed
+  * detector and per-timestep XAI windows run no rank beyond normalize's.
   *
   * Skew: rows tied on the LEADING key always share a bucket (correctness
   * requires it), so a 100 TB frame whose leading key has massive tie runs
@@ -88,36 +89,52 @@ object Ranks {
 
   /** Shared pass 1 of every global-order primitive here: append the
     * value-derived order-aligned bucket `__gr_b` (leading-key type probe,
-    * equi-depth `approxQuantile` internal boundaries, monotone bucket
-    * expression). Deterministic given the data; any monotone bucketing
-    * yields exact ranks/sums — boundary quality only affects balance.
-    * NaN/null keys sort first in both the bucket expression (bucket 0)
-    * and the window order. ONE implementation on purpose: rank and cumsum
-    * bucketing must never desynchronize. */
+    * equi-depth internal boundaries, monotone bucket expression).
+    * Deterministic given the data; any monotone bucketing yields exact
+    * ranks/sums — boundary quality only affects balance. Null keys fall in
+    * bucket 0 and NaN keys above every boundary, matching their place in
+    * the window order. ONE implementation on purpose: rank and cumsum
+    * bucketing must never desynchronize.
+    *
+    * The boundaries are an in-plan subplan, not a driver-side probe: a
+    * one-row `percentile_approx` aggregate over the non-null, non-NaN keys
+    * (accuracy 1000, i.e. `approxQuantile`'s 0.001 relative error),
+    * broadcast-crossed onto the rows. Building the frame runs no Spark
+    * job. Every consumer branch (the rank window and the offsets
+    * aggregate) reads the SAME broadcast: the final plan holds one
+    * boundary `BroadcastExchange` and the other branch reads it as a
+    * `ReusedExchange` (pinned in `RanksSpec`). Two independently computed
+    * boundary sets could disagree — the `repartitionByRange` bug above.
+    *
+    * NOT checkpointed on purpose (optimization r12, measured): the input
+    * lineage runs in the boundary aggregate and in the rank and offsets
+    * branches, but the aggregate and the offsets branch are COLUMN-PRUNED
+    * by Catalyst (key/value columns only), and execution reuses any
+    * shuffle their pruned lineages share — an unconditional
+    * localCheckpoint here materializes every column (fat gram/token arrays
+    * included) and measured 10–30× SLOWER construction on the dedup family
+    * (d13–d16: 50–108 s vs ≤ 4 s). Callers whose input lineage is
+    * expensive and narrow checkpoint at the call site instead. */
   private def bucketed(df: DataFrame, orderCols: Seq[Column],
                        numPartitions: Int): DataFrame = {
     val n = if (numPartitions > 0) numPartitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
     val leadType = df.select(orderCols.head.as("__gr_probe")).schema.head.dataType
-    // NOT checkpointed on purpose (optimization r12, measured): the input
-    // lineage does run ~3× per call (eager approxQuantile probe + the
-    // final plan's offsets and window branches), but the probe and the
-    // offsets branch are COLUMN-PRUNED by Catalyst (key/value columns
-    // only) — an unconditional localCheckpoint here materializes every
-    // column (fat gram/token arrays included) and measured 10–30× SLOWER
-    // construction on the dedup family (d13–d16: 50–108 s vs ≤ 4 s).
-    // Callers whose input lineage is expensive and narrow checkpoint at
-    // the call site instead.
     val keyed = df.withColumn("__gr_key", bucketKey(orderCols.head, leadType))
-    val bounds: Array[Double] =
-      if (n <= 1) Array.empty
-      else keyed.stat
-        .approxQuantile("__gr_key", (1 until n).map(_.toDouble / n).toArray, 0.001)
-        .filterNot(_.isNaN).distinct.sorted
-    val bucket = bounds
-      .map(b => when(col("__gr_key") > lit(b), 1).otherwise(0))
-      .reduceOption[Column](_ + _).getOrElse(lit(0))
-    keyed.withColumn("__gr_b", bucket).drop("__gr_key")
+    val key = col("__gr_key")
+    if (n <= 1) keyed.withColumn("__gr_b", lit(0)).drop("__gr_key")
+    else {
+      // NaN keys are nulled INSIDE the aggregate (which skips nulls), not
+      // filtered: a Filter would be pushed into the input lineage and stop
+      // the boundary subplan from reusing its shuffles. All-null input (or
+      // no rows) → no boundaries → bucket 0.
+      val bounds = keyed.agg(coalesce(array_distinct(percentile_approx(
+          when(!isnan(key), key), lit((1 until n).map(_.toDouble / n).toArray),
+          lit(1000))), lit(Array.empty[Double])).as("__gr_bounds"))
+      keyed.crossJoin(broadcast(bounds))
+        .withColumn("__gr_b", size(filter(col("__gr_bounds"), b => key > b)))
+        .drop("__gr_key", "__gr_bounds")
+    }
   }
 
   /** Append the INCLUSIVE prefix sum of `value` over the global
@@ -131,11 +148,10 @@ object Ranks {
     globalCumSums(df, orderCols, Seq((value, out)), numPartitions)
 
   /** [[globalCumSum]] for SEVERAL values over the SAME global order in ONE
-    * pass (optimization r12): one boundary probe, one shuffle, one Window
+    * pass (optimization r12): one boundary subplan, one shuffle, one Window
     * operator and one broadcast offsets join compute any number of prefix
     * sums — callers that chained `globalCumSum` calls paid all of that per
-    * value (and the second call's probe re-executed the first call's whole
-    * plan). Exactness is unchanged: each sum is the identical integer
+    * value. Exactness is unchanged: each sum is the identical integer
     * arithmetic over the identical window order. */
   def globalCumSums(df: DataFrame, orderCols: Seq[Column],
                     values: Seq[(Column, String)],

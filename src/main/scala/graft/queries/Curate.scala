@@ -2668,11 +2668,10 @@ object Curate {
     // boundaries again recomputed on survivors) → curriculum phase +
     // balanced shard assignment (p17) on the final corpus. Fresh LCG
     // seeds per stage. The two rank passes run on CHECKPOINTED survivor
-    // frames: Ranks' internal quantile probe is an action, and without
-    // the pin each pass would re-execute the whole upstream chain (the
-    // e4 checkpoint rule — expensive synthesized frames feeding multi-
-    // action consumers). 100 TB shape: each stage keeps the shape its
-    // standalone query audited; nothing new shuffles.
+    // frames, one seam per stage. Each frame feeds one action (Ranks
+    // builds no eager job); whether the seams still pay for themselves
+    // is a ROADMAP carry-over item. 100 TB shape: each stage keeps the
+    // shape its standalone query audited; nothing new shuffles.
     "z7_compose_e2e" -> ((s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents").select($"doc_id", $"source", $"text")
@@ -2714,7 +2713,7 @@ object Curate {
           .as("dsir_w"))
         .filter(Det.frac($"doc_id", Z7DsirSeed) <
           lit(1.0) / (lit(1.0) + exp(-$"dsir_w")))
-        .localCheckpoint() // two downstream actions (quantile probe + run)
+        .localCheckpoint() // the first rank pass's seam
       // stage 3: quality-stratified keep (p16 recipe on survivors)
       val q = sel.join(docs.select($"doc_id", $"text"), Seq("doc_id"))
         .select($"doc_id", $"source", $"dsir_w",
@@ -2729,7 +2728,7 @@ object Curate {
         .filter(Det.frac($"doc_id", Z7StratSeed) < least(lit(1.0),
           lit(StratKeep.toDouble) / $"__nb".cast("double")))
         .select($"doc_id", $"source", $"dsir_w", $"q10k", $"bucket")
-        .localCheckpoint() // same two-action shape as sel
+        .localCheckpoint() // the second rank pass's seam
       // stage 4: curriculum phases + balanced shards (p17) on the final
       graft.ops.Ranks.globalRowNumberWithTotal(
         kept, Seq($"q10k", $"doc_id"), "__rn2", "__n2")

@@ -885,7 +885,7 @@ object Embed {
       for (j <- 2 to KppK) {
         val d2 = vecs
           .select($"vec_id", minD2(cents).cast("long").as("d2i"))
-          .localCheckpoint() // cumsum's bucket probe + the total agg
+          .localCheckpoint() // the total agg + the cumsum pick
         val total = d2.agg(sum($"d2i")).head.getLong(0)
         val tgt = math.floor(
           graft.functions.Det.fracHost(j.toLong, KppSeed) *

@@ -536,8 +536,9 @@ object Stats {
         .groupBy($"user_id")
         .agg(max($"es").as("r"), count(lit(1)).as("f"),
           sum($"cents").as("m"))
-        .localCheckpoint() // three chained rank passes (each an eager
-      // boundary probe) must not re-aggregate the corpus per pass
+        .localCheckpoint() // three chained rank passes (each reads its
+      // input in its boundary, rank and offsets branches) must not
+      // re-aggregate the corpus per pass
       def q5(df: DataFrame, key: String, out: String): DataFrame =
         graft.ops.Ranks.globalRowNumberWithTotal(df,
             Seq((col(key) * -1L).as(s"__neg_$key"), col("user_id")),

@@ -128,8 +128,8 @@ object Survival {
       .withColumn("gw12", when($"d" < $"r",
         expr("(d * 1000000000000) div (r * (r - d))")).otherwise(0L))
     // ONE fused prefix-sum pass for both carries (optimization r12):
-    // the chained form paid a second probe + shuffle + window AND its
-    // probe re-executed the first cumsum's whole plan.
+    // the chained form paid a second boundary pass + shuffle + window
+    // over the first cumsum's whole plan.
     graft.ops.Ranks.globalCumSums(ev, Seq($"t"),
       Seq(($"l6", "cl6"), ($"gw12", "cgw")))
   }

@@ -2,8 +2,10 @@ package graft
 
 /** Physical-plan regression guard: the 100 TB plan shapes PLANS.md audits
   * by hand, pinned as assertions. Plans are built (not fully executed) at
-  * sf0.001 — construction still runs the eager stats probes some queries
-  * need (rank boundaries), which is fine at this SF. */
+  * sf0.001 — construction still runs the eager steps some queries need
+  * (localCheckpoints, iteration rounds), which is fine at this SF. Rank
+  * boundaries are in-plan, so the unexecuted plans of rank users carry
+  * each boundary subplan once per reading branch; execution reuses it. */
 class PlanAuditSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -240,19 +242,34 @@ class PlanAuditSpec extends SparkSpec {
           s"\n${p.take(3000)}")
     }
     // z3: the curation chain's tail spans the un-checkpointed stages —
-    // 4 SMJs are the corpus-sized count-table joins (never broadcast by
-    // design); 25 BHJs are the small-side stats/threshold frames
-    pins("z3_curate_e2e", exchanges = 53, hashEx = 24, rddScans = 28,
-      smj = 4, bhj = 25)
-    // z7: survivor frames are localCheckpoint'd (Ranks' quantile probe is
-    // an action), so the tail is the final shard/manifest stage
-    pins("z7_compose_e2e", exchanges = 5, hashEx = 2, rddScans = 2,
+    // 2 SMJs per tail copy are the corpus-sized count-table joins (never
+    // broadcast by design); the BHJs are the small-side stats/threshold
+    // frames. The unexecuted plan holds the tail four times: the cumsum's
+    // rank and offsets branches, each with its own copy of the boundary
+    // subplan; executed, the boundary copy is a ReusedExchange (next test)
+    pins("z3_curate_e2e", exchanges = 105, hashEx = 46, rddScans = 56,
+      smj = 8, bhj = 49)
+    // z7: survivor frames are localCheckpoint'd, so the tail is the final
+    // shard/manifest stage; its rank's rank and offsets branches each
+    // carry a copy of the boundary subplan (SinglePartition + broadcast
+    // exchanges over another scan of the `kept` seam) until execution
+    // reuses one
+    pins("z7_compose_e2e", exchanges = 9, hashEx = 2, rddScans = 4,
       smj = 0, bhj = 1)
     // z8: serving tail — everything upstream (IVF, int8 coarse, exact
     // re-rank) collapses into checkpointed pools; the tail is one
     // final-ranking exchange
     pins("z8_retrieve_e2e", exchanges = 1, hashEx = 0, rddScans = 1,
       smj = 0, bhj = 0)
+  }
+
+  test("z3: executed, the tail's rank boundary subplan is computed once " +
+      "and its other reader is a ReusedExchange") {
+    val df = SparkEntry.queries("z3_curate_e2e")(spark, dir)
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    val got = (RankBoundaries.computed(p).size, RankBoundaries.reused(p).size)
+    assert(got == ((1, 1)), s"(computed, reused) = $got\n${p.toString.take(3000)}")
   }
 
   test("bench top-cost family: exchange / checkpoint-seam / join-strategy " +

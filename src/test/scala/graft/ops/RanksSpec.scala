@@ -1,9 +1,13 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{RankBoundaries, SparkSpec}
 import graft.ingest.Ingest
 import graft.inject.{AnomalySetting, Injector}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 
 class RanksSpec extends SparkSpec {
   import spark.implicits._
@@ -119,5 +123,85 @@ class RanksSpec extends SparkSpec {
     assert(a == b)
     // sanity: something actually got injected
     assert(a.exists(_.getAs[Boolean]("injected_anomaly")))
+  }
+
+  test("building rank, rank-with-total and cumsum frames runs no Spark job") {
+    val df = (1 to 1000).map(i => ((i * 37) % 1000, i.toLong)).toDF("k", "v")
+    val (_, jobs) = withJobCount {
+      Seq(Ranks.globalRowNumber(df, Seq($"k", $"v"), "rn", numPartitions = 7),
+        Ranks.globalRowNumberWithTotal(df, Seq($"k", $"v"), "rn", "n",
+          numPartitions = 7),
+        Ranks.globalCumSums(df, Seq($"k", $"v"),
+          Seq(($"v", "cv"), ($"k".cast("long"), "ck")), numPartitions = 7))
+        .foreach(_.queryExecution.executedPlan)
+    }
+    assert(jobs == 0)
+  }
+
+  /** Executes `df`; its final plan's (computed, reused) boundary
+    * broadcasts. */
+  private def boundaryExchanges(df: DataFrame): (Int, Int) = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    (RankBoundaries.computed(plan).size, RankBoundaries.reused(plan).size)
+  }
+
+  test("the boundary subplan runs once per plan: one percentile_approx " +
+      "broadcast, which the other branch reads as a ReusedExchange") {
+    val df = spark.range(0, 20000, 1, 4)
+      .select(($"id" * 7919 % 5000).as("k"), $"id".as("v"))
+    val withTotal = Ranks.globalRowNumberWithTotal(df, Seq($"k", $"v"), "rn",
+      "n", numPartitions = 8)
+    val cum = Ranks.globalCumSum(df, Seq($"k", $"v"), $"v", "cs",
+      numPartitions = 8)
+    assert(boundaryExchanges(withTotal) == ((1, 1)))
+    assert(boundaryExchanges(cum) == ((1, 1)))
+  }
+
+  /** `df` (key `k`, unique tiebreak `v`, value `w`) ranked and prefix-summed
+    * by `Ranks` and by the one-task global window, joined on `v`: the
+    * number of rows where the two disagree, and the row count. */
+  private def mismatches(df: DataFrame, numPartitions: Int): (Long, Long) = {
+    val order = Seq($"k", $"v")
+    val got = Ranks.globalCumSum(
+      Ranks.globalRowNumber(df, order, "rn", numPartitions), order, $"w",
+      "cs", numPartitions)
+    val one = Window.orderBy(order: _*)
+    val want = df.select($"v", row_number().over(one).as("rn_1"),
+      sum($"w").over(one.rowsBetween(Window.unboundedPreceding,
+        Window.currentRow)).as("cs_1"))
+    val r = got.join(want, "v").agg(
+      count(when($"rn" =!= $"rn_1" || $"cs" =!= $"cs_1", 1)), count(lit(1)))
+      .head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  test("property: globalRowNumber ≡ row_number() and globalCumSum ≡ a " +
+      "one-task window prefix sum, on keys with tie runs, nulls and NaN") {
+    val key = Gen.frequency(
+      1 -> Gen.const(Option.empty[Double]), 1 -> Gen.const(Some(Double.NaN)),
+      8 -> Gen.choose(0, 12).map(i => Some(i.toDouble)))
+    val cases = for {
+      rows <- Gen.listOf(Gen.zip(key, Gen.choose(-50L, 50L)))
+      inParts <- Gen.choose(1, 8)
+      nParts <- Gen.choose(1, 32)
+    } yield (rows, inParts, nParts)
+    val params = Test.Parameters.default.withMinSuccessfulTests(20)
+      .withMaxSize(300).withInitialSeed(Seed(42L))
+    val res = Test.check(params, Prop.forAllNoShrink(cases) {
+      case (rows, inParts, nParts) =>
+        val df = rows.zipWithIndex
+          .map { case ((k, w), i) => (k, i.toLong, w) }
+          .toDF("k", "v", "w").repartition(inParts)
+        mismatches(df, nParts) == ((0L, rows.size.toLong))
+    })
+    assert(res.passed, res.status)
+  }
+
+  test("200k rows: the approximate sketch still gives exact ranks and sums") {
+    val df = spark.range(0, 200000, 1, 8)
+      .select(($"id" * 7919 % 50000).as("k"), $"id".as("v"),
+        ($"id" % 97 - 48).as("w"))
+    assert(mismatches(df, 32) == ((0L, 200000L)))
   }
 }

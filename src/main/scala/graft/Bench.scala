@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-round benchmark: runs every SparkEntry query against
+/** Per-round benchmark: runs every SparkEntry query (or only the queries
+  * named as arguments: `runMain graft.Bench [query ...]`) against
   * `SPARK_GRAFT_SF_DIR` and prints ONE SHORT JSON line as the LAST stdout
   * line (the driver's tail capture keeps only ~2 KB, so per-query detail
   * must NOT ride on stdout — it goes to stderr and to a sidecar file
@@ -22,6 +23,13 @@ import org.apache.spark.sql.SparkSession
   * `calibration` block (and `calib_min`/`calib_med` on stdout) so
   * cross-round per-query comparisons can be contention-normalized.
   *
+  * Job ledger: each rep builds the frame under the job description
+  * `graft:<query>:construct` (jobs that construction tags itself, e.g.
+  * `BatchJob`'s stages, count there too) and writes it under
+  * `graft:<query>:execute`, which includes planning. The detail file's
+  * `ledger` block and stderr give each phase's seconds and [[JobLedger]]
+  * counts from the query's min rep.
+  *
   * Robustness to the driver's external kill (r12: rc=124 at BOTH core
   * counts left `parsed: null` — zero observable numbers for the round):
   *  - `SPARK_GRAFT_BENCH_BUDGET_S` (default 1500) is a wall-clock budget.
@@ -36,6 +44,9 @@ import org.apache.spark.sql.SparkSession
   *    shutdown hooks do run under the driver's timeout kill. */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val unknown = args.filterNot(SparkEntry.queries.keySet)
+    require(unknown.isEmpty,
+      s"unknown queries: ${unknown.mkString(", ")}; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1500").toDouble
@@ -43,14 +54,26 @@ object Bench {
     def elapsedS: Double = (System.nanoTime() - startNano) / 1e9
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
+    val ledger = JobLedger.register(spark.sparkContext)
     def r3(v: Double): String = f"$v%.3f"
 
     // Incrementally updated record of completed queries: the shutdown hook
     // reads this to emit a valid partial summary on an external kill.
-    // (name -> successful rep times so far); insertion-ordered.
-    val recorded = new java.util.concurrent.ConcurrentHashMap[String, Seq[Double]]()
-    val order = collection.mutable.ArrayBuffer[String]()
+    // (name -> successful reps so far, each its time and ledger JSON);
+    // queries run in name order, so the sorted map lists them in run order.
+    val recorded =
+      new java.util.concurrent.ConcurrentSkipListMap[String, Seq[(Double, String)]]()
+    def times(name: String): Option[Seq[Double]] =
+      Option(recorded.get(name)).map(_.map(_._1))
+    // (sum of min times, sum of spreads, failures) over `names`
+    def totals(names: Seq[String]): (Double, Double, Int) = {
+      val ts = names.flatMap(times)
+      (ts.flatMap(_.minOption).sum,
+        ts.filter(_.nonEmpty).map(t => t.max - t.min).sum, ts.count(_.isEmpty))
+    }
     val calibTimes = collection.mutable.ArrayBuffer[Double]()
+    // the first probe pays codegen warmup, not contention
+    def calib = calibTimes.synchronized(calibTimes.drop(1).toSeq.sorted)
     var finalLinePrinted = false // guarded by printLock
     val printLock = new Object
     @volatile var escalateFlag = false
@@ -60,19 +83,16 @@ object Bench {
     @volatile var escalationSkippedBudget = false
 
     def summaryLine(partial: Boolean): String = {
-      val names = order.synchronized(order.toSeq)
-      val mins = names.flatMap(n => Option(recorded.get(n)).flatMap(_.minOption))
-      val spreads = names.flatMap(n =>
-        Option(recorded.get(n)).filter(_.nonEmpty).map(ts => ts.max - ts.min))
-      val failures = names.count(n =>
-        Option(recorded.get(n)).exists(_.isEmpty))
-      val calib = calibTimes.synchronized(calibTimes.drop(1).toSeq.sorted)
-      val calibShort = if (calib.isEmpty) "" else
-        s""","calib_min":${r3(calib.head)},"calib_med":${r3(calib(calib.size / 2))}"""
+      val names = recorded.keySet.toArray(Array.empty[String]).toSeq
+      val (total, spread, failures) = totals(names)
+      val calibShort = calib match {
+        case Seq() => ""
+        case c => s""","calib_min":${r3(c.head)},"calib_med":${r3(c(c.size / 2))}"""
+      }
       val partialPart = if (partial) ""","partial":true""" else ""
       val skipPart =
         if (escalationSkippedBudget) ""","escalation_skipped_budget":true""" else ""
-      s"""{"metric":"total","value":${r3(mins.sum)},"unit":"sec","n_queries":${names.size},"reps":$effReps,"reps_is_attempted_ceiling":true,"failures":$failures,"spread_total":${r3(spreads.sum)},"escalated":$escalateFlag$skipPart$calibShort$partialPart,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${names.size},"reps":$effReps,"reps_is_attempted_ceiling":true,"failures":$failures,"spread_total":${r3(spread)},"escalated":$escalateFlag$skipPart$calibShort$partialPart,"sf":"$sfDir"}"""
     }
     // The final print and the shutdown hook's partial print share one lock
     // and the flag is set inside it, so a kill can never add a second line.
@@ -93,29 +113,45 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
       calibTimes.synchronized { calibTimes += (System.nanoTime() - t0) / 1e9 }
     }
+    def mb(bytes: Long): String = r3(bytes / 1048576.0)
+    def phaseJson(sec: Double, work: Iterable[TagCounts]): String = {
+      val c = work.foldLeft(TagCounts())(_ + _)
+      s"""{"s":${r3(sec)},"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},"shuffle_read_mb":${mb(c.shuffleReadBytes)},"shuffle_write_mb":${mb(c.shuffleWriteBytes)},"spill_mb":${mb(c.spillBytes)}}"""
+    }
     // A rep that throws must NOT contribute its time-to-throw to the min —
     // a crashed query is fast, and a swallowed failure reads as a speedup
     // (r4's z1 "0.055 s" was exactly this). Failed reps are excluded; a
     // query with zero successful reps reports null and counts as a failure.
     def runRep(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-               rep: Int): Option[Double] = {
+               rep: Int): Option[(Double, String)] = {
+      val sc = spark.sparkContext
       spark.catalog.clearCache() // drop per-query cached frames between runs
+      ledger.read() // drop the jobs of earlier reps and probes
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
+        val df = JobLedger.tagged(sc, s"graft:$name:construct")(fn(spark, sfDir))
+        val t1 = System.nanoTime()
+        val executeTag = s"graft:$name:execute"
+        JobLedger.tagged(sc, executeTag)(
+          df.write.format("noop").mode("overwrite").save())
+        val t2 = System.nanoTime()
+        // the write runs under one tag; every other tag's jobs ran while
+        // the frame was built
+        val (execute, construct) = ledger.read().partition(_._1 == executeTag)
+        Some(((t2 - t0) / 1e9,
+          s"""{"construct":${phaseJson((t1 - t0) / 1e9, construct.values)},"execute":${phaseJson((t2 - t1) / 1e9, execute.values)}}"""))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name rep$rep FAILED: ${e.getMessage}")
         None
       }
     }
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => args.isEmpty || args.contains(name) }
+    val names = sorted.map(_._1)
     calibRep(); calibRep(); calibRep() // 3 at start (first = codegen warmup)
     sorted.zipWithIndex.foreach { case ((name, fn), i) =>
       if (i > 0 && i % 25 == 0) calibRep() // interleaved every 25 queries
-      val ts = (1 to reps).flatMap(runRep(name, fn, _))
-      order.synchronized { order += name }
-      recorded.put(name, ts)
+      recorded.put(name, (1 to reps).flatMap(runRep(name, fn, _)))
     }
     // Contention escalation: when the per-query spreads sum to >25% of the
     // total, min-of-`reps` demonstrably inflates the headline (the r7
@@ -125,10 +161,7 @@ object Bench {
     // wall clock (more under the very contention that triggers it); only
     // run it when that provably fits `SPARK_GRAFT_BENCH_BUDGET_S`,
     // because a killed bench (rc=124) reports nothing at all.
-    val passTotal = sorted.flatMap { case (n, _) =>
-      Option(recorded.get(n)).flatMap(_.minOption) }.sum
-    val passSpread = sorted.flatMap { case (n, _) =>
-      Option(recorded.get(n)).filter(_.nonEmpty).map(ts => ts.max - ts.min) }.sum
+    val (passTotal, passSpread, _) = totals(names)
     val wantEscalate = passTotal > 0 && passSpread / passTotal > 0.25
     val escalationFits = elapsedS + passTotal * 1.25 < budgetS
     escalateFlag = wantEscalate && escalationFits
@@ -146,45 +179,38 @@ object Bench {
       if (prev.nonEmpty) recorded.put(name, prev ++ runRep(name, fn, reps + 1))
     }
     if (escalateFlag) effReps = reps + 1
-    val results = sorted.map { case (name, _) =>
-      val times = Option(recorded.get(name)).getOrElse(Seq.empty)
-      val min = if (times.isEmpty) None else Some(times.min)
-      val spread = if (times.isEmpty) None else Some(times.max - times.min)
+    // per query: min, spread, successful reps, ledger of the min rep
+    val results = names.map { name =>
+      val ts = times(name).getOrElse(Seq.empty)
+      val best = Option(recorded.get(name)).flatMap(_.minByOption(_._1))
+      val min = best.map(b => r3(b._1))
+      val spread = if (ts.isEmpty) None else Some(r3(ts.max - ts.min))
       System.err.println(
-        s"[bench] $name ok=${times.size} reps=[${times.map(r3).mkString(",")}]" +
-          s" min=${min.map(r3).getOrElse("FAILED")} s" +
-          s" spread=${spread.map(r3).getOrElse("-")} s")
-      (name, min, spread, times.size)
+        s"[bench] $name ok=${ts.size} reps=[${ts.map(r3).mkString(",")}]" +
+          s" min=${min.getOrElse("FAILED")} s spread=${spread.getOrElse("-")} s")
+      best.foreach(b => System.err.println(s"[bench] $name ledger ${b._2}"))
+      Seq(min.getOrElse("null"), spread.getOrElse("null"), ts.size.toString,
+        best.fold("null")(_._2))
     }
+    def column(i: Int): String = names.zip(results.map(_(i)))
+      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     // `reps` in the artifacts is the ATTEMPTED ceiling, not the achieved
     // count: a query whose first-pass reps all failed never gets the
     // escalation rep, and an escalation rep can itself fail (r8 ADVICE).
     // The achieved per-query counts are the `ok` map in the detail file.
-    val failed = results.collect { case (k, None, _, _) => k }
-    val total = results.flatMap(_._2).sum
-    val totalSpread = results.flatMap(_._3).sum
-    val qs = results.map { case (k, v, _, _) =>
-      "\"" + k + "\":" + v.map(r3).getOrElse("null")
-    }.mkString("{", ",", "}")
-    val sp = results.map { case (k, _, s, _) =>
-      "\"" + k + "\":" + s.map(r3).getOrElse("null")
-    }.mkString("{", ",", "}")
-    val okm = results.map { case (k, _, _, ok) =>
-      "\"" + k + "\":" + ok
-    }.mkString("{", ",", "}")
+    val (total, totalSpread, _) = totals(names)
+    val failed = names.filter(n => times(n).forall(_.isEmpty))
     calibRep(); calibRep(); calibRep() // 3 at end
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // calibration block: drop the very first probe (codegen warmup tax,
-    // not contention), report min / median / max / all times. The
-    // contention factor a reader should use is median/min WITHIN the
-    // run, and min-vs-min ACROSS rounds for box drift.
-    val calib = calibTimes.drop(1).toSeq.sorted
-    val calibJson = if (calib.isEmpty) "null" else {
-      val med = calib(calib.size / 2)
-      s"""{"n":${calib.size},"min":${r3(calib.head)},"median":${r3(med)},"max":${r3(calib.last)},"times":[${calibTimes.map(r3).mkString(",")}]}"""
+    // calibration block: min / median / max / all times. The contention
+    // factor a reader should use is median/min WITHIN the run, and
+    // min-vs-min ACROSS rounds for box drift.
+    val calibJson = calib match {
+      case Seq() => "null"
+      case c => s"""{"n":${c.size},"min":${r3(c.head)},"median":${r3(c(c.size / 2))},"max":${r3(c.last)},"times":[${calibTimes.map(r3).mkString(",")}]}"""
     }
     val detail =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps_attempted":$effReps,"failures":${failed.size},"spread_total":${r3(totalSpread)},"escalated":$escalateFlag,"escalation_skipped_budget":$escalationSkippedBudget,"elapsed_wall_s":${r3(elapsedS)},"calibration":$calibJson,"failed":$failedJson,"queries":$qs,"spread":$sp,"ok":$okm,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps_attempted":$effReps,"failures":${failed.size},"spread_total":${r3(totalSpread)},"escalated":$escalateFlag,"escalation_skipped_budget":$escalationSkippedBudget,"elapsed_wall_s":${r3(elapsedS)},"calibration":$calibJson,"failed":$failedJson,"queries":${column(0)},"spread":${column(1)},"ok":${column(2)},"ledger":${column(3)},"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter("bench_detail.json")
       try w.println(detail) finally w.close()

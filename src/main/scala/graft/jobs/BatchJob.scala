@@ -2,13 +2,14 @@ package graft.jobs
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.JobLedger
 import graft.eval.Metrics
 import graft.inject.{AnomalySetting, Injector}
 import graft.ingest.Ingest
 import graft.ml.{AnomalyDetector, FittedDetector, FittedSupervised,
   FittedWindowZScore, WindowZScoreDetector}
 import graft.window.Sequencer
-import graft.xai.Xai
+import graft.xai.{Lime, Xai}
 
 /** Per-job run summary (S15; reference writes `/data/<job>/logfile`,
   * `Backend/execute_calls.py:870-903`). */
@@ -69,6 +70,13 @@ object BatchJob {
       val normals = detected.filter(!col("is_anomaly")).limit(500)
       Xai.counterfactualImportance(
         Xai.nunCounterfactuals(anoms, normals, cfg.features), cfg.features)
+    }),
+    ("lime", (detected, fitted, cfg, _) => {
+      // X3: a local linear surrogate around each of up to nInstances
+      // flagged rows, mean |weight| per feature
+      val anoms = detected.filter(col("is_anomaly")).limit(cfg.nInstances)
+      Lime.importance(detected.sparkSession,
+        Lime.explain(anoms, detected, fitted, cfg.features), cfg.features)
     }),
     ("per_timestep_importance", (detected, fitted, cfg, rank) => {
       // X2 over sequences: per-(feature, lag) occlusion attribution on
@@ -139,13 +147,8 @@ object BatchJob {
     def now() = System.nanoTime()
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val t0 = now()
-    val sc = spark.sparkContext
-    val callerDesc = sc.getLocalProperty("spark.job.description")
-    // a description, not a job group: the caller's group stays in force
-    def stage[T](name: String)(body: => T): T = {
-      sc.setJobDescription(s"graft:$jobName:$name")
-      try body finally sc.setJobDescription(callerDesc)
-    }
+    def stage[T](name: String)(body: => T): T =
+      JobLedger.tagged(spark.sparkContext, s"graft:$jobName:$name")(body)
     def timed[T](name: String)(body: => T): T = {
       val t = now()
       val out = stage(name)(body)

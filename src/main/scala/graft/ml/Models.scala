@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.{GraftModels, Pipeline, PipelineModel}
 import org.apache.spark.ml.classification._
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.{Imputer, MinMaxScaler, StandardScaler, VectorAssembler}
@@ -102,7 +102,7 @@ case class SupervisedDetector(
         }.toMap + ("cv_auc_best" -> cvm.avgMetrics.max)
         cvm.bestModel.asInstanceOf[PipelineModel]
       }
-    FittedSupervised(model, algo, cvMetrics)
+    FittedSupervised(GraftModels.withoutSummaries(model), algo, cvMetrics)
   }
 }
 

@@ -43,6 +43,42 @@ class EngineApiSpec extends SparkSpec {
     assert(!api.getAllJobs.contains("job_batch_apitest"))
   }
 
+  test("run-batch runs every model get-models advertises") {
+    val api = new EngineApi(spark, Files.createTempDirectory("graft_ds").toString)
+    api.getModels.foreach { m =>
+      val job = s"model_$m"
+      try {
+        val s = api.runBatch(job, csvPath, "t", Some("lbl"), m, Seq("x", "y"))
+        assert(s.status == "completed" && s.rows == 600, s"$m: $s")
+        assert(s.metricsAll("total_predictions") == 600, s"$m: ${s.metricsAll}")
+        assert(s.flaggedRows == s.metricsAll("tp") + s.metricsAll("fp"), s"$m: $s")
+      } finally api.cancelJob(job)
+    }
+  }
+
+  test("decision tree on a spike injected into one column ranks that column " +
+      "first by permutation importance") {
+    // an unlabeled, anomaly-free series: the injected rows are the labels
+    val rng = new scala.util.Random(11)
+    val sb = new StringBuilder("time,reading,aux\n")
+    (0 until 2000).foreach { i =>
+      sb.append(s"${1704067200 + i},${50 + 10 * math.sin(i / 40.0) + rng.nextGaussian()},${rng.nextGaussian()}\n")
+    }
+    val csv = Files.createTempFile("graft_api_clean", ".csv")
+    Files.writeString(csv, sb.toString)
+    val api = new EngineApi(spark, Files.createTempDirectory("graft_ds").toString)
+    val feats = Seq("reading", "aux")
+    val inj = AnomalySetting("spike", 1704067200L + 1000, durationSec = 120,
+      magnitude = 5.0, percentage = 90.0, columns = Seq("reading"))
+    try {
+      val s = api.runBatch("dt_spike", csv.toString, "time", None, "decision_tree",
+        feats, Seq(inj), Some(XaiConfig(feats)))
+      assert(s.injectedRows > 80, s.toString)
+      assert(s.metricsAll("recall_tpr") > 0.5, s.metricsAll.toString)
+      assert(s.xaiNdcg("permutation_importance") == 1.0, s.xaiImportance.toString)
+    } finally api.cancelJob("dt_spike")
+  }
+
   test("run-batch runs every XAI method get-xai-methods advertises") {
     val api = new EngineApi(spark, Files.createTempDirectory("graft_ds").toString)
     val feats = Seq("x", "y")

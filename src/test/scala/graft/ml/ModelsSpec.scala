@@ -243,27 +243,23 @@ class ModelsSpec extends SparkSpec {
   test("every Spark job of a batch run carries its stage tag; the caller's " +
       "job group and description stay in force") {
     val sc = spark.sparkContext
-    val group = s"stage-tags-${java.util.UUID.randomUUID()}"
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == group)
-          descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(listener)
+    val ledger = graft.JobLedger.register(sc)
     try {
-      sc.setJobGroup(group, "caller")
+      // an untagged job of the run would carry the caller's description
+      val caller = s"stage-tags-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(caller, caller)
       try {
         pinnedRun("t_tags")
-        assert(sc.getLocalProperty("spark.job.description") == "caller")
+        assert(sc.getLocalProperty("spark.job.description") == caller)
+        assert(sc.getLocalProperty("spark.jobGroup.id") == caller)
       } finally sc.clearJobGroup()
-      org.apache.spark.GraftBus.drain(sc)
       val tags = Seq("simulation", "training", "detection", "evaluation", "xai")
         .map(st => s"graft:t_tags:$st").toSet
-      val seen = descs.toArray(Array.empty[String]).toSet
+      val seen = ledger.read().keySet
+        .filter(t => t.startsWith("graft:t_tags:") || t == caller)
       assert(seen == tags, seen.toString)
     } finally {
-      sc.removeSparkListener(listener)
+      sc.removeSparkListener(ledger)
       dropJobTables("t_tags")
     }
   }

@@ -4,10 +4,11 @@
 Usage: tools/bench_diff.py <detail_a.json> <detail_b.json> [--flag-ratio=R]
 (the space-separated form `--flag-ratio R` is accepted too)
 
-Reads two bench detail files (Bench's --detail output), normalizes each
-run's per-query seconds by that run's measured contention factor, and
-prints a ranked table of normalized moves so "did q regress or was the
-box busy?" is a tool output instead of archaeology.
+Reads two bench detail files (the `bench_detail.json` Bench writes in its
+working directory), normalizes each run's per-query seconds by that run's
+measured contention factor, and prints a ranked table of normalized moves
+so "did q regress or was the box busy?" is a tool output instead of
+archaeology.
 
 Normalization: each run's calibration median (the fixed CPU-bound probe
 Bench interleaves through the run) is a direct measure of that run's
@@ -21,7 +22,11 @@ states which normalization was used per run.
 
 Flags queries whose normalized ratio moves more than --flag-ratio
 (default 2.0) in either direction; exit code 0 always (it is a report,
-not a gate — min-of-k spread and plan pins adjudicate, this ranks)."""
+not a gate — min-of-k spread and plan pins adjudicate, this ranks).
+
+When both files carry Bench's `ledger` block, also lists every query
+whose construct or execute job count or shuffle-write MB changed. Counts
+do not depend on host contention, so they are compared as they are."""
 import json
 import sys
 
@@ -36,6 +41,26 @@ def calib_median(d):
     if isinstance(c, dict) and c.get("median"):
         return float(c["median"]), "calibration median"
     return None, None
+
+
+def ledger_moves(da, db):
+    """(query, [move, ...]) for every query whose per-phase job count or
+    shuffle-write MB differs, or None when either file has no ledger."""
+    la, lb = da.get("ledger"), db.get("ledger")
+    if not isinstance(la, dict) or not isinstance(lb, dict):
+        return None
+    moves = []
+    for k in sorted(set(la) & set(lb)):
+        a, b = la[k], lb[k]
+        if not a or not b:
+            continue
+        m = [f"{ph} {key} {a[ph][key]}->{b[ph][key]}"
+             for ph in ("construct", "execute")
+             for key in ("jobs", "shuffle_write_mb")
+             if a[ph][key] != b[ph][key]]
+        if m:
+            moves.append((k, m))
+    return moves
 
 
 def main():
@@ -110,6 +135,16 @@ def main():
         if note or abs(norm - 1.0) > 0.5:
             print(f"{k:28s} {a:8.3f} {b:8.3f} {b/a:6.2f} {norm:6.2f}  "
                   f"{note}")
+    moves = ledger_moves(da, db)
+    if moves is None:
+        print("# ledger: missing in "
+              f"{pa if not isinstance(da.get('ledger'), dict) else pb}"
+              " — counts not compared")
+    else:
+        print(f"# ledger: {len(moves)} queries with moved job counts or "
+              "shuffle MB")
+        for k, m in moves:
+            print(f"{k:28s} {'; '.join(m)}")
     if only_b:
         print(f"# new in b: {', '.join(only_b)}")
     if only_a:

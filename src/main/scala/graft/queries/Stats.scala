@@ -135,39 +135,39 @@ object Stats {
       .agg(min(col("es")).as("f"), max(col("es")).as("l"),
         min(when(col("event_type") === KmEventType, col("es"))).as("p"))
 
-  /** a49's risk-table derivation from the [[survSubjects]] frame —
-    * shared so the streaming twin's final state table provably feeds
-    * the SAME curve the oracle gates. */
-  private[graft] def kmCurve(subjRaw: DataFrame): DataFrame = {
-    val subj = subjRaw.select(
+  /** [[survSubjects]] over the batch events of `dir`. */
+  private def eventSubjects(s: SparkSession, dir: String): DataFrame =
+    survSubjects(t(s, dir, "events").select(col("user_id"),
+      col("event_type"), Det.epochS(col("ts")).as("es")))
+
+  /** a49/a50's observation frame over the [[survSubjects]] frame — the
+    * monitor family's censoring rule and nothing else: t = time from
+    * first event to first [[KmEventType]], or to the last event when
+    * there is none (censored); d = 1 on conversion; grp = the
+    * [[LrSeed]] keyed-LCG arm. Same (t, d, grp) shape as
+    * [[Survival.kmObs]], so everything after it is Survival's kernel.
+    * Each caller checkpoints it once (risk table AND cohort counts). */
+  private def monitorObs(subj: DataFrame): DataFrame =
+    subj.select(
       when(col("p").isNotNull, col("p") - col("f"))
-        .otherwise(col("l") - col("f")).as("dur"),
-      col("p").isNotNull.cast("int").as("evt"))
-      .localCheckpoint() // feeds the risk table AND the subject count
-    val risk = subj.groupBy(col("dur"))
-      .agg(sum(col("evt")).cast("long").as("d"),
-        count(lit(1)).as("tot"))
-    val n = subj.agg(count(lit(1)).as("n_all"))
-    val withN = graft.ops.Ranks
-      .globalCumSum(risk, Seq(col("dur")), col("tot"), "cumtot")
-      .crossJoin(broadcast(n))
-      .withColumn("n_risk", col("n_all") - col("cumtot") + col("tot"))
-      .filter(col("d") > 0)
-      .withColumn("lf", when(col("n_risk") > col("d"),
-        round(log((col("n_risk") - col("d")).cast("double") /
-          col("n_risk").cast("double")) * 1e6).cast("long")))
-    graft.ops.Ranks
-      .globalCumSum(withN, Seq(col("dur")), coalesce(col("lf"), lit(0L)),
-        "lognats_e6")
-      .select(col("dur"), col("n_risk"), col("d"),
-        (col("n_risk") === col("d")).as("terminal"),
-        when(col("n_risk") === col("d"), lit(0.0))
-          .otherwise(
-            round(exp(col("lognats_e6").cast("double") / 1e6), 6))
+        .otherwise(col("l") - col("f")).as("t"),
+      col("p").isNotNull.cast("long").as("d"),
+      (Det.frac(col("user_id"), LrSeed) < 0.5).cast("long").as("grp"))
+
+  /** a49's curve from the [[survSubjects]] frame: the monitor frame
+    * (no arm) through Survival's KM scan — shared so the streaming
+    * twin's final state table provably feeds the SAME curve the oracle
+    * gates. */
+  private[graft] def kmCurve(subj: DataFrame): DataFrame =
+    Survival.kmSurvScan(subj.sparkSession,
+        monitorObs(subj).drop("grp").localCheckpoint())
+      .select(col("t").as("dur"), col("r").as("n_risk"), col("d"),
+        (col("r") === col("d")).as("terminal"),
+        when(col("r") === col("d"), lit(0.0))
+          .otherwise(round(exp(col("cl6").cast("double") / 1e6), 6))
           .as("surv"),
-        col("lognats_e6"))
+        col("cl6").as("lognats_e6"))
       .orderBy(col("dur"))
-  }
 
   /** a54 Gumbel constants, computed ONCE in Scala and embedded as the
     * SAME literal in both engines (the ewmaCfac pattern): method-of-
@@ -390,29 +390,22 @@ object Stats {
     // are right-censored at their last observed event — the survival/
     // retention curve none of the other monitors cover.
     // SEE ALSO `q26_km_survival` (Survival.scala): the DESIGNED-STUDY
-    // twin — administrative censoring at a fixed horizon, Greenwood se
-    // + KP confidence bounds, and the frame q27/q29/a79/a80 share.
-    // This estimator is the OBSERVATIONAL monitor (censor-at-last-
-    // event is informative when activity correlates with conversion —
-    // acceptable for a retention dashboard, not for inference); the
-    // Survival.scala object doc carries the full decision rule. Risk table at
-    // each distinct event duration: n_i at risk, d_i events, Ŝ(t) =
-    // Π_{t_j ≤ t} (1 − d_j/n_j). Exactness: durations and risk/event
-    // counts are exact integers; each log factor ln((n−d)/n) is
-    // e6-quantized (the t12 recipe) so the cumulative log survival is
-    // an exact BIGINT prefix sum; the display survival is ONE exp over
-    // that exact integer, 6dp-rounded (1-ulp libm parity). A risk set
-    // that dies out exactly (n = d, only possible at the last event
+    // twin (administrative censoring at a fixed horizon, Greenwood se +
+    // KP bounds). This estimator is the OBSERVATIONAL monitor (censor-
+    // at-last-event is informative when activity correlates with
+    // conversion — fine for a retention dashboard, not for inference);
+    // the Survival.scala object doc carries the decision rule. After the
+    // observation frame both run ONE kernel, so the exactness is q26's:
+    // exact integer counts, e6-quantized ln((r−d)/r) factors cumulated
+    // as an exact BIGINT prefix sum, ONE exp for the 6dp display
+    // survival. A risk set that dies out (r = d, only at the last event
     // time) is flagged `terminal` with surv = 0; its lognats_e6 keeps
     // the pre-terminal cumulative so the column stays non-null exact.
     // 100 TB shape: one user_id agg collapses the corpus to a row per
-    // user, one duration agg collapses that to the risk table, and both
-    // running sums ride Ranks.globalCumSum — no unpartitioned window.
-    "a49_km_survival" -> ((s, dir) => {
-      import s.implicits._
-      kmCurve(survSubjects(t(s, dir, "events")
-        .select($"user_id", $"event_type", Det.epochS($"ts").as("es"))))
-    }),
+    // user (survSubjects); from the checkpointed monitor frame on it is
+    // Survival's kernel — the q26 risk table and ONE fused
+    // Ranks.globalCumSums for the carries — no unpartitioned window.
+    "a49_km_survival" -> ((s, dir) => kmCurve(eventSubjects(s, dir))),
 
     // ---- A50: log-rank two-group survival test ------------------------
     // The Mantel 1966 companion to a49 and the survival-outcome twin of
@@ -423,55 +416,37 @@ object Stats {
     // designed q26 frame (administrative horizon censoring, χ² form,
     // DECIMAL V carry) — use THAT for experiment readouts; this one
     // monitors the a49 observational frame (z form, censor-at-last-
-    // event). Decision rule in the Survival.scala object doc. At each event time,
-    // observed treatment events d1_i vs hypergeometric expectation
-    // E_i = d·n1/n and variance V_i = d·(n1/n)·(1−n1/n)·(n−d)/(n−1);
-    // z = Σ(O−E)/√ΣV. Exactness: every count is an exact integer; E_i
-    // and V_i are e6-quantized from doubles built with the SAME
-    // expression shape in both engines (the a45 summand rule), so both
-    // Σ are exact BIGINTs and z is scalar IEEE on identical inputs.
-    // 100 TB shape: the same collapses as a49 (corpus → per-user row →
-    // risk table); the two at-risk running counts ride
-    // Ranks.globalCumSum over the risk frame; the test is a 1-row agg.
+    // event). Decision rule in the Survival.scala object doc. At each
+    // event time, observed treatment events d1 vs hypergeometric
+    // expectation E = d·r1/r and variance V = d·(r1/r)·(1−r1/r)·(r−d)/
+    // (r−1); z = Σ(O−E)/√ΣV. Exactness: every count is an exact
+    // integer; E and V are e6-quantized from doubles built with the
+    // SAME expression shape in both engines (the a45 summand rule), so
+    // both Σ are exact BIGINTs and z is scalar IEEE on identical inputs.
+    // ΣV = 0 (one converter, or every user in one arm) gives z NULL,
+    // as SQL's division by zero does. 100 TB shape: a49's monitor frame
+    // through q27's arm risk table (both at-risk counts in ONE fused
+    // Ranks.globalCumSums); the test is a 1-row agg.
     "a50_logrank" -> ((s, dir) => {
       import s.implicits._
       val d = (c: org.apache.spark.sql.Column) => c.cast("double")
-      val subj = survSubjects(t(s, dir, "events")
-          .select($"user_id", $"event_type", Det.epochS($"ts").as("es")))
-        .select(
-          when($"p".isNotNull, $"p" - $"f").otherwise($"l" - $"f")
-            .as("dur"),
-          $"p".isNotNull.cast("int").as("evt"),
-          (Det.frac($"user_id", LrSeed) < 0.5).cast("int").as("grp"))
-        .localCheckpoint() // feeds the risk table AND the totals
-      val risk = subj.groupBy($"dur")
-        .agg(sum($"evt").cast("long").as("dd"), count(lit(1)).as("tot"),
-          sum($"evt" * $"grp").cast("long").as("d1"),
-          sum($"grp").cast("long").as("tot1"))
-      val n = subj.agg(count(lit(1)).as("n_all"),
-        sum($"grp").cast("long").as("n1_all"))
-      graft.ops.Ranks
-        .globalCumSums(risk, Seq($"dur"),
-          Seq(($"tot", "cumtot"), ($"tot1", "cumtot1")))
-        .crossJoin(broadcast(n))
-        .withColumn("nr", $"n_all" - $"cumtot" + $"tot")
-        .withColumn("n1r", $"n1_all" - $"cumtot1" + $"tot1")
-        .filter($"dd" > 0)
+      Survival.kmArmRiskTable(s,
+          monitorObs(eventSubjects(s, dir)).localCheckpoint())
         .withColumn("e_e6",
-          round(lit(1e6) * d($"dd") * d($"n1r") / d($"nr")).cast("long"))
-        .withColumn("v_e6", when($"nr" > 1,
-          round(lit(1e6) * d($"dd") * (d($"n1r") / d($"nr")) *
-            (lit(1.0) - d($"n1r") / d($"nr")) *
-            (d($"nr") - d($"dd")) / (d($"nr") - lit(1.0))).cast("long"))
+          round(lit(1e6) * d($"d") * d($"r1") / d($"r")).cast("long"))
+        .withColumn("v_e6", when($"r" > 1,
+          round(lit(1e6) * d($"d") * (d($"r1") / d($"r")) *
+            (lit(1.0) - d($"r1") / d($"r")) *
+            (d($"r") - d($"d")) / (d($"r") - lit(1.0))).cast("long"))
           .otherwise(0L))
-        .groupBy($"n_all", $"n1_all")
+        .groupBy($"n_cohort", $"n_arm1")
         .agg(sum($"d1").as("o1"), sum($"e_e6").as("se6"),
           sum($"v_e6").as("sv6"))
-        .select($"n1_all".as("n_exposed"),
-          ($"n_all" - $"n1_all").as("n_clean"), $"o1",
+        .select($"n_arm1".as("n_exposed"),
+          ($"n_cohort" - $"n_arm1").as("n_clean"), $"o1",
           round(d($"se6") / 1e6, 4).as("e1"),
-          round((d($"o1") * 1e6 - d($"se6")) / 1e6 /
-            sqrt(d($"sv6") / 1e6), 4).as("z"))
+          when($"sv6" > 0, round((d($"o1") * 1e6 - d($"se6")) / 1e6 /
+            sqrt(d($"sv6") / 1e6), 4)).as("z"))
     }),
 
     // ---- A51: Spearman rank correlation --------------------------------

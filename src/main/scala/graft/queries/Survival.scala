@@ -25,23 +25,26 @@ import graft.functions.Det
   *     than one metric; Φ via Abramowitz & Stegun 26.2.17 generated
   *     ONCE as text for both engines (|ε| < 7.5e-8, identical IEEE).
   *
-  * RELATION TO THE a49/a50 FAMILY (Stats.scala — the r10 verdict's
-  * cross-reference ask): two KM/log-rank pairs coexist BY DESIGN, under
-  * different censoring mechanisms. `a49_km_survival`/`a50_logrank`
+  * RELATION TO THE a49/a50 FAMILY (Stats.scala): two KM/log-rank pairs
+  * coexist BY DESIGN and differ ONLY in the observation frame (t, d,
+  * grp), i.e. in the censoring rule. `a49_km_survival`/`a50_logrank`
   * estimate time from FIRST EVENT to FIRST purchase with
   * loss-to-follow-up censoring at each user's LAST OBSERVED event and
   * no variance estimate — the observational retention-monitor reading,
   * where "stopped appearing" is all the design gives you. THIS pack's
   * q26/q27 estimate time from SIGNUP to the first HIGH-VALUE purchase
-  * under ADMINISTRATIVE right-censoring at a fixed study horizon, with
-  * Greenwood se and KP confidence bounds — the designed-study reading,
-  * and the observation frame Cox (q29), RMST (a80) and Nelson–Aalen
-  * (a79) ride. Decision rule for a user: monitoring an open-ended
-  * event stream where subjects silently drop out → a49/a50; analyzing
-  * a fixed-horizon cohort or experiment (arms, hazard ratios, CIs) →
-  * q26/q27/q29/a79/a80. The two are NOT interchangeable: a49's
-  * censoring-at-last-event is informative whenever activity correlates
-  * with conversion, which is exactly why the designed family exists.
+  * under ADMINISTRATIVE right-censoring at a fixed study horizon
+  * ([[kmObs]]), with Greenwood se and KP confidence bounds — the
+  * designed-study reading, and the frame Cox (q29/q31), RMST (a80),
+  * Nelson–Aalen (a79) and Weibull (a81) ride. From the frame on, all
+  * ten queries run ONE kernel: [[kmArmRiskTable]] (the total curve
+  * reads it as one arm) and [[kmScanCarries]]. Decision rule for a
+  * user: monitoring an open-ended event stream where subjects silently
+  * drop out → a49/a50; analyzing a fixed-horizon cohort or experiment
+  * (arms, hazard ratios, CIs) → this pack. The two are NOT
+  * interchangeable: a49's censoring-at-last-event is informative
+  * whenever activity correlates with conversion, which is exactly why
+  * the designed family exists.
   *
   * House exactness recipe throughout: integer epoch seconds and counts;
   * per-time summands carried as pure-integer divs (e6/e9/e12, DECIMAL
@@ -68,13 +71,13 @@ object Survival {
     * before the horizon) the observed time t = min(delta, tc − s_es),
     * the event flag d (1 = high-value purchase inside the window), and
     * the q22 keyed-LCG arm. 100 TB shape: two per-user aggs collapse
-    * the corpus; the horizon is a 1-row broadcast. */
+    * the corpus; the horizon is a 1-row broadcast. ONE checkpoint: the
+    * cohort's two reads (purchase join, left side) run in its job. */
   private[graft] def kmObs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val coh = Stats2.ttcSignups(s, dir)
       .crossJoin(broadcast(kmHorizon(s, dir)))
       .filter($"s_es" <= $"tc")
-      .localCheckpoint() // feeds the purchase join AND the left side
     val pu = t(s, dir, "events")
       .filter($"event_type" === "purchase" &&
         round($"value" * 100).cast("long") >= KmThrCents)
@@ -91,35 +94,24 @@ object Survival {
       .localCheckpoint() // feeds the cohort counts AND the collapse
   }
 
-  /** Per-event-time risk table (t, d, r): value-domain collapse of the
-    * observation frame + a DISTRIBUTED prefix sum (Ranks.globalCumSum,
-    * never a one-task global window — censoring times are O(users)
-    * distinct) + the 1-row cohort broadcast; r = n − #{t_i < t}. */
-  private def kmRiskTable(s: SparkSession, obs: DataFrame): DataFrame = {
-    import s.implicits._
-    val nc = obs.agg(count(lit(1)).as("n_cohort"))
-    val vt = obs.groupBy($"t")
-      .agg(sum($"d").as("d"), count(lit(1)).as("c"))
-    graft.ops.Ranks.globalCumSum(vt, Seq($"t"), $"c", "cumc")
-      .crossJoin(broadcast(nc))
-      .withColumn("r", $"n_cohort" - ($"cumc" - $"c"))
-      .filter($"d" > 0L)
-  }
-
-  /** q26/a80's shared KM scan (t, d, r, cl6, cgw) over an observation
-    * frame with (t, d) columns: the risk table with the e6 ln-survivor
-    * and e12 Greenwood carries cumulated by the distributed prefix
-    * sum. Takes `obs` (not a dir) so the streaming twin's spec can
-    * rebuild the IDENTICAL curve from kmObsStream emissions — the
-    * ttcReport sharing pattern. */
+  /** q26/a49/a80/a81's shared KM scan (t, d, r, cl6, cgw) over a (t, d)
+    * observation frame. Takes `obs` (not a dir) so the streaming twin's
+    * spec can rebuild the IDENTICAL curve from kmObsStream emissions. */
   private[graft] def kmSurvScan(s: SparkSession, obs: DataFrame)
       : DataFrame = kmScanCarries(s, kmRiskTable(s, obs))
 
+  /** The total-curve risk table: [[kmArmRiskTable]] with every subject in
+    * one arm (its constant arm sums are pruned from the plan). */
+  private def kmRiskTable(s: SparkSession, obs: DataFrame): DataFrame =
+    kmArmRiskTable(s, obs.withColumn("grp", lit(0L)))
+
   /** The carry half of the KM scan over ANY (t, d, r) event-time frame
-    * — shared by q26/a80/a81 (total curve) and q30 (per-arm curves):
+    * — shared by q26/a49/a80/a81 (total curve) and q30 (per-arm curves):
     * the e6 ln-survivor and e12 Greenwood summands cumulated by the
-    * distributed prefix sum. */
-  private def kmScanCarries(s: SparkSession, rt: DataFrame): DataFrame = {
+    * distributed prefix sum. A caller that reads only cl6 (a49) gets the
+    * Greenwood window expression pruned from its plan. */
+  private[graft] def kmScanCarries(s: SparkSession, rt: DataFrame)
+      : DataFrame = {
     import s.implicits._
     val ev = rt
       .withColumn("l6", when($"d" < $"r",
@@ -134,10 +126,12 @@ object Survival {
       Seq(($"l6", "cl6"), ($"gw12", "cgw")))
   }
 
-  /** q27/q29's per-event-time ARM risk table (t, d, d1, r, r1 + the
-    * 1-row cohort counts): the kmRiskTable machinery with the arm-1
-    * split riding the same two distributed prefix sums. */
-  private def kmArmRiskTable(s: SparkSession, obs: DataFrame): DataFrame = {
+  /** THE risk table of both families over a (t, d, grp) frame: per
+    * event time (t, d, d1, r, r1) + the cohort counts (n_cohort, n_arm1),
+    * r = n − #{t_i < t} (r1 over arm 1) from a DISTRIBUTED prefix sum
+    * (never a one-task window — censoring times are O(users) distinct). */
+  private[graft] def kmArmRiskTable(s: SparkSession, obs: DataFrame)
+      : DataFrame = {
     import s.implicits._
     val nc = obs.agg(count(lit(1)).as("n_cohort"),
       sum($"grp").as("n_arm1"))

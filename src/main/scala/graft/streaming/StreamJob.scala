@@ -189,9 +189,9 @@ object StreamJob {
     * curve (and a50's log-rank test) read. The aggregate is the SHARED
     * [[graft.queries.Stats.survSubjects]] (the seasCounts pattern), so
     * the streaming state is definitionally a49's subject frame and
-    * `Stats.kmCurve(state)` is bit-identical to the oracle-green batch
-    * curve once the same rows arrived — REGARDLESS of arrival order,
-    * because min/max/conditional-min are commutative over cuts.
+    * `Stats.kmCurve(state)` (`Survival`'s KM kernel) is bit-identical to
+    * the oracle-green batch curve once the same rows arrived — REGARDLESS
+    * of arrival order, because min/max/conditional-min commute over cuts.
     * Complete-mode state is ONE row per user (the minimal sufficient
     * statistic — the O(keys) class of the as-of sinks). Input must
     * carry (user_id, event_type, es). */

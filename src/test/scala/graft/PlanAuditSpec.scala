@@ -462,6 +462,14 @@ class PlanAuditSpec extends SparkSpec {
           !ok(l)).toSeq
       assert(bare.isEmpty, s"$q:\n" + bare.mkString("\n"))
     }
+    // a49 shares q26's KM scan but reads only the ln-survivor carry: the
+    // Greenwood summand (d·10¹², whose int64 bound is q26's in
+    // SCALE_BOUNDS) must be pruned from its plan, so a49 keeps its own
+    // bound. q26's plan is the control that the literal prints as text.
+    val gw = "1000000000000"
+    assert(plan("q26_km_survival").contains(gw))
+    val a49 = plan("a49_km_survival")
+    assert(!a49.contains(gw), a49.take(3000))
   }
 
   test("w32: the slope self-join and the median-rank window are all " +

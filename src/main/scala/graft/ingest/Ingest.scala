@@ -108,16 +108,6 @@ object Ingest {
   def writeJobTable(df: DataFrame, name: String): Unit =
     df.write.mode("overwrite").format("parquet").saveAsTable(name)
 
-  /** S7 at scale: bucketed job table — repeated joins/merges on `id`
-    * (prediction write-backs, XAI joins) become shuffle-free when both
-    * sides share the bucketing. `nBuckets` sizes to the cluster (buckets ≈
-    * target parallelism at the expected table size). */
-  def writeJobTableBucketed(df: DataFrame, name: String,
-                            nBuckets: Int = 32): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "id").sortBy("id")
-      .saveAsTable(name)
-
   /** S9: time-range scan over a job table. */
   def readRange(spark: SparkSession, table: String,
                 from: Option[java.sql.Timestamp],

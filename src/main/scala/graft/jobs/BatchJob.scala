@@ -206,8 +206,9 @@ object BatchJob {
       (d, n("flagged"))
     }
 
-    // J2 write-back (single overwrite with the new flag column), then A3/A4
-    // metrics on the test split and on everything (needs a label)
+    // J2 write-back: ONE overwrite of `<table>_scored` with the flag column
+    // (the reference's per-PK `UPDATE` loop), then A3/A4 metrics on the
+    // test split and on everything (needs a label)
     def metricsOf(df: DataFrame): Map[String, Double] =
       if (!df.columns.contains("label")) Map.empty
       else {
@@ -217,11 +218,9 @@ object BatchJob {
         }.toMap
       }
     val (mTest, mAll) = stage("evaluation") {
-      if (persistTable) {
-        val out = detected.drop("split", "anomaly_score")
-        out.write.mode("overwrite").format("parquet")
-          .saveAsTable(table + "_scored")
-      }
+      if (persistTable)
+        Ingest.writeJobTable(detected.drop("split", "anomaly_score"),
+          table + "_scored")
       (metricsOf(detected.filter(col("split") === "test")), metricsOf(detected))
     }
 

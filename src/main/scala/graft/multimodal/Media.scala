@@ -154,32 +154,6 @@ object Media {
           .cast(BinaryType))
   }
 
-  /** STUB resize: fixed-budget thumbnail bytes, deterministic from content.
-    * Schema contract: output column is BINARY with bounded size. */
-  def resizeStub(decoded: DataFrame, maxBytes: Int = 32): DataFrame =
-    decoded.withColumn("thumb",
-      substring(sha2(col("content"), 512).cast(BinaryType), 1, maxBytes))
-
-  /** STUB feature extraction: binary → dense `array<float>` embedding of
-    * `dim` dimensions (deterministic md5-chain). Output matches the
-    * `embeddings` table shape, so downstream ANN / dedup
-    * ([[graft.similarity.Vectors]]) applies unchanged.
-    *
-    * MATERIALIZE (cache/checkpoint/write) the result before feeding it to
-    * wide consumers like [[graft.similarity.Vectors.lshBucket]]: Catalyst's
-    * project-collapse otherwise inlines this dim-term expression into every
-    * downstream element reference (dim × nBits×dim md5 evaluations per
-    * row — a codegen explosion). In production the embedding column is a
-    * written table anyway. */
-  def featureExtractStub(decoded: DataFrame, dim: Int = 64): DataFrame = {
-    val floats = (0 until dim).map { d =>
-      (conv(substring(md5(concat(col("content"),
-        lit(d.toString).cast(BinaryType))), 1, 6), 16, 10)
-        .cast(DoubleType) / lit(16777215.0) * 2.0 - 1.0).cast(FloatType)
-    }
-    decoded.withColumn("embedding", array(floats: _*))
-  }
-
   /** REAL image resize: decode → smooth-scale to (w, h) → re-encode PNG,
     * one codec context per partition; rows whose bytes no reader accepts
     * are dropped (count the gap upstream if lineage matters). */
@@ -201,9 +175,7 @@ object Media {
     * `array<float>` embedding (grid² dims, [-1, 1]) matching the
     * `embeddings` table shape — downstream ANN / near-dup
     * ([[graft.similarity.Vectors]]) applies unchanged. Undecodable rows are
-    * dropped. Unlike [[featureExtractStub]] this is a plain per-row
-    * mapPartitions value (no wide Catalyst expression), so no
-    * materialization caveat applies. */
+    * dropped. */
   def imageEmbeddings(df: DataFrame, grid: Int = 8): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._

@@ -1,26 +1,21 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Z-order (Morton) clustering — the data-LAYOUT lever for multi-column
-  * scan pruning at warehouse scale. Sorting by one column gives perfect
-  * min/max pruning on that column and none on any other; interleaving the
-  * bits of several columns' bucket ranks gives every participating column
-  * locality inside each output file, so parquet row-group/file min-max
-  * statistics prune scans filtered on ANY of them (the technique behind
-  * Delta/Iceberg OPTIMIZE ZORDER BY; public algorithm, Morton 1966).
+/** Z-order (Morton) interleave: the bit arithmetic behind multi-column
+  * layouts (Delta/Iceberg OPTIMIZE ZORDER BY; public algorithm, Morton
+  * 1966). Interleaving the bits of several columns' 0-based bucket ranks
+  * gives one sort key under which every participating column keeps
+  * locality, so file min/max statistics could prune on ANY of them.
   *
-  * Shape: per-column equi-depth bucket ranks come from `approxQuantile`
-  * boundaries (one stats pass per column, broadcast as literals — the
-  * [[Ranks]] value-derived-bucket idea, so the rank is a pure function of
-  * the row), the interleave is plain integer bit arithmetic, and the
-  * layout lands with ONE `repartitionByRange` on the z-value. No global
-  * window, no extra shuffle.
+  * The engine exposes the interleave as a per-row projection: the
+  * `graft_zorder(bits, rank0, rank1, ...)` SQL function
+  * ([[graft.expressions.GraftFunctions]]) and the oracle-gated
+  * `p13_zorder_curve` query. The caller supplies the bucket ranks.
   *
   * Reference capability: EXACT's TimescaleDB layout clusters on time only
-  * (hypertable chunks, `Database/db_api.py`); multi-dimensional layout is
-  * a beyond-reference scale operator per the build brief.
+  * (hypertable chunks, `Database/db_api.py`).
   */
 object ZOrder {
 
@@ -47,35 +42,5 @@ object ZOrder {
     for ((r, c) <- ranks.zipWithIndex; i <- 0 until bits)
       z += ((r >> i) & 1L) << (i * k + (k - 1 - c))
     z
-  }
-
-  /** Equi-depth bucket rank (0 .. 2^bits-1) of `c` — `approxQuantile`
-    * internal boundaries folded into the plan as literals, so the rank is
-    * a pure row function (partition-invariant, reusable across consumers). */
-  def bucketRank(df: DataFrame, c: Column, bits: Int): Column = {
-    val n = 1 << bits
-    val bounds = df.select(c.cast("double").as("__zq"))
-      .stat.approxQuantile("__zq", (1 until n).map(_.toDouble / n).toArray, 0.001)
-      .filterNot(_.isNaN).distinct.sorted
-    bounds.map(b => when(c.cast("double") > lit(b), 1).otherwise(0))
-      .reduceOption[Column](_ + _).getOrElse(lit(0))
-  }
-
-  /** Append the z-value of `cols` as `out`. One stats pass per column;
-    * the z-value itself is a per-row projection. */
-  def zValue(df: DataFrame, cols: Seq[Column], bits: Int,
-             out: String): DataFrame =
-    df.withColumn(out, interleave(cols.map(bucketRank(df, _, bits)), bits))
-
-  /** Cluster the frame into `numFiles` z-contiguous partitions: files then
-    * carry tight min/max ranges on EVERY clustering column, which is what
-    * the scan planner prunes with. Rows inside each partition are sorted
-    * by z so row-group stats prune too. */
-  def cluster(df: DataFrame, cols: Seq[Column], bits: Int,
-              numFiles: Int): DataFrame = {
-    val z = zValue(df, cols, bits, "__zval")
-    z.repartitionByRange(numFiles, col("__zval"))
-      .sortWithinPartitions(col("__zval"))
-      .drop("__zval")
   }
 }

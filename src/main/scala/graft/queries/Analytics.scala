@@ -173,7 +173,7 @@ object Analytics {
   /** KS drift split (epoch s, 2024-01-16): early vs late event halves.
     * [[KsPack]] = 2^31 packs both prefix sums into one long for the single
     * [[graft.ops.Ranks.globalCumSum]] pass (counts < 2^31 — no carries). */
-  private val KsSplitEs = 1705363200L
+  private[queries] val KsSplitEs = 1705363200L
   private val KsPack = 2147483648L
 
   /** Benford expected first-digit frequencies, ppm: round(log10(1+1/d)·1e6)
@@ -845,7 +845,8 @@ object Analytics {
     // distributed two-pass cumsum by packing (c1, c2) into disjoint bit
     // lanes of a single long. 100 TB shape: one value-cents agg collapses
     // the data to its distinct support, then the packed Ranks.globalCumSum
-    // two-pass; nothing unpartitioned ever sees row-scale data.
+    // two-pass; nothing unpartitioned ever sees row-scale data. A one-sided
+    // corpus (n1·n2 = 0) reads d_ppm NULL, as SQL's `//` by zero does.
     "a27_ks_drift" -> ((s, dir) => {
       import s.implicits._
       val pts = t(s, dir, "events")
@@ -863,7 +864,8 @@ object Analytics {
             ($"cum" % KsPack) * $"n1").as("dn"))
         .groupBy($"n1", $"n2").agg(max($"dn").as("d_num"))
         .select($"n1", $"n2", $"d_num",
-          expr("(d_num * 1000000L) div (n1 * n2)").as("d_ppm"))
+          when($"n1" * $"n2" =!= 0L,
+            expr("(d_num * 1000000L) div (n1 * n2)")).as("d_ppm"))
     }),
 
     // ---- A28: Gini concentration (Lorenz) --------------------------------

@@ -30,12 +30,11 @@ import graft.window.Sequencer
   * Scale shape: one two-pass rank (the normalize id), one injection
   * projection over a broadcast stats row, one localCheckpoint of the
   * injected frame (its row count rides that job via `observe`), one
-  * data-sized left join (id ⋈ id — on a bucketed job table this is
-  * shuffle-free), two 1-row aggregates. The split and the test slice's
-  * alignment rank are narrow projections of `id`: normalize's id is the
-  * 0-based row number of the `(timestamp, id)` order (as in
-  * `jobs.BatchJob`), so the split rank is `id + 1` and the test rank is
-  * `id + 1 − nTrain`.
+  * data-sized left join (id ⋈ id), two 1-row aggregates. The split and
+  * the test slice's alignment rank are narrow projections of `id`:
+  * normalize's id is the 0-based row number of the `(timestamp, id)`
+  * order (as in `jobs.BatchJob`), so the split rank is `id + 1` and the
+  * test rank is `id + 1 − nTrain`.
   */
 object Lifecycle {
 

@@ -883,10 +883,7 @@ object Pipeline {
 
     // ---- z-order curve values (ops.ZOrder's Morton interleave, gated
     // cross-engine). FIXED bucket boundaries (value/32 capped, user_id mod
-    // 16) rather than the production approxQuantile ranks: quantile
-    // boundaries are data-sketch outputs, while this row pins the bit
-    // arithmetic every layout decision rides on. ZOrderSpec covers the
-    // layout/pruning behavior itself.
+    // 16): this row pins the bit arithmetic a z-order layout rides on.
     "p13_zorder_curve" -> ((s, dir) => {
       import s.implicits._
       val xb = greatest(least(floor($"value" / 32.0), lit(15.0)), lit(0.0))

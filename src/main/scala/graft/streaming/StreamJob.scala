@@ -13,14 +13,16 @@ import graft.ml.FittedDetector
   * Structured Streaming by construction:
   *
   *  - T1 replay: a file source over the staged dataset directory replays it
-  *    micro-batch by micro-batch (`maxFilesPerTrigger`); event-time pacing
-  *    (the reference's `sleep(gap/speedup)`) becomes trigger cadence —
-  *    at scale the source is Kafka/files landing, same plan;
+  *    micro-batch by micro-batch (`maxFilesPerTrigger`) in event-time order,
+  *    as fast as the sink drains it. The reference's wall-clock pacing
+  *    (`sleep(gap/speedup)`) is not reproduced: the flags a drained replay
+  *    writes do not depend on it. At scale the source is Kafka/files
+  *    landing, same plan;
   *  - T2 injection: [[Injector.injectStreaming]] — stateless Column
   *    expressions with pre-pass stats, no shuffle in the stream;
   *  - T3 detection: `foreachBatch` scores ONLY the new micro-batch with the
   *    pre-trained detector and appends to the scored table — incremental,
-  *    not a rescan; `availableNow` drains a finite replay and stops.
+  *    not a rescan; `AvailableNow` drains a finite replay and stops.
   *
   * Watermark support (T4, absent in the reference) comes free:
   * `withEventTimeWatermark` on the replayed frame.
@@ -49,24 +51,6 @@ object StreamJob {
       .schema(normalized.schema)
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(stageDir)
-  }
-
-  /** T1 pacing — the reference's `speedup` parameter
-    * (`Backend/Simulator/SimulateFromDataSet/simulator.py:203-217` sleeps
-    * `gap/speedup` between rows): a dataset whose event time spans S seconds
-    * replays over S/speedup wall-clock seconds. Row-level sleeps don't exist
-    * in a distributed engine; the equivalent is micro-batch cadence —
-    * `nChunks` range-ordered files at one file per trigger, interval =
-    * S/(nChunks·speedup). Pass the result as `trigger` to [[detectSink]]
-    * (with `availableNow = false`). */
-  def replayTrigger(normalized: DataFrame, tsCol: String, nChunks: Int,
-                    speedup: Double): Trigger = {
-    require(speedup > 0, "speedup must be positive")
-    val r = normalized
-      .agg(min(col(tsCol)).cast("long"), max(col(tsCol)).cast("long")).head
-    val spanSec = math.max(r.getLong(1) - r.getLong(0), 0L)
-    val intervalMs = math.max((spanSec * 1000.0 / (nChunks * speedup)).toLong, 1L)
-    Trigger.ProcessingTime(intervalMs)
   }
 
   /** Streaming exact dedup with BOUNDED state: re-deliveries of the same
@@ -782,8 +766,8 @@ object StreamJob {
     * must be a TOTAL order per key (unique tiebreak) — that is what makes
     * the result micro-batch-cut-layout invariant (StreamJobSpec proves
     * stream ≡ u4 across layouts). The localCheckpoint materializes the
-    * merge before the overwrite reads-then-replaces the same table (the
-    * [[graft.ops.Merge]] staging contract). */
+    * merge before the overwrite reads-then-replaces the same table: Spark
+    * refuses to read and overwrite the same files in one job. */
   def upsertLatestSink(stream: DataFrame, keyCols: Seq[String],
                       orderCols: Seq[String], outTable: String): StreamingQuery =
     stream.writeStream
@@ -996,19 +980,16 @@ object StreamJob {
     }
 
   /** T3: incremental detection sink — scores each micro-batch with the
-    * pre-trained model and appends to `outTable`. */
-  def detectSink(stream: DataFrame, fitted: FittedDetector, outTable: String,
-                 availableNow: Boolean = true,
-                 trigger: Option[Trigger] = None): StreamingQuery = {
-    val writer = stream.writeStream
+    * pre-trained model and appends to `outTable`; `AvailableNow` drains
+    * the replay and stops. */
+  def detectSink(stream: DataFrame, fitted: FittedDetector,
+                 outTable: String): StreamingQuery =
+    stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         fitted.transform(batch)
           .write.mode("append").format("parquet").saveAsTable(outTable)
       }
-    val triggered =
-      if (availableNow) writer.trigger(Trigger.AvailableNow())
-      else trigger.map(writer.trigger).getOrElse(writer)
-    triggered.start()
-  }
+      .trigger(Trigger.AvailableNow())
+      .start()
 }

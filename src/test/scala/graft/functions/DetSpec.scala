@@ -2,18 +2,37 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 
 class DetSpec extends SparkSpec {
   import spark.implicits._
 
   test("frac is deterministic, in [0,1), and matches host arithmetic") {
-    val ids = (0L until 1000L).toDF("id")
-    val got = ids.select($"id", Det.frac($"id", 42L).as("f"))
-      .as[(Long, Double)].collect().toMap
-    (0L until 1000L).foreach { i =>
-      assert(got(i) == Det.fracHost(i, 42L), s"id=$i")
-      assert(got(i) >= 0.0 && got(i) < 1.0)
+    def agrees(ids: Seq[Long], seed: Long): Boolean = {
+      val got = ids.toDF("id").select($"id", Det.frac($"id", seed).as("f"))
+        .as[(Long, Double)].collect().toMap
+      ids.forall { i =>
+        got(i) == Det.fracHost(i, seed) && got(i) >= 0.0 && got(i) < 1.0
+      }
     }
+    assert(agrees(0L until 1000L, 42L))
+    // the domain the object doc states: ids in [0, 2^62], seeds < ~3.4e9;
+    // the lane edges of `id % 2^31` are drawn on purpose
+    val id = Gen.frequency(
+      4 -> Gen.choose(0L, 1L << 62),
+      1 -> Gen.oneOf(0L, Det.M - 1, Det.M, Det.M + 1, 1L << 62))
+    val cases = for {
+      seed <- Gen.frequency(3 -> Gen.choose(0L, 3000000000L),
+        1 -> Gen.oneOf(0L, 3000000000L))
+      ids <- Gen.listOfN(64, id)
+    } yield (ids.distinct, seed)
+    val params = Test.Parameters.default.withMinSuccessfulTests(30)
+      .withInitialSeed(Seed(42L))
+    val res = Test.check(params, Prop.forAllNoShrink(cases) {
+      case (ids, seed) => agrees(ids, seed)
+    })
+    assert(res.passed, res.status)
   }
 
   test("frac is partition-invariant (same values under repartition)") {

@@ -48,32 +48,6 @@ class MediaSpec extends SparkSpec {
     assert(ts0 == 0L)
   }
 
-  test("resize + feature extraction: bounded thumbs, ANN-ready embeddings") {
-    val decoded = Media.decode(raw).toDF()
-    val thumbs = Media.resizeStub(decoded, maxBytes = 32)
-    assert(thumbs.select(max(length($"thumb"))).head.getInt(0) <= 32)
-
-    // materialized before wide reuse — see featureExtractStub scaladoc
-    val emb = Media.featureExtractStub(decoded, dim = 64)
-      .select($"media_id", $"embedding").cache()
-    assert(emb.count() == 60)
-    assert(emb.select(size($"embedding")).head.getInt(0) == 64)
-    val bounds = emb.select(explode($"embedding").as("x"))
-      .agg(min($"x"), max($"x")).head
-    assert(bounds.getFloat(0) >= -1.0f && bounds.getFloat(1) <= 1.0f)
-
-    // hand-off into the similarity layer: LSH buckets over the cached frame
-    val buckets = emb.select($"media_id",
-      Vectors.lshBucket($"embedding", 64, 8, 7L).as("bucket"))
-    assert(buckets.filter($"bucket" >= 0 && $"bucket" < 256).count() == 60)
-    // determinism: same content → same embedding (collected comparison)
-    val e1 = emb.as[(Long, Seq[Float])].collect().toMap
-    val e2 = Media.featureExtractStub(decoded, dim = 64)
-      .select($"media_id", $"embedding").as[(Long, Seq[Float])].collect().toMap
-    assert(e1 == e2)
-    emb.unpersist()
-  }
-
   test("REAL png decode → resize → embedding → ANN, end to end") {
     import java.awt.image.BufferedImage
     // two near-identical gradients + one inverted image, as real PNGs

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
@@ -21,36 +20,5 @@ class ZOrderSpec extends SparkSpec {
     }
     // distinct inputs → distinct codes (it's a bijection on the grid)
     assert(got.values.toSeq.distinct.size == 64)
-  }
-
-  test("z-order layout carries tight file min/max on BOTH dims; " +
-      "single-column sort prunes only its own column") {
-    val rng = new scala.util.Random(7)
-    val df = (0 until 20000).map(_ => (rng.nextDouble(), rng.nextDouble()))
-      .toDF("x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft_z").toString
-    ZOrder.cluster(df, Seq($"x", $"y"), bits = 4, numFiles = 16)
-      .write.mode("overwrite").parquet(s"$dir/z")
-    df.repartitionByRange(16, $"x").sortWithinPartitions($"x")
-      .write.mode("overwrite").parquet(s"$dir/xs")
-
-    // files a min/max-pruning scan would still READ for `y <= 0.125`
-    def filesReadForLowY(path: String): Long =
-      spark.read.parquet(path)
-        .groupBy(input_file_name().as("f"))
-        .agg(min($"y").as("ymin"))
-        .filter($"ymin" <= 0.125).count()
-
-    val zY = filesReadForLowY(s"$dir/z")
-    val xsY = filesReadForLowY(s"$dir/xs")
-    assert(xsY >= 14, s"x-sorted files all span y, got $xsY/16 read")
-    assert(zY <= 8, s"z-order should skip most files on y, got $zY/16 read")
-
-    // x-pruning survives the interleave too
-    val zX = spark.read.parquet(s"$dir/z")
-      .groupBy(input_file_name().as("f"))
-      .agg(min($"x").as("xmin"))
-      .filter($"xmin" <= 0.125).count()
-    assert(zX <= 8, s"z-order should also skip files on x, got $zX/16 read")
   }
 }

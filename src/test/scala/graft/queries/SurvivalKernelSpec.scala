@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test}
@@ -90,13 +88,11 @@ class SurvivalKernelSpec extends SparkSpec {
 
   test("a50 on a one-converter corpus: ΣV = 0 reads z NULL (as SQL's " +
       "division by zero does), not an ANSI divide-by-zero") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val user = ev.filter($"event_type" === "purchase")
-      .agg(min($"user_id")).head().getLong(0)
-    val dir = Files.createTempDirectory("graft_a50").toString
-    ev.filter($"user_id" === user).coalesce(1)
-      .write.parquet(s"$dir/events.parquet")
+    val dir = EventCorpus.write(spark, "graft_a50") { ev =>
+      val user = ev.filter($"event_type" === "purchase")
+        .agg(min($"user_id")).head().getLong(0)
+      ev.filter($"user_id" === user)
+    }
     val rows = SparkEntry.queries("a50_logrank")(spark, dir).collect()
     assert(rows.length == 1, rows.mkString("\n"))
     val r = rows.head

@@ -829,18 +829,6 @@ class StreamJobSpec extends SparkSpec {
     assert(got == batch)
   }
 
-  test("T1: replayTrigger paces event-time span by the speedup factor") {
-    // rows span 199 s of event time; 10 chunks at speedup 50 ⇒ the whole
-    // replay should take 199/50 ≈ 4 s wall ⇒ 398 ms per micro-batch
-    val trig = StreamJob.replayTrigger(rows.toDF(), "ts", nChunks = 10,
-      speedup = 50.0)
-    assert(trig.toString.contains("398"), trig.toString)
-    // and a degenerate single-instant dataset still yields a valid trigger
-    val one = Seq(Ev(0, ts(0), 1.0)).toDF()
-    val t1 = StreamJob.replayTrigger(one, "ts", nChunks = 5, speedup = 2.0)
-    assert(t1.toString.contains("1"), t1.toString)
-  }
-
   test("oracle bridge: an oracle-gated query's exact frame through " +
       "detectSink's foreachBatch accumulation hash-matches the batch " +
       "result across 3 micro-batch cut layouts") {

@@ -14,6 +14,9 @@
 # script exits 2 without ever writing an ALL GREEN line. Empty-string
 # arithmetic can no longer count a crashed run as 0 failures.
 #
+# Compiles perfbench/ after the root build: it compiles src/main/scala
+# with its own driver, so a broken import there fails the gate here.
+#
 # Also runs the full ScalaTest suite and appends its count to the same
 # PLANS line (the r10 verdict ask #7: the whole close is ONE
 # machine-written fact). Skip with GATE_SKIP_TESTS=1 for fast re-runs —
@@ -33,6 +36,12 @@ hard_fail() { echo "[gate_all] HARD FAIL: $1"; exit 2; }
 echo "[gate_all] compiling..."
 sbt -batch compile >/tmp/gate_all_compile.log 2>&1 || \
   hard_fail "compile failed — see /tmp/gate_all_compile.log"
+# perfbench compiles ../src/main/scala with its own driver, so a src/main
+# change that breaks one of its imports would otherwise surface only as a
+# benchmark run failure
+echo "[gate_all] compiling perfbench..."
+(cd perfbench && sbt -batch compile) >/tmp/gate_all_perfbench_compile.log 2>&1 || \
+  hard_fail "perfbench compile failed — see /tmp/gate_all_perfbench_compile.log"
 
 TESTLINE="tests=skipped"
 if [ "${GATE_SKIP_TESTS:-0}" != "1" ]; then

@@ -9,13 +9,12 @@ class KsDriftSpec extends SparkSpec {
 
   test("a27 on a one-sided corpus: n1·n2 = 0 reads d_ppm NULL (as SQL's " +
       "// by zero does), not an ANSI divide-by-zero") {
-    val dir = EventCorpus.write(spark, "graft_a27") { ev =>
+    val rows = EventCorpus.withEvents(spark, "graft_a27") { ev =>
       // the split a27 itself applies, on the timestamp Tables.t rebuilds
       val early = Tables.t(spark, EventCorpus.Source, "events")
         .filter(Det.epochS($"ts") < Analytics.KsSplitEs).select($"event_id")
       ev.join(early, Seq("event_id"), "left_semi")
-    }
-    val rows = SparkEntry.queries("a27_ks_drift")(spark, dir).collect()
+    }(SparkEntry.queries("a27_ks_drift")(spark, _).collect())
     assert(rows.length == 1, rows.mkString("\n"))
     val r = rows.head
     assert(r.getAs[Long]("n1") > 0L && r.getAs[Long]("n2") == 0L, r)

@@ -88,12 +88,11 @@ class SurvivalKernelSpec extends SparkSpec {
 
   test("a50 on a one-converter corpus: ΣV = 0 reads z NULL (as SQL's " +
       "division by zero does), not an ANSI divide-by-zero") {
-    val dir = EventCorpus.write(spark, "graft_a50") { ev =>
+    val rows = EventCorpus.withEvents(spark, "graft_a50") { ev =>
       val user = ev.filter($"event_type" === "purchase")
         .agg(min($"user_id")).head().getLong(0)
       ev.filter($"user_id" === user)
-    }
-    val rows = SparkEntry.queries("a50_logrank")(spark, dir).collect()
+    }(SparkEntry.queries("a50_logrank")(spark, _).collect())
     assert(rows.length == 1, rows.mkString("\n"))
     val r = rows.head
     assert(r.getAs[Long]("n_exposed") + r.getAs[Long]("n_clean") == 1L)

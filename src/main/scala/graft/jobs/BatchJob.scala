@@ -38,11 +38,15 @@ case class XaiConfig(
   * flow: normalize → inject → persist job table → temporal split → fit →
   * detect → flag write-back → metrics → summary. Each stage is a DataFrame
   * transformation. A frame that more than one action reads (the job
-  * table, the scored frame, each importance frame) is materialized once
-  * with `localCheckpoint()`, and the counts the summary needs ride that
-  * same job through `observe`, so no action re-runs a frame's lineage.
-  * Beyond that, the driver only collects scalar metrics, the importance
-  * rows and bounded model state. Each stage's Spark jobs carry the
+  * table, the scored frame) is materialized once with `localCheckpoint()`,
+  * and the counts the summary needs ride that same job through `observe`:
+  * the job table's row and injection counts, the scored frame's flag
+  * count and its A3/A4 confusion counts (test split and all rows), from
+  * which `Metrics.confusionHost` derives the metrics. Each importance frame
+  * has one reader, its `collect` (one row per feature); NDCG scores the
+  * collected rows (`Xai.ndcgVsInjected`). So no action re-runs a frame's
+  * lineage, and the driver only collects counts, the importance rows and
+  * bounded model state. Each stage's Spark jobs carry the
   * description `graft:<job>:<stage>`, stage ∈ {simulation, training,
   * detection, evaluation, xai}.
   *
@@ -195,56 +199,57 @@ object BatchJob {
       })
     }
 
-    // detection on the full table (reference detects test + all;
-    // test-split metrics below reuse the same pass)
-    val (detected, flagged) = timed("detection") {
+    // detection on the full table (reference detects test + all). The
+    // A3/A4 confusion counts, on the test split and on everything (needs a
+    // label), ride the checkpoint's job next to `flagged`
+    val labeled = split.columns.contains("label")
+    val (detected, counts) = timed("detection") {
       val scored = fitted match {
         case f: FittedWindowZScore => f.transform(split, Some((rank, rows)))
         case f                     => f.transform(split)
       }
-      val (d, n) = observed(scored, count_if(col("is_anomaly")).as("flagged"))
-      (d, n("flagged"))
+      val pred = col("is_anomaly")
+      val actual = col("label") === 1
+      val cells = if (!labeled) Nil else Seq("tp" -> (pred && actual),
+        "tn" -> (!pred && !actual), "fp" -> (pred && !actual), "fn" -> (!pred && actual))
+      observed(scored, count_if(pred).as("flagged") +: cells.flatMap {
+        case (c, cond) => Seq(count_if(cond).as(s"all_$c"),
+          count_if(col("split") === "test" && cond).as(s"test_$c"))
+      }: _*)
     }
+    def metricsOf(part: String): Map[String, Double] =
+      if (!labeled) Map.empty
+      else Metrics.confusionHost(counts(s"${part}_tp"), counts(s"${part}_tn"),
+        counts(s"${part}_fp"), counts(s"${part}_fn"))
+    val (flagged, mTest, mAll) = (counts("flagged"), metricsOf("test"), metricsOf("all"))
 
     // J2 write-back: ONE overwrite of `<table>_scored` with the flag column
-    // (the reference's per-PK `UPDATE` loop), then A3/A4 metrics on the
-    // test split and on everything (needs a label)
-    def metricsOf(df: DataFrame): Map[String, Double] =
-      if (!df.columns.contains("label")) Map.empty
-      else {
-        val row = Metrics.confusion(df, col("is_anomaly"), col("label") === 1).head
-        row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
-          f -> row.get(i).toString.toDouble
-        }.toMap
-      }
-    val (mTest, mAll) = stage("evaluation") {
+    // (the reference's per-PK `UPDATE` loop)
+    stage("evaluation") {
       if (persistTable)
         Ingest.writeJobTable(detected.drop("split", "anomaly_score"),
           table + "_scored")
-      (metricsOf(detected.filter(col("split") === "test")), metricsOf(detected))
     }
 
-    // X1/X5: in-job explanation stage + NDCG vs injected ground truth
+    // X1/X5: in-job explanation stage + NDCG vs injected ground truth. Each
+    // importance frame (one row per feature) is read once, by `collect`;
+    // NDCG scores the collected rows
     val (xaiImp, xaiNdcg) = xai match {
-      case Some(cfg) if detected.columns.contains("label") => timed("xai") {
+      case Some(cfg) if labeled => timed("xai") {
         val truth = injections.flatMap(_.columns).toSet
         val byName = explainers.toMap
         val results = cfg.methods.map { m =>
           val explain = byName.getOrElse(m,
             throw new IllegalArgumentException(s"xai method $m"))
-          val df = explain(detected, fitted, cfg, (rank, rows))
-          // read by collect and, with a truth, by NDCG
-          m -> (if (truth.isEmpty) df else df.localCheckpoint())
+          m -> explain(detected, fitted, cfg, (rank, rows)).collect()
+            .map(r => r.getString(0) -> r.getDouble(1)).toSeq
         }
-        val imp = results.map { case (m, df) =>
-          m -> df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-        }.toMap
         val ndcg =
           if (truth.isEmpty) Map.empty[String, Double]
-          else results.map { case (m, df) =>
-            m -> Xai.ndcgVsInjected(df, truth, cfg.ndcgK)
+          else results.map { case (m, imp) =>
+            m -> Xai.ndcgVsInjected(imp, truth, cfg.ndcgK)
           }.toMap
-        (imp, ndcg)
+        (results.map { case (m, imp) => m -> imp.toMap }.toMap, ndcg)
       }
       case _ => (Map.empty[String, Map[String, Double]], Map.empty[String, Double])
     }

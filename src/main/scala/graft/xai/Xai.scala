@@ -408,14 +408,17 @@ object Xai {
   }
 
   /** X5: NDCG@k of an importance table against the set of actually-injected
-    * columns (relevance 1). */
+    * columns (relevance 1). The table has one row per feature: it is
+    * collected and scored by the rows overload. */
   def ndcgVsInjected(importance: DataFrame, injectedColumns: Set[String],
-                     k: Int): Double = {
-    val withRel = importance
-      .withColumn("rel",
-        col("feature").isInCollection(injectedColumns.toSeq).cast("double"))
-      .withColumn("grp", lit(1))
-    Metrics.ndcgAtK(withRel, Seq("grp"), col("importance"), col("rel"),
-      col("feature"), k).head.getAs[Double](s"ndcg_$k")
-  }
+                     k: Int): Double =
+    ndcgVsInjected(importance.select("feature", "importance").collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toSeq, injectedColumns, k)
+
+  /** X5 on collected (feature, importance) rows: [[Metrics.ndcgAtKHost]],
+    * ranked by importance then feature, relevance 1 for injected columns. */
+  def ndcgVsInjected(importance: Seq[(String, Double)],
+                     injectedColumns: Set[String], k: Int): Double =
+    Metrics.ndcgAtKHost(importance.map { case (f, v) =>
+      (f, v, if (injectedColumns(f)) 1.0 else 0.0) }, k)
 }

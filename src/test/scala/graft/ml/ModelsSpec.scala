@@ -191,9 +191,8 @@ class ModelsSpec extends SparkSpec {
       html.contains("NDCG"), html.take(200))
   }
 
-  /** The `exact_job` branch of `BatchJob.run`: windowed detector, one
-    * injection, per-timestep XAI, persisted job table. */
-  private def pinnedRun(job: String) = {
+  /** The pinned run's input: 1000 clean rows and one spike on v1. */
+  private def pinnedInput = {
     val rng = new scala.util.Random(23)
     val clean = (0 until 1000).map { i =>
       (ts(i), 50.0 + 10.0 * math.sin(i / 25.0) + rng.nextGaussian(),
@@ -201,6 +200,13 @@ class ModelsSpec extends SparkSpec {
     }.toDF("timestamp", "v1", "v2")
     val inj = AnomalySetting("spike", 1704067200L + 300, durationSec = 100,
       magnitude = 6.0, percentage = 80.0, columns = Seq("v1"))
+    (clean, inj)
+  }
+
+  /** The `exact_job` branch of `BatchJob.run`: windowed detector, one
+    * injection, per-timestep XAI, persisted job table. */
+  private def pinnedRun(job: String) = {
+    val (clean, inj) = pinnedInput
     BatchJob.run(spark, job, clean, "timestamp", None,
       injections = Seq(inj),
       detector = WindowZScoreDetector(Seq("v1", "v2"), L = 3),
@@ -215,9 +221,11 @@ class ModelsSpec extends SparkSpec {
       "Spark job count and outputs pinned") {
     try {
       val (s, jobs) = withJobCount(pinnedRun("t_pin"))
-      // each fanned-out frame is materialized once (111 jobs before), and
-      // `id + 1` is every consumer's global rank (59 jobs before)
-      assert(jobs == 34, s"jobs $jobs")
+      // each fanned-out frame is materialized once (111 jobs before),
+      // `id + 1` is every consumer's global rank (59 jobs before), and the
+      // metrics and NDCG come from the detection checkpoint's observation
+      // and the collected importance rows (34 jobs before)
+      assert(jobs == 27, s"jobs $jobs")
       // outputs equal those of the run before that change, bit for bit
       assert((s.rows, s.injectedRows, s.flaggedRows) == ((1000L, 78L, 56L)))
       assert(s.metricsTest == Map("accuracy" -> 0.9533, "f1_score" -> 0.0,
@@ -238,6 +246,22 @@ class ModelsSpec extends SparkSpec {
         xxhash64(scored.columns.map(col).toIndexedSeq: _*), lit(2147483647L)))).head
       assert((h.getLong(0), h.getLong(1)) == ((1000L, 1100422263566L)))
     } finally dropJobTables("t_pin")
+  }
+
+  test("batch job with an empty test split (trainRatio = 1.0): the " +
+      "test metrics are the zero-count map") {
+    val (clean, inj) = pinnedInput
+    val s = BatchJob.run(spark, "t_notest", clean, "timestamp", None,
+      injections = Seq(inj),
+      detector = WindowZScoreDetector(Seq("v1", "v2"), L = 3),
+      trainRatio = 1.0, persistTable = false)
+    assert(s.metricsTest == Map("accuracy" -> 0.0, "f1_score" -> 0.0,
+      "fn" -> 0.0, "fp" -> 0.0, "precision" -> 0.0, "recall_tpr" -> 0.0,
+      "specificity_tnr" -> 0.0, "tn" -> 0.0, "total_predictions" -> 0.0,
+      "tp" -> 0.0), s.metricsTest.toString)
+    assert(s.metricsAll("total_predictions") == 1000.0, s.metricsAll.toString)
+    assert(s.metricsAll("tp") + s.metricsAll("fn") == s.injectedRows.toDouble,
+      s.metricsAll.toString)
   }
 
   test("every Spark job of a batch run carries its stage tag; the caller's " +

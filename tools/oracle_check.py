@@ -2,8 +2,13 @@
 """Local pre-validation of SparkEntry oracles, mimicking the driver's
 correctness gate: read each <out>/<name> parquet (Spark result), run the
 matching oracle SQL in DuckDB over the same sf dir, compare schema + rows
-exactly (columns sorted by name, rows sorted)."""
-import json, sys, glob, os
+exactly (columns sorted by name, rows sorted).
+
+An input table is `<sf>/<t>.parquet`, one file or a directory of part files
+as Spark writes it. Each PASS/FAIL line carries the oracle query's DuckDB
+seconds; the slowest ten are listed before the `== N pass, M fail ==`
+summary, which stays the last line."""
+import json, sys, os, time
 import duckdb
 import pyarrow.parquet as pq
 import pandas as pd
@@ -15,26 +20,41 @@ def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
+        if os.path.isdir(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}/*.parquet')")
+        elif os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    secs = {}  # oracle query -> DuckDB seconds
+    wall0 = time.perf_counter()
+
+    def duck(name):
+        return f"duckdb {secs[name]:.3f}s" if name in secs else "duckdb not run"
+
     for name, sql in sorted(oracle.items()):
         res_dir = f"{out_dir}/{name}"
         if not os.path.isdir(res_dir):
-            print(f"FAIL {name}: no spark output dir"); n_fail += 1; continue
+            print(f"FAIL {name} [{duck(name)}]: no spark output dir")
+            n_fail += 1; continue
         try:
             spark_df = pq.read_table(res_dir).to_pandas()
-            duck_df = con.execute(sql).df()
+            t0 = time.perf_counter()
+            try:
+                duck_df = con.execute(sql).df()
+            finally:
+                secs[name] = time.perf_counter() - t0
         except Exception as e:
-            print(f"FAIL {name}: {type(e).__name__}: {e}"); n_fail += 1; continue
+            print(f"FAIL {name} [{duck(name)}]: {type(e).__name__}: {e}")
+            n_fail += 1; continue
+        dsec = duck(name)
         s = spark_df.reindex(sorted(spark_df.columns), axis=1)
         d = duck_df.reindex(sorted(duck_df.columns), axis=1)
         if list(s.columns) != list(d.columns):
-            print(f"FAIL {name}: cols spark={list(s.columns)} duck={list(d.columns)}")
+            print(f"FAIL {name} [{dsec}]: cols spark={list(s.columns)} duck={list(d.columns)}")
             n_fail += 1; continue
         if len(s) != len(d):
-            print(f"FAIL {name}: rows spark={len(s)} duck={len(d)}")
+            print(f"FAIL {name} [{dsec}]: rows spark={len(s)} duck={len(d)}")
             n_fail += 1; continue
         s = s.sort_values(by=list(s.columns)).reset_index(drop=True)
         d = d.sort_values(by=list(d.columns)).reset_index(drop=True)
@@ -43,7 +63,7 @@ def main(sf_dir, out_dir):
         # culprits — cast the oracle, not the Spark side)
         dt = [c for c in s.columns if str(s[c].dtype) != str(d[c].dtype)]
         if dt:
-            print(f"FAIL {name}: dtype mismatch {[(c, str(s[c].dtype), str(d[c].dtype)) for c in dt]}")
+            print(f"FAIL {name} [{dsec}]: dtype mismatch {[(c, str(s[c].dtype), str(d[c].dtype)) for c in dt]}")
             n_fail += 1; continue
         # normalize dtypes for compare
         mismatch = None
@@ -63,9 +83,14 @@ def main(sf_dir, out_dir):
                             f"spark={sv.iloc[i]!r} duck={dv.iloc[i]!r}")
                 break
         if mismatch:
-            print(f"FAIL {name}: {mismatch}"); n_fail += 1
+            print(f"FAIL {name} [{dsec}]: {mismatch}"); n_fail += 1
         else:
-            print(f"PASS {name} ({len(s)} rows)"); n_pass += 1
+            print(f"PASS {name} ({len(s)} rows, {dsec})"); n_pass += 1
+    slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:10]
+    print(f"-- slowest {len(slowest)} oracle queries by DuckDB s (DuckDB "
+          f"{sum(secs.values()):.1f} s of {time.perf_counter() - wall0:.1f} s) --")
+    for name, sec in slowest:
+        print(f"  {sec:8.3f}  {name}")
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
 

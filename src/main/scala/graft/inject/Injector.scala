@@ -64,23 +64,38 @@ object Injector {
       case other => throw new IllegalArgumentException(s"unknown anomaly_type $other")
     }
 
+  /** Whether [[injectedValue]] reads the selected-slice `mean`/`range` for
+    * this method: `lowered` (both) and `step` (mean). `spike`, `custom` and
+    * `offline` are pure per-row rewrites. Throws on an unknown method, as
+    * [[injectedValue]] does. */
+  def usesStats(anomalyType: String): Boolean = anomalyType match {
+    case "lowered" | "step"            => true
+    case "spike" | "custom" | "offline" => false
+    case other => throw new IllegalArgumentException(s"unknown anomaly_type $other")
+  }
+
   /** Apply one setting to a job DataFrame. Expects a stable numeric `idCol`
     * and a timestamp `tsCol`; rewrites each target column, sets
     * `injected_anomaly` and `label` on touched rows
-    * (`anomalyinjector.py:156-167`). Per-column mean/range (A1) are computed
-    * over the *selected* slice (matching the reference, which draws the
-    * subset first and derives stats from it, `anomalyinjector.py:148-154`)
-    * in one tiny conditional-aggregate pass joined back by cross-join
-    * broadcast (constant per setting — no per-row shuffle).
+    * (`anomalyinjector.py:156-167`). For the methods that read them
+    * ([[usesStats]]: `lowered`, `step`) the per-column mean/range (A1) are
+    * computed over the *selected* slice (matching the reference, which
+    * draws the subset first and derives stats from it,
+    * `anomalyinjector.py:148-154`) in one tiny conditional-aggregate pass
+    * joined back by cross-join broadcast (constant per setting — no
+    * per-row shuffle). The other methods build no aggregate: the setting
+    * is one projection over `df`.
     */
   def inject(df: DataFrame, idCol: String, tsCol: String, s: AnomalySetting): DataFrame = {
     val epochS = col(tsCol).cast("long")
-    val stats = df.select(s.columns.zipWithIndex.flatMap { case (c, i) =>
-      val sel = selected(col(idCol), epochS, s, i)
-      Seq(avg(when(sel, col(c))).as(s"__mean_$c"),
-        (max(when(sel, col(c))) - min(when(sel, col(c)))).as(s"__range_$c"))
-    }: _*)
-    val withStats = df.crossJoin(broadcast(stats))
+    val withStats =
+      if (!usesStats(s.anomalyType)) df
+      else df.crossJoin(broadcast(df.select(s.columns.zipWithIndex.flatMap {
+        case (c, i) =>
+          val sel = selected(col(idCol), epochS, s, i)
+          Seq(avg(when(sel, col(c))).as(s"__mean_$c"),
+            (max(when(sel, col(c))) - min(when(sel, col(c)))).as(s"__range_$c"))
+      }: _*)))
 
     val touched = s.columns.zipWithIndex
       .map { case (c, i) => selected(col(idCol), epochS, s, i) }

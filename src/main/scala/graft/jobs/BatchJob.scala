@@ -44,11 +44,13 @@ case class XaiConfig(
   * count and its A3/A4 confusion counts (test split and all rows), from
   * which `Metrics.confusionHost` derives the metrics. Each importance frame
   * has one reader, its `collect` (one row per feature); NDCG scores the
-  * collected rows (`Xai.ndcgVsInjected`). So no action re-runs a frame's
-  * lineage, and the driver only collects counts, the importance rows and
-  * bounded model state. Each stage's Spark jobs carry the
-  * description `graft:<job>:<stage>`, stage ∈ {simulation, training,
-  * detection, evaluation, xai}.
+  * collected rows (`Xai.ndcgVsInjected`). `per_timestep_importance`
+  * collects its F·L unsorted (feature, lag) means instead and sums each
+  * feature's lags on the host (`Xai.aggregateTimestepsHost`), so it runs
+  * no sort. No action re-runs a frame's lineage, and the driver only
+  * collects counts, the importance rows and bounded model state. Each
+  * stage's Spark jobs carry the description `graft:<job>:<stage>`,
+  * stage ∈ {simulation, training, detection, evaluation, xai}.
   *
   * One order: `Ingest.normalize` makes `id` a 0-based dense rank over
   * `(timestamp, measures…, label)` — unique by construction, since it is a
@@ -63,29 +65,36 @@ object BatchJob {
 
   /** One XAI method: the scored frame (checkpointed, with `split`,
     * `anomaly_score`, `is_anomaly`), the fitted model, the stage config
-    * and the frame's (rank, total) in time order → (feature, importance). */
-  private type Explainer = (DataFrame, FittedDetector, XaiConfig, (Column, Long)) => DataFrame
+    * and the frame's (rank, total) in time order → the collected
+    * (feature, importance) rows. */
+  private type Explainer =
+    (DataFrame, FittedDetector, XaiConfig, (Column, Long)) => Seq[(String, Double)]
+
+  /** The rows of a (feature, importance) frame, one per feature. */
+  private def importanceRows(df: DataFrame): Seq[(String, Double)] =
+    df.collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq
 
   private val explainers: Seq[(String, Explainer)] = Seq(
     ("permutation_importance", (detected, fitted, cfg, _) =>
-      Xai.permutationImportance(detected, fitted, cfg.features)),
+      importanceRows(Xai.permutationImportance(detected, fitted, cfg.features))),
     ("nun_counterfactuals", (detected, _, cfg, _) => {
       val anoms = detected.filter(col("is_anomaly")).limit(cfg.nInstances)
       val normals = detected.filter(!col("is_anomaly")).limit(500)
-      Xai.counterfactualImportance(
-        Xai.nunCounterfactuals(anoms, normals, cfg.features), cfg.features)
+      importanceRows(Xai.counterfactualImportance(
+        Xai.nunCounterfactuals(anoms, normals, cfg.features), cfg.features))
     }),
     ("lime", (detected, fitted, cfg, _) => {
       // X3: a local linear surrogate around each of up to nInstances
       // flagged rows, mean |weight| per feature
       val anoms = detected.filter(col("is_anomaly")).limit(cfg.nInstances)
-      Lime.importance(detected.sparkSession,
-        Lime.explain(anoms, detected, fitted, cfg.features), cfg.features)
+      importanceRows(Lime.importance(detected.sparkSession,
+        Lime.explain(anoms, detected, fitted, cfg.features), cfg.features))
     }),
     ("per_timestep_importance", (detected, fitted, cfg, rank) => {
       // X2 over sequences: per-(feature, lag) occlusion attribution on
-      // flattened windows of the labeled anomalies, reduced to base
-      // features (xai_runner.py:197-308)
+      // flattened windows of the labeled anomalies (xai_runner.py:197-308).
+      // Its F·L (feature, lag) means are collected unsorted and reduced to
+      // base features on the host: no sort, no second aggregate
       val fz = fitted match {
         case f: FittedWindowZScore => f
         case _ => throw new IllegalArgumentException(
@@ -95,10 +104,10 @@ object BatchJob {
         detected.drop("anomaly_score", "is_anomaly", "split"),
         fz.cfg.seriesCol, "timestamp", cfg.features, fz.cfg.L,
         orderTiebreak = Seq(col("id")), rank = Some(rank))
-      val perTs = Xai.perTimestepAttribution(
-        flat.filter(col("label") === 1), fz.transformFlat,
-        cfg.features, fz.cfg.L)
-      Xai.aggregateTimesteps(perTs)
+      Xai.aggregateTimestepsHost(Xai.perTimestepImportance(
+          flat.filter(col("label") === 1), fz.transformFlat,
+          cfg.features, fz.cfg.L)
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSeq)
     }),
     ("random_counterfactuals", (detected, fitted, cfg, _) => {
       // X4 'random' DiCE mode; needs a per-row scorer, so windowed
@@ -106,16 +115,16 @@ object BatchJob {
       val clean = detected.drop("anomaly_score", "is_anomaly")
       val anoms = detected.filter(col("is_anomaly")).limit(cfg.nInstances)
         .drop("anomaly_score", "is_anomaly")
-      Xai.counterfactualImportance(Xai.randomCounterfactuals(
-        anoms, clean, fitted.transform, cfg.features), cfg.features)
+      importanceRows(Xai.counterfactualImportance(Xai.randomCounterfactuals(
+        anoms, clean, fitted.transform, cfg.features), cfg.features))
     }),
     ("genetic_counterfactuals", (detected, fitted, cfg, _) => {
       // X4 'genetic' DiCE mode: evolved validity/proximity/sparsity
       val clean = detected.drop("anomaly_score", "is_anomaly")
       val anoms = detected.filter(col("is_anomaly")).limit(cfg.nInstances)
         .drop("anomaly_score", "is_anomaly")
-      Xai.counterfactualImportance(Xai.geneticCounterfactuals(
-        anoms, clean, fitted.transform, cfg.features), cfg.features)
+      importanceRows(Xai.counterfactualImportance(Xai.geneticCounterfactuals(
+        anoms, clean, fitted.transform, cfg.features), cfg.features))
     }))
 
   /** The XAI method names [[run]] accepts in `XaiConfig.methods`. */
@@ -232,8 +241,8 @@ object BatchJob {
     }
 
     // X1/X5: in-job explanation stage + NDCG vs injected ground truth. Each
-    // importance frame (one row per feature) is read once, by `collect`;
-    // NDCG scores the collected rows
+    // method returns its collected (feature, importance) rows; NDCG scores
+    // them
     val (xaiImp, xaiNdcg) = xai match {
       case Some(cfg) if labeled => timed("xai") {
         val truth = injections.flatMap(_.columns).toSet
@@ -241,8 +250,7 @@ object BatchJob {
         val results = cfg.methods.map { m =>
           val explain = byName.getOrElse(m,
             throw new IllegalArgumentException(s"xai method $m"))
-          m -> explain(detected, fitted, cfg, (rank, rows)).collect()
-            .map(r => r.getString(0) -> r.getDouble(1)).toSeq
+          m -> explain(detected, fitted, cfg, (rank, rows))
         }
         val ndcg =
           if (truth.isEmpty) Map.empty[String, Double]

@@ -13,8 +13,9 @@ import graft.inject.{AnomalySetting, Injector}
   * draws, selected-slice stats), so the only cross-engine risk is the
   * selected-slice mean (double sum order); outputs are rounded to 4 dp.
   *
-  * The whole operator is one codegen'd projection over a broadcast 1-row
-  * stats frame — no shuffle, linear at any scale.
+  * The whole operator is one codegen'd projection — over a broadcast 1-row
+  * stats frame for the methods that read stats (lowered, step) — no
+  * shuffle, linear at any scale.
   */
 object Inject {
 

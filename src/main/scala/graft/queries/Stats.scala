@@ -1671,6 +1671,15 @@ object Stats {
   private def qMilli(col: String) =
     s"CAST(round($col * 1000) AS BIGINT)"
 
+  /** The (lag, xq, yq) pairs `y.pos = x.pos + lag` of a CTE `o(q, pos)`,
+    * for lags 1..maxLag: one equi-join per lag, UNION ALL'd, so each is a
+    * hash join on `pos`. A lag table cross-joined into the join key made
+    * DuckDB's cost grow quadratically in the rows. */
+  private[queries] def lagPairsSql(maxLag: Int): String =
+    (1 to maxLag).map(l =>
+      s"SELECT $l AS lag, x.q AS xq, y.q AS yq FROM o x JOIN o y ON y.pos = x.pos + $l")
+      .mkString("\n  UNION ALL ")
+
   private val toksSql =
     "list_filter(string_split(text, ' '), x -> len(x) > 0)"
 
@@ -1709,17 +1718,13 @@ object Stats {
 
   def oracles: Map[String, String] = Map(
     "a38_acf" -> {
-      val lags = (1 to AcfMaxLag).map(l => s"($l)").mkString(", ")
       s"""WITH o AS (
          |  SELECT ${qMilli("value")} AS q,
          |    row_number() OVER (ORDER BY ${Det.epochSSql("ts")}, event_id)
          |      AS pos
          |  FROM events),
          |p AS (
-         |  SELECT l.lag, x.q AS xq, y.q AS yq
-         |  FROM (VALUES $lags) l(lag)
-         |  JOIN o x ON true
-         |  JOIN o y ON y.pos = x.pos + l.lag),
+         |  ${lagPairsSql(AcfMaxLag)}),
          |st AS (
          |  SELECT lag, CAST(count(*) AS BIGINT) AS n_pairs,
          |    CAST(sum(xq) AS BIGINT) AS sx, CAST(sum(yq) AS BIGINT) AS sy,
@@ -1982,17 +1987,13 @@ object Stats {
     },
 
     "a56_pacf" -> {
-      val lags = (1 to AcfMaxLag).map(l => s"($l)").mkString(", ")
       s"""WITH o AS (
          |  SELECT ${qMilli("value")} AS q,
          |    row_number() OVER (ORDER BY ${Det.epochSSql("ts")}, event_id)
          |      AS pos
          |  FROM events),
          |p AS (
-         |  SELECT l.lag, x.q AS xq, y.q AS yq
-         |  FROM (VALUES $lags) l(lag)
-         |  JOIN o x ON true
-         |  JOIN o y ON y.pos = x.pos + l.lag),
+         |  ${lagPairsSql(AcfMaxLag)}),
          |st AS (
          |  SELECT lag, CAST(count(*) AS BIGINT) AS n_pairs,
          |    CAST(sum(xq) AS BIGINT) AS sx, CAST(sum(yq) AS BIGINT) AS sy,

@@ -873,11 +873,9 @@ object Stats2 {
          |  FROM (VALUES $lags) l(lag) JOIN o ON true
          |  GROUP BY l.lag),
          |pk AS (
-         |  SELECT l.lag, CAST(sum(x.q * y.q) AS BIGINT) AS pk
-         |  FROM (VALUES $lags) l(lag)
-         |  JOIN o x ON true
-         |  JOIN o y ON y.pos = x.pos + l.lag
-         |  GROUP BY l.lag),
+         |  SELECT lag, CAST(sum(xq * yq) AS BIGINT) AS pk
+         |  FROM (${Stats.lagPairsSql(LbMaxLag)}) p
+         |  GROUP BY lag),
          |mom AS (
          |  SELECT CAST(sum(q) AS BIGINT) AS sq,
          |    CAST(sum(q * q) AS BIGINT) AS ssq

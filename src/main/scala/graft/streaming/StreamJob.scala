@@ -971,11 +971,15 @@ object StreamJob {
   }
 
   /** T2: per-row streaming injection for a list of settings (stats from the
-    * static pre-pass). */
+    * static pre-pass, run only for the methods that read them,
+    * [[Injector.usesStats]]). */
   def injectStream(stream: DataFrame, staticDf: DataFrame, idCol: String,
                    tsCol: String, settings: Seq[AnomalySetting]): DataFrame =
     settings.foldLeft(stream) { (s, setting) =>
-      val stats = Injector.staticStats(staticDf, idCol, tsCol, setting)
+      val stats =
+        if (Injector.usesStats(setting.anomalyType))
+          Injector.staticStats(staticDf, idCol, tsCol, setting)
+        else Map.empty[String, (Double, Double)]
       Injector.injectStreaming(s, idCol, tsCol, setting, stats)
     }
 

@@ -158,10 +158,19 @@ object Xai {
                              features: Seq[String], L: Int): DataFrame = {
     val spark = instances.sparkSession
     import spark.implicits._
-    perInstanceAttribution(instances, score, features, L)
-      .groupBy($"feature", $"lag").agg(avg($"attribution").as("importance"))
+    perTimestepImportance(instances, score, features, L)
       .orderBy($"importance".desc, $"feature", $"lag")
   }
+
+  /** [[perTimestepAttribution]] without its sort: one (feature, lag,
+    * importance) row per cell, in no particular order — the F·L rows a
+    * caller collects for [[aggregateTimestepsHost]]. */
+  def perTimestepImportance(instances: DataFrame,
+                            score: DataFrame => DataFrame,
+                            features: Seq[String], L: Int): DataFrame =
+    perInstanceAttribution(instances, score, features, L)
+      .groupBy(col("feature"), col("lag"))
+      .agg(avg(col("attribution")).as("importance"))
 
   /** The per-INSTANCE form of [[perTimestepAttribution]] — one row per
     * (instance, feature, lag) with that cell's |score drop|, i.e. the
@@ -231,6 +240,18 @@ object Xai {
       .agg(sum(abs($"importance")).as("importance"))
       .orderBy($"importance".desc, $"feature")
   }
+
+  /** [[aggregateTimesteps]] on collected (feature, lag, importance) rows:
+    * per feature, |importance| summed as a left fold from 0.0 in ascending
+    * lag order, so the result is a function of the rows alone (Spark's sum
+    * associates by partition). F·L rows are model-size state, like the
+    * (feature, importance) rows every XAI method collects. Output is
+    * ordered by importance desc, then feature. */
+  def aggregateTimestepsHost(perTimestep: Seq[(String, Int, Double)])
+      : Seq[(String, Double)] =
+    perTimestep.groupBy(_._1).toSeq.map { case (f, cells) =>
+      f -> cells.sortBy(_._2).foldLeft(0.0)((acc, c) => acc + math.abs(c._3))
+    }.sortBy { case (f, v) => (-v, f) }
 
   /** X4 "random" mode — DiCE's diverse random counterfactuals
     * (`Backend/XAI_methods/methods/DiceExplainer.py:39` `dice_method=

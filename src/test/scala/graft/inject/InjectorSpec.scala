@@ -1,7 +1,10 @@
 package graft.inject
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import java.sql.Timestamp
 
 class InjectorSpec extends SparkSpec {
@@ -111,5 +114,73 @@ class InjectorSpec extends SparkSpec {
     assert(out(3L)._1 == 13.0 * 3.0 && out(3L)._2 == 1)
     assert(out(6L)._1 == 16.0 * 10.0 && out(6L)._2 == 1)
     assert(out(8L)._1 == 18.0 && out(8L)._2 == 0)
+  }
+
+  // 48 rows over 2 partitions; every value is a multiple of 1/4 with a
+  // small integer part, so the slice sums behind mean/range are exact in
+  // any association and both stats paths must agree bit for bit
+  private val propBase = (0 until 48).map(i =>
+    (i.toLong, new Timestamp((1704067200L + i) * 1000L),
+      3.0 + (i % 13) * 0.25, -2.0 + (i * 7 % 11) * 0.5))
+    .toDF("id", "ts", "v", "w")
+  private val propStart = 1704067200L
+
+  private def bitsById(df: DataFrame) =
+    df.select($"id", $"v", $"w", $"injected_anomaly", $"label").collect()
+      .map(r => r.getLong(0) -> ((java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getBoolean(3), r.getInt(4))))
+      .toMap
+
+  /** The streaming twin with its stats pre-pass: the reference for [[inject]]. */
+  private def viaStreaming(df: DataFrame, s: AnomalySetting): DataFrame =
+    Injector.injectStreaming(df, "id", "ts", s, Injector.staticStats(df, "id", "ts", s))
+
+  private def checkProp[T](n: Int, cases: Gen[T])(ok: T => Boolean): Unit = {
+    val params = Test.Parameters.default.withMinSuccessfulTests(n)
+      .withInitialSeed(Seed(42L))
+    val res = Test.check(params, Prop.forAllNoShrink(cases)(ok))
+    assert(res.passed, res.status)
+  }
+
+  private val settingGen: Gen[AnomalySetting] = for {
+    typ <- Gen.oneOf("spike", "lowered", "step", "offline", "custom")
+    // empty (duration 0), partial, whole-frame and out-of-frame spans
+    (start, dur) <- Gen.frequency(
+      1 -> Gen.zip(Gen.choose(-5L, 50L), Gen.const(0L)),
+      1 -> Gen.const((-10L, 80L)),
+      4 -> Gen.zip(Gen.choose(-5L, 50L), Gen.choose(1L, 30L)))
+    pct <- Gen.frequency(1 -> Gen.const(0.0), 2 -> Gen.const(100.0),
+      3 -> Gen.choose(1.0, 99.0))
+    mag <- Gen.oneOf(Gen.const(0.0), Gen.choose(-3.0, 8.0))
+    cols <- Gen.oneOf(Seq("v"), Seq("w"), Seq("v", "w"), Seq("w", "v"))
+    seed <- Gen.choose(0L, 1000000L)
+  } yield AnomalySetting(typ, propStart + start, dur, mag, pct, cols, seed)
+
+  test("inject ≡ injectStreaming with staticStats, bit for bit, over all " +
+      "five methods; only lowered/step plan the stats broadcast") {
+    checkProp(30, settingGen) { s =>
+      val out = Injector.inject(propBase, "id", "ts", s)
+      val broadcasts = out.queryExecution.executedPlan.toString
+        .contains("BroadcastExchange")
+      val same = bitsById(out) == bitsById(viaStreaming(propBase, s))
+      val ok = same && broadcasts == Set("lowered", "step")(s.anomalyType)
+      if (!ok) println(s"failing setting $s: equal=$same broadcast=$broadcasts")
+      ok
+    }
+  }
+
+  test("injectAll of two settings ≡ the streaming twin's fold (each " +
+      "setting's stats taken on the frame the previous one produced)") {
+    checkProp(10, Gen.zip(settingGen, settingGen)) { case (s1, s2) =>
+      val fold = Seq(s1, s2).foldLeft(propBase)(viaStreaming)
+      bitsById(Injector.injectAll(propBase, "id", "ts", Seq(s1, s2))) ==
+        bitsById(fold)
+    }
+  }
+
+  test("an unknown method throws when the frame is built") {
+    val bad = span.copy(anomalyType = "sawtooth")
+    intercept[IllegalArgumentException](Injector.inject(base, "id", "ts", bad))
+    intercept[IllegalArgumentException](Injector.usesStats("sawtooth"))
   }
 }

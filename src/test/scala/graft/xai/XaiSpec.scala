@@ -4,6 +4,8 @@ import graft.SparkSpec
 import graft.ml.{FittedWindowZScore, SupervisedDetector, WindowZScoreDetector}
 import graft.window.Sequencer
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import java.sql.Timestamp
 
 class XaiSpec extends SparkSpec {
@@ -210,5 +212,85 @@ class XaiSpec extends SparkSpec {
       Xai.counterfactualImportance(cfs, Seq("v1", "v2")), Set("v1"), 3)
     assert(ndcg == 1.0) // ground-truth feature ranked first
     scored.unpersist()
+  }
+
+  /** Per feature, |importance| summed lag by lag from lag 0 upward. */
+  private def lagOrderFold(rows: Seq[(String, Int, Double)]): Map[String, Double] =
+    rows.map(_._1).distinct.map { f =>
+      var acc = 0.0
+      for (lag <- 0 to rows.map(_._2).max; r <- rows if r._1 == f && r._2 == lag)
+        acc += math.abs(r._3)
+      f -> acc
+    }.toMap
+
+  /** |a − b| within `n` ulp of the larger magnitude. */
+  private def withinUlps(a: Double, b: Double, n: Int): Boolean =
+    math.abs(a - b) <= n * math.ulp(math.max(math.abs(a), math.abs(b)))
+
+  test("aggregateTimestepsHost ≡ aggregateTimesteps within 4 ulp, and ≡ " +
+      "the lag-order fold exactly, on any row order") {
+    // distinct (feature, lag) cells as perTimestepImportance emits them:
+    // up to 5 lags per feature (so any two summation orders of the
+    // non-negative |importance| terms differ by at most 4 ulp), signed
+    // values, tied values, features with a single lag
+    val value = Gen.frequency(2 -> Gen.oneOf(0.0, 0.5, -0.5, 1.7187256645993616),
+      5 -> Gen.choose(-1e3, 1e3), 2 -> Gen.choose(-1e-3, 1e-3))
+    val feature = for {
+      name <- Gen.oneOf("v1", "v2", "f0", "f1", "cpu", "mem", "ü")
+      lags <- Gen.frequency(1 -> Gen.const(Seq(0)),
+        1 -> Gen.choose(0, 4).map(Seq(_)),
+        4 -> Gen.choose(2, 5).map(0 until _))
+      vs <- Gen.listOfN(lags.size, value)
+    } yield lags.zip(vs).map { case (l, v) => (name, l, v) }
+    val cases = for {
+      n <- Gen.choose(1, 5)
+      fs <- Gen.listOfN(n, feature)
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield {
+      val rows = fs.flatten.groupBy(r => (r._1, r._2)).values.map(_.head).toSeq
+      new scala.util.Random(seed).shuffle(rows)
+    }
+    val params = Test.Parameters.default.withMinSuccessfulTests(25)
+      .withInitialSeed(Seed(42L))
+    val res = Test.check(params, Prop.forAllNoShrink(cases) { rows =>
+      val host = Xai.aggregateTimestepsHost(rows)
+      val spark = Xai.aggregateTimesteps(rows.toDF("feature", "lag", "importance")
+          .repartition(3))
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      val fold = lagOrderFold(rows)
+      val ok = host.map(_._1).toSet == spark.keySet &&
+        host.forall { case (f, v) => withinUlps(v, spark(f), 4) } &&
+        host.toMap.map { case (f, v) => f -> java.lang.Double.doubleToRawLongBits(v) } ==
+          fold.map { case (f, v) => f -> java.lang.Double.doubleToRawLongBits(v) } &&
+        host.size == fold.size
+      if (!ok) println(s"rows $rows: host $host spark $spark fold $fold")
+      ok
+    })
+    assert(res.passed, res.status)
+  }
+
+  test("per-timestep attribution collected unsorted and reduced on the host " +
+      "≡ the sorted Spark reduction; an empty instance set gives no rows") {
+    val det = WindowZScoreDetector(Seq("v1", "v2"), L = 4)
+    val fitted = det.fit(seriesData).asInstanceOf[FittedWindowZScore]
+    val flat = Sequencer.flattenWindows(seriesData, None, "timestamp",
+      Seq("v1", "v2"), 4, Seq($"id")).cache()
+    def both(instances: org.apache.spark.sql.DataFrame) = {
+      val host = Xai.aggregateTimestepsHost(Xai.perTimestepImportance(instances,
+          fitted.transformFlat, Seq("v1", "v2"), 4)
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSeq)
+      val sorted = Xai.aggregateTimesteps(Xai.perTimestepAttribution(instances,
+          fitted.transformFlat, Seq("v1", "v2"), 4))
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq
+      (host, sorted)
+    }
+    val (host, sorted) = both(flat.filter($"label" === 1))
+    assert(host.map(_._1) == sorted.map(_._1) && host.map(_._1).head == "v1",
+      s"$host vs $sorted")
+    host.zip(sorted).foreach { case ((f, a), (_, b)) =>
+      assert(withinUlps(a, b, 4), s"$f: $a vs $b")
+    }
+    assert(both(flat.filter(lit(false))) == ((Nil, Nil)))
+    flat.unpersist()
   }
 }

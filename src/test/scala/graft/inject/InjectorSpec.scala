@@ -116,9 +116,9 @@ class InjectorSpec extends SparkSpec {
     assert(out(8L)._1 == 18.0 && out(8L)._2 == 0)
   }
 
-  // 48 rows over 2 partitions; every value is a multiple of 1/4 with a
-  // small integer part, so the slice sums behind mean/range are exact in
-  // any association and both stats paths must agree bit for bit
+  // 48 rows; every value is a multiple of 1/4 with a small integer part,
+  // so the slice sums behind mean/range are exact in any association and
+  // both stats paths must agree bit for bit
   private val propBase = (0 until 48).map(i =>
     (i.toLong, new Timestamp((1704067200L + i) * 1000L),
       3.0 + (i % 13) * 0.25, -2.0 + (i * 7 % 11) * 0.5))

@@ -40,14 +40,16 @@ object Simhash64Expr {
     graftbridge.toColumn(Simhash64Expr(graftbridge.toExpression(tokens)))
 
   /** DuckDB twin: identical bit decomposition via hex-nibble lookup.
-    * `tokens` is a SQL expression yielding a VARCHAR list. */
-  def simhash64Sql(tokens: String): String = {
+    * `digests` is a SQL expression yielding the VARCHAR list of the
+    * tokens' md5 hex digests, best computed once in an inner projection:
+    * each of the 64 bit terms reads the list. */
+  def simhash64Sql(digests: String): String = {
     val bits = (0 until 64).map { b =>
       val hexPos = b / 4 + 1          // 1-based hex char
       val nibbleBit = 3 - (b % 4)     // high-to-low within the nibble
-      s"""(CASE WHEN list_sum(list_transform($tokens, t ->
+      s"""(CASE WHEN list_sum(list_transform($digests, d ->
          |  CASE WHEN ((strpos('0123456789abcdef',
-         |    substr(md5(t), $hexPos, 1)) - 1) >> $nibbleBit) & 1 = 1
+         |    substr(d, $hexPos, 1)) - 1) >> $nibbleBit) & 1 = 1
          |  THEN 1 ELSE -1 END)) > 0
          |  THEN ${if (b == 63) "(-9223372036854775807 - 1)"
                    else s"(CAST(1 AS BIGINT) << $b)"} ELSE 0 END)""".stripMargin

@@ -520,7 +520,7 @@ object Core2 {
            |  round(${Det.fracSql("event_id", 42L)}, 8) AS frac,
            |  CAST(5400 AS BIGINT) AS dur_s,
            |  round(value * 2.0 + 3.0, 6) AS dot,
-           |  CAST(${graft.expressions.Simhash64Expr.simhash64Sql("[event_type]")}
+           |  CAST(${graft.expressions.Simhash64Expr.simhash64Sql("[md5(event_type)]")}
            |    AS BIGINT) AS sh64,
            |  CAST($zTerms AS BIGINT) AS zv,
            |  event_type || '|k' AS ng,

@@ -52,11 +52,12 @@ object TextDedup {
 
   private def toks(c: Column) = TextOps.tokens(c)
 
-  /** Signature frame: doc_id + 8 minhash slices s0..s7, via the native
-    * single-pass [[graft.expressions.MinHashSigExpr]] (no intermediate
-    * shingle/digest arrays; proven identical to the functions composition
-    * and the DuckDB oracle in `MinHashSigSpec`). */
-  private def sigDF(s: SparkSession, dir: String): DataFrame = {
+  /** Signature frame: doc_id + 8 minhash slices s0..s7 + `cols` (per-doc
+    * columns over `documents`' own columns, computed in the same pass), via
+    * the native single-pass [[graft.expressions.MinHashSigExpr]] (no
+    * intermediate shingle/digest arrays; proven identical to the functions
+    * composition and the DuckDB oracle in `MinHashSigSpec`). */
+  private def sigDF(s: SparkSession, dir: String, cols: Column*): DataFrame = {
     import s.implicits._
     // single-file parquet → 1 input split; spread the md5-heavy projection
     // across cores (at warehouse scale the source has many splits already)
@@ -65,8 +66,23 @@ object TextDedup {
       .withColumn("__sig",
         graft.expressions.MinHashSigExpr.sigs($"text", SHINGLE_K))
       .select(($"doc_id" +: (0 until 8).map(j =>
-        element_at($"__sig", j + 1).as(s"s$j"))): _*)
+        element_at($"__sig", j + 1).as(s"s$j"))) ++ cols: _*)
   }
+
+  /** The one corpus frame of a minhash dedup query: [[sigDF]] with the
+    * caller's per-doc `cols`. Contract: `documents` is read once,
+    * repartitioned once and localCheckpointed once; every stage of the
+    * query reads this checkpoint, never the table; it keeps no bytes that
+    * no stage reads (z3 nulls the tokens of docs no stage tokenizes).
+    * localCheckpoint, not cache: cache matching is plan-identity-fragile,
+    * and a miss under one of the frame's consumers (both band join sides,
+    * both est joins, the verify joins) recomputes the minhash pass. */
+  private def corpusSig(s: SparkSession, dir: String, cols: Column*): DataFrame =
+    sigDF(s, dir, cols: _*).localCheckpoint()
+
+  /** Distinct verification word n-grams of `documents`' `text` as `g`. */
+  private def gramSet: Column =
+    array_distinct(TextOps.wordNgrams(toks(col("text")), NGRAM_N)).as("g")
 
   /** MinHash LSH band memberships of a `(doc_id, text, …)` frame — 4
     * bands × 2 slices over the 8-slice signature, the d16 index geometry.
@@ -86,8 +102,7 @@ object TextDedup {
   /** Distinct verification n-grams of a `(doc_id, text, …)` frame (the
     * d16 exact-Jaccard gate input) — shared with the streaming sink. */
   private[graft] def gramsOfDocs(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      array_distinct(TextOps.wordNgrams(toks(col("text")), NGRAM_N)).as("g"))
+    docs.select(col("doc_id"), gramSet)
 
   /** d16's probe-and-report body: band-bucket candidates (small new side
     * BROADCAST into the index side), exact n-gram Jaccard verify at τ =
@@ -139,22 +154,14 @@ object TextDedup {
     * verified, not all-pairs ground truth). */
   private[queries] def jacVerifiedPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // localCheckpoint: the gram frame feeds BOTH verify-join sides — the
-    // unchecked frame recomputed the whole tokenize+ngram+distinct pass
-    // once per side (optimization r13; the d6/d13/d17 gram frames were
-    // already checkpointed, this one had been missed)
-    val grams = t(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism)
-      .select($"doc_id",
-        array_distinct(TextOps.wordNgrams(toks($"text"), NGRAM_N))
-          .as("g"))
-      .localCheckpoint()
-    // est-free candidate generator: d22/d25 verify exactly, so the
-    // est_jaccard re-joins lshPairs pays are dead weight here (see
-    // lshCandFromSig — the pair set is provably identical)
-    lshCandFromSig(sigDF(s, dir).localCheckpoint())
-      .join(grams.select($"doc_id".as("a_id"), $"g".as("ga")), Seq("a_id"))
-      .join(grams.select($"doc_id".as("b_id"), $"g".as("gb")), Seq("b_id"))
+    // one corpus checkpoint carries the signatures AND the grams both
+    // verify-join sides read; the candidate generator is est-free: d22/d25
+    // verify exactly, so the est_jaccard re-joins lshPairs pays are dead
+    // weight here (see lshCandFromSig — the pair set is provably identical)
+    val sig = corpusSig(s, dir, gramSet)
+    lshCandFromSig(sig)
+      .join(sig.select($"doc_id".as("a_id"), $"g".as("ga")), Seq("a_id"))
+      .join(sig.select($"doc_id".as("b_id"), $"g".as("gb")), Seq("b_id"))
       .select($"a_id", $"b_id",
         size(array_intersect($"ga", $"gb")).cast("long").as("inter"),
         (size($"ga") + size($"gb")).cast("long").as("__sum"))
@@ -195,21 +202,16 @@ object TextDedup {
   }
 
   /** Candidate pairs sharing ≥1 of 4 LSH bands (2 slices per band), with
-    * their 8-slice match count as estimated Jaccard. */
-  private def lshPairs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // localCheckpoint, not cache: the signature frame feeds FOUR consumers
-    // (band self-join both sides + two est joins), several through
-    // broadcast builds. Cache matching is plan-identity-fragile here and a
-    // miss makes every broadcast build recompute the whole minhash pass;
-    // checkpoint blocks are unconditionally reused.
-    val sig = sigDF(s, dir).localCheckpoint()
-    val cand = lshCandFromSig(sig)
+    * their 8-slice match count as estimated Jaccard, over a [[corpusSig]]
+    * frame (it feeds four consumers: both band self-join sides and both
+    * est joins). */
+  private def lshPairs(sig: DataFrame): DataFrame = {
     val est = (0 until 8).map(j =>
       when(col(s"xa.s$j") === col(s"xb.s$j"), 1).otherwise(0)).reduce(_ + _)
-    cand.join(sig.as("xa"), col("a_id") === col("xa.doc_id"))
+    lshCandFromSig(sig)
+      .join(sig.as("xa"), col("a_id") === col("xa.doc_id"))
       .join(sig.as("xb"), col("b_id") === col("xb.doc_id"))
-      .select($"a_id", $"b_id", (est / lit(8.0)).as("est_jaccard"))
+      .select(col("a_id"), col("b_id"), (est / lit(8.0)).as("est_jaccard"))
   }
 
   private val sigSqlCols: Seq[String] = (0 until 8).map { j =>
@@ -451,7 +453,7 @@ object TextDedup {
     // ---- minhash LSH near-dup candidate pairs ----------------------------
     "d3_minhash_lsh_pairs" -> ((s, dir) => {
       import s.implicits._
-      lshPairs(s, dir).orderBy($"a_id", $"b_id")
+      lshPairs(corpusSig(s, dir)).orderBy($"a_id", $"b_id")
     }),
 
     // ---- hot-bucket cap accounting as data -------------------------------
@@ -598,17 +600,20 @@ object TextDedup {
     // packing. Mirrors what z1 does for the reference lifecycle: every
     // individually-green stage is here re-verified THROUGH its seams — a
     // survivor-set error in any stage shifts every later bin assignment.
-    // 100 TB shape: each stage is the already-audited shape of its
-    // standalone query (broadcast semi-joins for the tiny eval-gram and
-    // drop-id sets, guarded LSH band join, distributed prefix-sum pack).
+    // 100 TB shape: ONE corpus checkpoint (signatures, token counts, the
+    // quality verdict and the tokens the decontamination stage reads) feeds
+    // every stage; the guarded LSH band join; the tiny eval-gram set is a
+    // broadcast semi-join; the near-dup drop ids and the contaminated ids
+    // are removed by two id-only anti-joins (keyed shuffles of ids, never
+    // broadcast — at corpus scale both id sets are large); distributed
+    // prefix-sum pack.
     "z3_curate_e2e" -> ((s, dir) => {
       import s.implicits._
-      val base = t(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
       // stage 0: hold out the eval slice (doc_id % 50 == 0); its distinct
       // 8-grams are the contamination reference
-      val corpus = base.filter($"doc_id" % 50 =!= 0)
-      // stage 1: Gopher quality rules (t7's exact conjunction)
+      val isEval = $"doc_id" % 50 === 0
+      // stage 1: Gopher quality rules (t7's exact conjunction) on the
+      // non-eval corpus
       val tk = toks($"text")
       val nw = size(tk).cast("long")
       val alpha = length(regexp_replace($"text", " ", "")).cast("long")
@@ -616,32 +621,33 @@ object TextDedup {
         length(regexp_replace($"text", "#", ""))).cast("long")
       val nStop = TextOps.hitCount(tk, TextOps.langWords.flatMap(_._2))
         .cast("long")
-      val qual = corpus
-        .select($"doc_id", tk.as("tokens"), nw.as("nw"), alpha.as("alpha"),
-          nHash.as("nhash"), nStop.as("nstop"))
-        .filter($"nw" >= 50L && $"nw" <= 100000L &&
-          $"alpha" >= $"nw" * 3L && $"alpha" <= $"nw" * 10L &&
-          $"nhash" * 10L <= $"nw" && $"nstop" >= 2L)
-        .localCheckpoint() // feeds the pair-restriction semi-joins AND the
-                           // decontamination/pack tail (fan-out rule)
+      val pass = !isEval && nw >= 50L && nw <= 100000L &&
+        alpha >= nw * 3L && alpha <= nw * 10L && nHash * 10L <= nw &&
+        nStop >= 2L
+      // tokens only where a later stage reads them: quality survivors
+      // (decontamination) and the eval slice (the reference grams)
+      val docs = corpusSig(s, dir, nw.as("nw"), pass.as("q"),
+        when(pass || isEval, tk).as("tokens"))
+      val qual = docs.filter($"q")
       // stage 2: near-dup drop — LSH pairs at est ≥ 0.5 restricted to
       // quality survivors; the non-minimal id of each pair is dropped
       // (greedy-by-id, the standard pairwise prune; closure-based variant
       // is d10). Pair generation is per-pair independent, so restricting
       // the full-corpus pair set ≡ pairing the subset.
-      val dropNd = lshPairs(s, dir).filter($"est_jaccard" >= 0.5)
+      val dropNd = lshPairs(docs).filter($"est_jaccard" >= 0.5)
         .join(qual.select($"doc_id".as("a_id")), Seq("a_id"), "left_semi")
         .join(qual.select($"doc_id".as("b_id")), Seq("b_id"), "left_semi")
         .select($"b_id".as("doc_id")).distinct()
-      val nd = qual.join(dropNd, Seq("doc_id"), "left_anti")
       // stage 3: decontamination — drop survivors whose distinct-8-gram
       // overlap with the eval slice exceeds 20% (integer comparison:
-      // 5·hits > grams; no float threshold to disagree on)
-      val evalG = base.filter($"doc_id" % 50 === 0)
+      // 5·hits > grams; no float threshold to disagree on). The test is
+      // per doc, so it commutes with the near-dup anti-join: it runs on
+      // every quality survivor, and no token array crosses a shuffle
+      val evalG = docs.filter(isEval)
         .select(explode(array_distinct(
-          TextOps.wordNgrams(toks($"text"), 8))).as("g"))
+          TextOps.wordNgrams($"tokens", 8))).as("g"))
         .distinct()
-      val contaminated = nd
+      val contaminated = qual
         .filter(size($"tokens") >= 8)
         .select($"doc_id", array_distinct(
           TextOps.wordNgrams($"tokens", 8)).as("gs"))
@@ -650,8 +656,9 @@ object TextDedup {
         .groupBy($"doc_id", $"n_gram").agg(count(lit(1)).as("n_hit"))
         .filter($"n_hit" * 5L > $"n_gram")
         .select($"doc_id")
-      val keep = nd.join(contaminated, Seq("doc_id"), "left_anti")
-        .select($"doc_id", $"nw".as("n_tok"))
+      val keep = qual.select($"doc_id", $"nw".as("n_tok"))
+        .join(dropNd, Seq("doc_id"), "left_anti")
+        .join(contaminated, Seq("doc_id"), "left_anti")
       // stage 4: token-budget packing over the survivors (distributed
       // prefix sum — never a one-task window)
       graft.ops.Ranks.globalCumSum(keep, Seq($"doc_id"), $"n_tok", "cum_tok")
@@ -677,7 +684,7 @@ object TextDedup {
       // projection under the sort runs TWICE (measured 2× on this stage —
       // PLANS.md round-5). Column pruning still pushes only the prefix
       // columns through the exchange; the DP runs once, post-shuffle.
-      lshPairs(s, dir).filter($"est_jaccard" >= 0.5)
+      lshPairs(corpusSig(s, dir)).filter($"est_jaccard" >= 0.5)
         .join(txt.select($"doc_id".as("a_id"), $"pfx".as("a_pfx")),
           Seq("a_id"))
         .join(txt.select($"doc_id".as("b_id"), $"pfx".as("b_pfx")),
@@ -747,17 +754,12 @@ object TextDedup {
 
     "d6_ngram_jaccard" -> ((s, dir) => {
       import s.implicits._
-      // repartition (single-split source) + localCheckpoint (feeds BOTH
-      // broadcast build sides) — see PLANS.md fan-out rule
-      val grams = t(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select($"doc_id",
-          array_distinct(TextOps.wordNgrams(toks($"text"), NGRAM_N)).as("g"))
-        .localCheckpoint()
+      // one corpus checkpoint feeds the LSH pass AND both gram sides
+      val grams = corpusSig(s, dir, gramSet)
       // one projection computes the intersection size, then a scalar-only
       // checkpoint: CollapseProject would otherwise re-inline the expensive
       // array_intersect into every reference (2x per row)
-      val sized = lshPairs(s, dir)
+      val sized = lshPairs(grams)
         .filter($"est_jaccard" >= 0.5)
         .join(grams.as("ga"), col("a_id") === col("ga.doc_id"))
         .join(grams.as("gb"), col("b_id") === col("gb.doc_id"))
@@ -844,12 +846,8 @@ object TextDedup {
 
     "d13_containment" -> ((s, dir) => {
       import s.implicits._
-      val grams = t(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select($"doc_id",
-          array_distinct(TextOps.wordNgrams(toks($"text"), NGRAM_N)).as("g"))
-        .localCheckpoint()
-      val sized = lshPairs(s, dir)
+      val grams = corpusSig(s, dir, gramSet)
+      val sized = lshPairs(grams)
         .filter($"est_jaccard" >= 0.25)
         .join(grams.as("ga"), col("a_id") === col("ga.doc_id"))
         .join(grams.as("gb"), col("b_id") === col("gb.doc_id"))
@@ -876,12 +874,8 @@ object TextDedup {
     // frame, band-blocked candidates, per-pair projections only.
     "d17_minhash_calibration" -> ((s, dir) => {
       import s.implicits._
-      val grams = t(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select($"doc_id",
-          array_distinct(TextOps.wordNgrams(toks($"text"), NGRAM_N)).as("g"))
-        .localCheckpoint()
-      val sized = lshPairs(s, dir)
+      val grams = corpusSig(s, dir, gramSet)
+      val sized = lshPairs(grams)
         .join(grams.as("ga"), col("a_id") === col("ga.doc_id"))
         .join(grams.as("gb"), col("b_id") === col("gb.doc_id"))
         .select(
@@ -1108,12 +1102,14 @@ object TextDedup {
   }
 
   /** CTE body producing `pairs64` — the d9 pair set, shared by the d9 and
-    * d7 oracles (composed under WITH / WITH RECURSIVE). */
-  private def sim64PairsCte: String = {
-    val sim = graft.expressions.Simhash64Expr.simhash64Sql("tokens")
-    s"""sim AS (
-       |  SELECT doc_id, CAST($sim AS BIGINT) AS sim
-       |  FROM (SELECT doc_id, $tokensSqlExpr AS tokens FROM documents)),
+    * d7 oracles (composed under WITH / WITH RECURSIVE). `sim` is
+    * MATERIALIZED (here and in d5): DuckDB otherwise inlines it into every
+    * reference (both chunk sides, each `pairs64` reader of the recursive
+    * closure) and re-hashes the corpus each time. */
+  private def sim64PairsCte: String =
+    s"""sim AS MATERIALIZED (
+       |  SELECT doc_id, CAST($sim64Sql AS BIGINT) AS sim
+       |  FROM $digestsSql),
        |chunks AS (
        |  SELECT doc_id, sim, c AS chunk, (sim >> (8 * c)) & 255 AS cv
        |  FROM sim, (VALUES (0), (1), (2), (3), (4), (5), (6), (7)) t(c)),
@@ -1123,7 +1119,21 @@ object TextDedup {
        |  FROM chunks x JOIN chunks y
        |    ON x.chunk = y.chunk AND x.cv = y.cv AND x.doc_id < y.doc_id
        |  WHERE bit_count(xor(x.sim, y.sim)) <= 7)""".stripMargin
-  }
+
+  /** `documents` as (doc_id, dg): each token's md5 hex digest, computed
+    * once here — the simhash bit terms below read `dg` 16 or 64 times. */
+  private val digestsSql: String =
+    s"""(SELECT doc_id, list_transform(tokens, t -> md5(t)) AS dg
+       |  FROM (SELECT doc_id, $tokensSqlExpr AS tokens FROM documents))""".stripMargin
+
+  private val sim64Sql = graft.expressions.Simhash64Expr.simhash64Sql("dg")
+
+  /** The d4/d5 16-bit simhash over `dg` (TextOps.simhash16's bit order). */
+  private val sim16Sql: String = (1 to 16).map { j =>
+    s"""(CASE WHEN list_sum(list_transform(dg,
+       |  d -> CASE WHEN substr(d, $j, 1) >= '8' THEN 1 ELSE -1 END))
+       |  > 0 THEN ${1L << (j - 1)} ELSE 0 END)""".stripMargin
+  }.mkString("(", " + ", ")")
 
   def oracles: Map[String, String] = {
     val langCases = TextOps.langWords.map { case (l, ws) =>
@@ -1307,26 +1317,15 @@ object TextDedup {
            |  max(bsz) AS max_bucket
            |FROM bs""".stripMargin,
 
-      "d4_simhash" -> {
-        val bits = (1 to 16).map { j =>
-          s"""(CASE WHEN list_sum(list_transform(tokens,
-             |  t -> CASE WHEN substr(md5(t), $j, 1) >= '8' THEN 1 ELSE -1 END))
-             |  > 0 THEN ${1L << (j - 1)} ELSE 0 END)""".stripMargin
-        }.mkString("(", " + ", ")")
-        s"""SELECT doc_id, CAST($bits AS BIGINT) AS sim
-           |FROM (SELECT doc_id, $tokensSqlExpr AS tokens FROM documents)
-           |ORDER BY doc_id""".stripMargin
-      },
+      "d4_simhash" ->
+        s"""SELECT doc_id, CAST($sim16Sql AS BIGINT) AS sim
+           |FROM $digestsSql
+           |ORDER BY doc_id""".stripMargin,
 
-      "d5_simhash_pairs" -> {
-        val bits = (1 to 16).map { j =>
-          s"""(CASE WHEN list_sum(list_transform(tokens,
-             |  t -> CASE WHEN substr(md5(t), $j, 1) >= '8' THEN 1 ELSE -1 END))
-             |  > 0 THEN ${1L << (j - 1)} ELSE 0 END)""".stripMargin
-        }.mkString("(", " + ", ")")
-        s"""WITH sim AS (
-           |  SELECT doc_id, CAST($bits AS BIGINT) AS sim
-           |  FROM (SELECT doc_id, $tokensSqlExpr AS tokens FROM documents)),
+      "d5_simhash_pairs" ->
+        s"""WITH sim AS MATERIALIZED (
+           |  SELECT doc_id, CAST($sim16Sql AS BIGINT) AS sim
+           |  FROM $digestsSql),
            |chunks AS (
            |  SELECT doc_id, sim, c AS chunk,
            |    (sim >> (4 * c)) & 15 AS cv
@@ -1336,15 +1335,12 @@ object TextDedup {
            |FROM chunks x JOIN chunks y
            |  ON x.chunk = y.chunk AND x.cv = y.cv AND x.doc_id < y.doc_id
            |WHERE bit_count(xor(x.sim, y.sim)) <= 3
-           |ORDER BY a_id, b_id""".stripMargin
-      },
+           |ORDER BY a_id, b_id""".stripMargin,
 
-      "d8_simhash64" -> {
-        val sim = graft.expressions.Simhash64Expr.simhash64Sql("tokens")
-        s"""SELECT doc_id, CAST($sim AS BIGINT) AS sim64
-           |FROM (SELECT doc_id, $tokensSqlExpr AS tokens FROM documents)
-           |ORDER BY doc_id""".stripMargin
-      },
+      "d8_simhash64" ->
+        s"""SELECT doc_id, CAST($sim64Sql AS BIGINT) AS sim64
+           |FROM $digestsSql
+           |ORDER BY doc_id""".stripMargin,
 
       "d9_simhash64_pairs" ->
         s"""WITH $sim64PairsCte

@@ -13,6 +13,18 @@ class PlanAuditSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
+  /** `name`'s final adaptive plan after running it: a subtree execution
+    * reuses shows once, as a `ReusedExchange`, not once per reader. */
+  private def finalPlan(name: String): String = {
+    val df = SparkEntry.queries(name)(spark, dir)
+    df.collect()
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.finalPhysicalPlan.toString
+      case p => p.toString
+    }
+  }
+
   test("s9: the time-range predicate reaches the parquet scan") {
     val p = plan("s9_time_range_scan")
     assert(p.contains("PushedFilters: [IsNotNull"), p.take(2000))
@@ -231,8 +243,8 @@ class PlanAuditSpec extends SparkSpec {
     // in the standalone operator tests. Counts are exact on purpose: a
     // legitimate plan change must re-audit and re-pin.
     def pins(name: String, exchanges: Int, hashEx: Int, rddScans: Int,
-             smj: Int, bhj: Int): Unit = {
-      val p = plan(name)
+             smj: Int, bhj: Int, p0: Option[String] = None): Unit = {
+      val p = p0.getOrElse(plan(name))
       def c(tok: String) = p.linesIterator.count(_.contains(tok))
       val got = (c("Exchange "), c("Exchange hashpartitioning"),
         c("Scan ExistingRDD"), c("SortMergeJoin"), c("BroadcastHashJoin"))
@@ -241,14 +253,13 @@ class PlanAuditSpec extends SparkSpec {
           s"bhj) = $got, pinned (${(exchanges, hashEx, rddScans, smj, bhj)})" +
           s"\n${p.take(3000)}")
     }
-    // z3: the curation chain's tail spans the un-checkpointed stages —
-    // 2 SMJs per tail copy are the corpus-sized count-table joins (never
-    // broadcast by design); the BHJs are the small-side stats/threshold
-    // frames. The unexecuted plan holds the tail four times: the cumsum's
-    // rank and offsets branches, each with its own copy of the boundary
-    // subplan; executed, the boundary copy is a ReusedExchange (next test)
-    pins("z3_curate_e2e", exchanges = 105, hashEx = 46, rddScans = 56,
-      smj = 8, bhj = 49)
+    // z3, on its executed FINAL plan (the unexecuted plan lists the tail
+    // once per reader of a reused subtree — four times here): every stage
+    // reads the one corpus checkpoint; the near-dup drop and the
+    // contaminated ids leave the quality survivors by two id-only
+    // anti-joins; the boundary copy is a ReusedExchange (next test)
+    pins("z3_curate_e2e", exchanges = 23, hashEx = 9, rddScans = 5,
+      smj = 0, bhj = 9, p0 = Some(finalPlan("z3_curate_e2e")))
     // z7: survivor frames are localCheckpoint'd, so the tail is the final
     // shard/manifest stage; its rank's rank and offsets branches each
     // carry a copy of the boundary subplan (SinglePartition + broadcast

@@ -17,6 +17,9 @@
 # Compiles perfbench/ after the root build: it compiles src/main/scala
 # with its own driver, so a broken import there fails the gate here.
 #
+# Runs perfbench's curate_dedup workload once and requires its DuckDB
+# oracle check of z3 to pass ("correct": true).
+#
 # Also runs the full ScalaTest suite and appends its count to the same
 # PLANS line (the r10 verdict ask #7: the whole close is ONE
 # machine-written fact). Skip with GATE_SKIP_TESTS=1 for fast re-runs —
@@ -42,6 +45,19 @@ sbt -batch compile >/tmp/gate_all_compile.log 2>&1 || \
 echo "[gate_all] compiling perfbench..."
 (cd perfbench && sbt -batch compile) >/tmp/gate_all_perfbench_compile.log 2>&1 || \
   hard_fail "perfbench compile failed — see /tmp/gate_all_perfbench_compile.log"
+
+# z3 against its DuckDB oracle on perfbench's planted-chain corpus, whose
+# near-dup drop is far denser than the test corpora's: one short run, which
+# must report "correct": true (its last stdout line is one JSON object)
+echo "[gate_all] perfbench curate_dedup oracle run..."
+python3 perfbench/run.py --workload curate_dedup --seed 7 --seconds 1 \
+  --trace 0 >/tmp/gate_all_perfbench_curate.out \
+  2>/tmp/gate_all_perfbench_curate.log || \
+  hard_fail "perfbench curate_dedup run failed — see /tmp/gate_all_perfbench_curate.log"
+tail -1 /tmp/gate_all_perfbench_curate.out | python3 -c \
+  'import json,sys; sys.exit(0 if json.loads(sys.stdin.read()).get("correct") is True else 1)' || \
+  hard_fail "perfbench curate_dedup: not correct — see /tmp/gate_all_perfbench_curate.out"
+echo "[gate_all] perfbench curate_dedup: correct"
 
 TESTLINE="tests=skipped"
 if [ "${GATE_SKIP_TESTS:-0}" != "1" ]; then

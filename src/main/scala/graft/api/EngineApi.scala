@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ingest.Ingest
-import graft.inject.AnomalySetting
+import graft.inject.{AnomalySetting, Injector}
 import graft.jobs.{BatchJob, RunSummary, XaiConfig}
 import graft.ml._
 
@@ -41,9 +41,9 @@ class EngineApi(spark: SparkSession, datasetDir: String = "/tmp/graft_datasets")
       case supervised         => SupervisedDetector(features, supervised)
     }
 
-  /** get-injection-methods (`engine.py:347`). */
-  def getInjectionMethods: Seq[String] =
-    Seq("spike", "lowered", "step", "offline", "custom")
+  /** get-injection-methods (`engine.py:347`): exactly the methods
+    * [[runBatch]] injects (`Injector.methods`). */
+  def getInjectionMethods: Seq[String] = Injector.methods
 
   /** get-xai-methods (`engine.py:339`): exactly the methods [[runBatch]]
     * runs (`BatchJob.xaiMethods`). */

@@ -6,16 +6,17 @@ import graft.Tables.t
 import graft.functions.Det
 import graft.inject.{AnomalySetting, Injector}
 
-/** Anomaly-injection operators I1–I6 (SURVEY §2.8) over the `events` table,
-  * each with an exact DuckDB oracle that reproduces the keyed-LCG row
-  * selection ([[Det.fracSql]]) and the method formula bit-for-bit. Every
-  * injected value is a per-row arithmetic function of (value, two LCG
-  * draws, selected-slice stats), so the only cross-engine risk is the
-  * selected-slice mean (double sum order); outputs are rounded to 4 dp.
+/** Anomaly-injection operators I1–I6, I10 and I11 (SURVEY §2.8) over the
+  * `events` table, each with an exact DuckDB oracle that reproduces the
+  * keyed-LCG row selection ([[Det.fracSql]]) and the method formula
+  * bit-for-bit. Every injected value is a per-row arithmetic function of
+  * (value, two LCG draws, selected-slice stats), so the only cross-engine
+  * risk is the selected-slice mean (double sum order); outputs are rounded
+  * to 4 dp.
   *
   * The whole operator is one codegen'd projection — over a broadcast 1-row
-  * stats frame for the methods that read stats (lowered, step) — no
-  * shuffle, linear at any scale.
+  * stats frame for the methods that read stats (lowered, step, drift,
+  * seasonal) — no shuffle, linear at any scale.
   */
 object Inject {
 
@@ -29,8 +30,6 @@ object Inject {
   private val customW  = (1706140800L, 1706227200L) // Jan 25 → 26
   private val driftW   = (1705449600L, 1705622400L) // Jan 17 → 19
   private val seasW    = (1705104000L, 1705276800L) // Jan 13 → 15
-  /** i11 triangle period: daily. */
-  private val SeasPeriodS = 86400L
 
   private def setting(typ: String, w: (Long, Long), pct: Double,
                       mag: Double = 2.0): AnomalySetting =
@@ -77,30 +76,16 @@ object Inject {
         setting("spike", spikeW, pct = 50.0, mag = 3.0),
         setting("step", stepW, pct = 100.0, mag = 2.0))),
 
-    // I11: periodic triangle-wave load pattern (Injector.injectSeasonal)
-    // — the seasonal signal neither step nor drift can express; the
-    // triangle keeps the whole factor rational (no libm sin in a gate)
-    "i11_inject_seasonal" -> ((s, dir) => {
-      import s.implicits._
-      val ev = t(s, dir, "events").select($"event_id", $"ts", $"value")
-      Injector.injectSeasonal(ev, "event_id", "ts",
-          setting("seasonal", seasW, pct = 100.0, mag = 2.0), SeasPeriodS)
-        .select($"event_id", round($"value", 4).as("value_inj"),
-          $"injected_anomaly", $"label")
-        .orderBy($"event_id")
-    }),
-
-    // I10: linear drift ramp (Injector.injectDrift) — the gradual
-    // concept-drift signal the step method cannot express
-    "i10_inject_drift" -> ((s, dir) => {
-      import s.implicits._
-      val ev = t(s, dir, "events").select($"event_id", $"ts", $"value")
-      Injector.injectDrift(ev, "event_id", "ts",
-          setting("drift", driftW, pct = 100.0, mag = 2.0))
-        .select($"event_id", round($"value", 4).as("value_inj"),
-          $"injected_anomaly", $"label")
-        .orderBy($"event_id")
-    }),
+    // I11: periodic triangle-wave load pattern, period
+    // Injector.SeasPeriodS — the seasonal signal neither step nor drift
+    // can express; the triangle keeps the whole factor rational (no libm
+    // sin in a gate)
+    "i11_inject_seasonal" -> ((s, dir) =>
+      run(s, dir, setting("seasonal", seasW, pct = 100.0, mag = 2.0))),
+    // I10: linear drift ramp — the gradual concept-drift signal the step
+    // method cannot express
+    "i10_inject_drift" -> ((s, dir) =>
+      run(s, dir, setting("drift", driftW, pct = 100.0, mag = 2.0))),
 
     // Full ingest pipeline: normalize (stable rank-derived ids) → inject.
     // The oracle recomputes the id AS PURE SQL (row_number over the content
@@ -145,8 +130,8 @@ object Inject {
 
     val seasSel = selSql(seasW, 100.0)
     val seasMean = s"(SELECT avg(value) FILTER (WHERE $seasSel) FROM events)"
-    val seasTri = s"(1.0 - abs(2.0 * (CAST((($es - ${seasW._1}) % $SeasPeriodS)" +
-      s" AS DOUBLE) / ${SeasPeriodS.toDouble}) - 1.0))"
+    val seasTri = s"(1.0 - abs(2.0 * (CAST((($es - ${seasW._1}) % ${Injector.SeasPeriodS})" +
+      s" AS DOUBLE) / ${Injector.SeasPeriodS.toDouble}) - 1.0))"
     val seasVal =
       s"CASE WHEN $seasSel THEN value + $seasMean * 2.0 * $seasTri ELSE value END"
 

@@ -351,7 +351,8 @@ object Stats {
     // (q·2 vs med·2), run/side counts are exact BIGINTs, and the moment
     // formula is scalar IEEE with products in DOUBLES (the a38 rule).
     // Users entirely on one side are dropped (σ undefined — stated
-    // contract). 100 TB shape: ONE user_id shuffle shared by the median
+    // contract); σ_R = 0 (n₁ = n₂ = 1) reads z NULL, as SQL's division by
+    // zero does. 100 TB shape: ONE user_id shuffle shared by the median
     // agg, the lag window and the run agg.
     "a47_runs_test" -> ((s, dir) => {
       import s.implicits._
@@ -380,7 +381,7 @@ object Stats {
           (lit(2.0) * d($"n1") * d($"n2") - nD) /
           (nD * nD * (nD - lit(1.0)))))
         .select($"user_id", $"n1", $"n2", $"runs",
-          round((d($"runs") - $"mu") / $"sig", 4).as("z"))
+          round(try_divide(d($"runs") - $"mu", $"sig"), 4).as("z"))
         .orderBy($"user_id")
     }),
 

@@ -22,15 +22,22 @@ class EngineApiSpec extends SparkSpec {
   test("13-verb surface: run-batch → discovery → get-data → cancel") {
     val api = new EngineApi(spark, Files.createTempDirectory("graft_ds").toString)
     assert(api.getModels.contains("decision_tree"))
-    assert(api.getInjectionMethods == Seq("spike", "lowered", "step", "offline", "custom"))
+    assert(api.getInjectionMethods ==
+      Seq("spike", "lowered", "step", "offline", "custom", "drift", "seasonal"))
     assert(api.getDatasetColumns(csvPath) == Seq("t", "x", "y", "lbl"))
 
     val imported = api.importDataset(csvPath)
     assert(api.getDatasets.nonEmpty)
 
+    // one setting per advertised method, each on its own 3-row window
+    val injections = api.getInjectionMethods.zipWithIndex.map { case (m, k) =>
+      AnomalySetting(m, 1704067200L + 60 * (50 + 80 * k), durationSec = 180,
+        columns = Seq("x"))
+    }
     val summary = api.runBatch("apitest", imported, "t", Some("lbl"),
-      "decision_tree", Seq("x", "y"))
+      "decision_tree", Seq("x", "y"), injections)
     assert(summary.status == "completed" && summary.rows == 600)
+    assert(summary.injectedRows > 0, summary.toString)
     assert(summary.metricsAll("accuracy") > 0.9)
 
     assert(api.getAllJobs.contains("job_batch_apitest"))

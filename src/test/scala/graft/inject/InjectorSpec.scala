@@ -143,7 +143,7 @@ class InjectorSpec extends SparkSpec {
   }
 
   private val settingGen: Gen[AnomalySetting] = for {
-    typ <- Gen.oneOf("spike", "lowered", "step", "offline", "custom")
+    typ <- Gen.oneOf(Injector.methods)
     // empty (duration 0), partial, whole-frame and out-of-frame spans
     (start, dur) <- Gen.frequency(
       1 -> Gen.zip(Gen.choose(-5L, 50L), Gen.const(0L)),
@@ -154,16 +154,18 @@ class InjectorSpec extends SparkSpec {
     mag <- Gen.oneOf(Gen.const(0.0), Gen.choose(-3.0, 8.0))
     cols <- Gen.oneOf(Seq("v"), Seq("w"), Seq("v", "w"), Seq("w", "v"))
     seed <- Gen.choose(0L, 1000000L)
-  } yield AnomalySetting(typ, propStart + start, dur, mag, pct, cols, seed)
+    // a drift span must not be empty (the table test pins the throw)
+  } yield AnomalySetting(typ, propStart + start,
+    if (typ == "drift") dur max 1L else dur, mag, pct, cols, seed)
 
-  test("inject ≡ injectStreaming with staticStats, bit for bit, over all " +
-      "five methods; only lowered/step plan the stats broadcast") {
+  test("inject ≡ injectStreaming with staticStats, bit for bit, over every " +
+      "table method; a stats broadcast iff usesStats") {
     checkProp(30, settingGen) { s =>
       val out = Injector.inject(propBase, "id", "ts", s)
       val broadcasts = out.queryExecution.executedPlan.toString
         .contains("BroadcastExchange")
       val same = bitsById(out) == bitsById(viaStreaming(propBase, s))
-      val ok = same && broadcasts == Set("lowered", "step")(s.anomalyType)
+      val ok = same && broadcasts == Injector.usesStats(s.anomalyType)
       if (!ok) println(s"failing setting $s: equal=$same broadcast=$broadcasts")
       ok
     }
@@ -176,6 +178,17 @@ class InjectorSpec extends SparkSpec {
       bitsById(Injector.injectAll(propBase, "id", "ts", Seq(s1, s2))) ==
         bitsById(fold)
     }
+  }
+
+  test("the table: seven methods, the stats readers are lowered, step, " +
+      "drift and seasonal; a zero-length drift span throws on both paths") {
+    assert(Injector.methods ==
+      Seq("spike", "lowered", "step", "offline", "custom", "drift", "seasonal"))
+    assert(Injector.methods.filter(Injector.usesStats) ==
+      Seq("lowered", "step", "drift", "seasonal"))
+    val flat = span.copy(anomalyType = "drift", durationSec = 0L)
+    intercept[IllegalArgumentException](Injector.inject(base, "id", "ts", flat))
+    intercept[IllegalArgumentException](viaStreaming(base, flat))
   }
 
   test("an unknown method throws when the frame is built") {

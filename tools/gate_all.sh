@@ -18,7 +18,9 @@
 # with its own driver, so a broken import there fails the gate here.
 #
 # Runs perfbench's curate_dedup workload once and requires its DuckDB
-# oracle check of z3 to pass ("correct": true).
+# oracle check of z3 to pass ("correct": true). Then runs exact_job once
+# traced, which requires the streaming twin's flags to equal the batch
+# scoring of the same injected rows ("correct": true).
 #
 # Also runs the full ScalaTest suite and appends its count to the same
 # PLANS line (the r10 verdict ask #7: the whole close is ONE
@@ -58,6 +60,20 @@ tail -1 /tmp/gate_all_perfbench_curate.out | python3 -c \
   'import json,sys; sys.exit(0 if json.loads(sys.stdin.read()).get("correct") is True else 1)' || \
   hard_fail "perfbench curate_dedup: not correct — see /tmp/gate_all_perfbench_curate.out"
 echo "[gate_all] perfbench curate_dedup: correct"
+
+# exact_job's traced run adds the streaming twin, whose job_stream table
+# must hold the same flags, scores and labels as the batch scoring of the
+# same injected rows: the one check of StreamJob.injectStream against
+# Injector.inject on the job's own path
+echo "[gate_all] perfbench exact_job traced run..."
+python3 perfbench/run.py --workload exact_job --seed 7 --seconds 1 \
+  --trace 1 >/tmp/gate_all_perfbench_exact.out \
+  2>/tmp/gate_all_perfbench_exact.log || \
+  hard_fail "perfbench exact_job run failed — see /tmp/gate_all_perfbench_exact.log"
+tail -1 /tmp/gate_all_perfbench_exact.out | python3 -c \
+  'import json,sys; sys.exit(0 if json.loads(sys.stdin.read()).get("correct") is True else 1)' || \
+  hard_fail "perfbench exact_job: not correct — see /tmp/gate_all_perfbench_exact.out"
+echo "[gate_all] perfbench exact_job: correct"
 
 TESTLINE="tests=skipped"
 if [ "${GATE_SKIP_TESTS:-0}" != "1" ]; then

@@ -76,14 +76,10 @@ object Inject {
         setting("spike", spikeW, pct = 50.0, mag = 3.0),
         setting("step", stepW, pct = 100.0, mag = 2.0))),
 
-    // I11: periodic triangle-wave load pattern, period
-    // Injector.SeasPeriodS — the seasonal signal neither step nor drift
-    // can express; the triangle keeps the whole factor rational (no libm
-    // sin in a gate)
+    // I11: periodic triangle-wave load pattern (period Injector.SeasPeriodS)
     "i11_inject_seasonal" -> ((s, dir) =>
       run(s, dir, setting("seasonal", seasW, pct = 100.0, mag = 2.0))),
-    // I10: linear drift ramp — the gradual concept-drift signal the step
-    // method cannot express
+    // I10: linear drift ramp
     "i10_inject_drift" -> ((s, dir) =>
       run(s, dir, setting("drift", driftW, pct = 100.0, mag = 2.0))),
 

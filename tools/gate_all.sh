@@ -61,10 +61,10 @@ tail -1 /tmp/gate_all_perfbench_curate.out | python3 -c \
   hard_fail "perfbench curate_dedup: not correct — see /tmp/gate_all_perfbench_curate.out"
 echo "[gate_all] perfbench curate_dedup: correct"
 
-# exact_job's traced run adds the streaming twin, whose job_stream table
-# must hold the same flags, scores and labels as the batch scoring of the
-# same injected rows: the one check of StreamJob.injectStream against
-# Injector.inject on the job's own path
+# exact_job's traced run adds the streaming twin: its job_stream table,
+# written by StreamJob.detectSink over StreamJob.injectStream, must hold the
+# same flags, scores and labels as the batch scoring of the same injected
+# rows
 echo "[gate_all] perfbench exact_job traced run..."
 python3 perfbench/run.py --workload exact_job --seed 7 --seconds 1 \
   --trace 1 >/tmp/gate_all_perfbench_exact.out \
